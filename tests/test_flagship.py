@@ -76,3 +76,32 @@ def test_mega_conversation_skew(spark):
     golden = reference_features(pdf)
     got = _run_spark(spark, pdf, partitions=8)
     assert_frames_match(got, golden, KEYS, float_cols=FLOATS)
+
+
+def test_n_tokens_whitespace_edge_cases(spark):
+    """``n_tokens`` counts the spaces of the normalized text instead of
+    splitting it; blank and oddly spaced texts must still match."""
+    texts = [
+        "",
+        "   ",
+        "\t\r\n",
+        "word",
+        "  lead and trail  ",
+        "a\t\tb\r\n\nc",
+        " \n one \t",
+        "x  y   z",
+    ]
+    pdf = pd.DataFrame(
+        {
+            "conv_id": "c0",
+            "turn_idx": range(len(texts)),
+            "role": "user",
+            "text": texts,
+            "tool": None,
+            "ts": pd.date_range("2024-01-01", periods=len(texts), freq="min"),
+        }
+    )
+    got = _run_spark(spark, pdf)
+    want = reference_features(pdf)
+    assert got.sort_values("turn_idx")["n_tokens"].tolist() == [0, 0, 0, 1, 3, 3, 1, 3]
+    assert_frames_match(got, want, KEYS, float_cols=FLOATS)

@@ -35,13 +35,28 @@ def tx(spark):
 
 def test_flagship_single_exchange_and_sort(spark, tx):
     """Every window feature (position, lags, session, ffill, running)
-    must ride ONE hash exchange + ONE sort on (conv_id, ts, turn_idx)."""
+    must ride ONE hash exchange + ONE sort on (conv_id, ts, turn_idx),
+    in two Window operators: everything else, then the session running
+    sum that reads the gap."""
     out = build_features(tx, FeatureSpec())
     plan = plan_of(out)
     n_exchange = len(re.findall(r"Exchange hashpartitioning", plan))
     n_sort = len(re.findall(r"\bSort \[", plan))
+    n_window = len(re.findall(r"\bWindow \[", plan))
     assert n_exchange == 1, f"expected 1 exchange, got {n_exchange}:\n{plan[:4000]}"
     assert n_sort == 1, f"expected 1 sort, got {n_sort}:\n{plan[:4000]}"
+    assert n_window == 2, f"expected 2 Window operators, got {n_window}:\n{plan[:6000]}"
+
+
+@pytest.mark.parametrize("keep_gap", [False, True])
+def test_session_id_two_windows(spark, tx, keep_gap):
+    """The session running sum reads the gap column; the gap's lag must
+    not be computed a second time in a Window of its own."""
+    from turboxsl_spark.operators.sessionize import with_session_id
+
+    plan = plan_of(with_session_id(tx, keep_gap=keep_gap))
+    assert len(re.findall(r"\bWindow \[", plan)) == 2, plan[:4000]
+    assert len(re.findall(r"\blag\(", plan)) == 1, plan[:4000]
 
 
 def test_flagship_no_python_udf(spark, tx):

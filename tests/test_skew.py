@@ -4,8 +4,10 @@ reference's pool-size-independent goldens)."""
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 from pyspark.sql import Window, functions as F
+from pyspark.sql import types as T
 
 from tests.conftest import assert_frames_match
 from turboxsl_spark.operators.sessionize import with_session_id
@@ -25,7 +27,16 @@ def df(spark):
     # mega_frac high so several conversations are >> chunk size
     pdf = gen_transcripts_pdf(n_convs=25, seed=3, mega_frac=0.1)
     assert pdf.groupby("conv_id").size().max() >= 1000
-    return spark.createDataFrame(pdf, schema=TRANSCRIPT_SCHEMA).cache()
+    # a NULL-key copy of the largest conversation: the plain window
+    # groups NULL keys into one partition, so the salted merge must too
+    largest = pdf["conv_id"].value_counts().idxmax()
+    null_key = pdf[pdf["conv_id"] == largest].assign(conv_id=None)
+    pdf = pd.concat([pdf, null_key], ignore_index=True)
+    schema = T.StructType(
+        [f if f.name != "conv_id" else T.StructField(f.name, f.dataType, True)
+         for f in TRANSCRIPT_SCHEMA]
+    )
+    return spark.createDataFrame(pdf, schema=schema).cache()
 
 
 @pytest.mark.parametrize("chunk", [64, 1000])

@@ -49,12 +49,14 @@ class Engine:
     def apply_features(self, df: DataFrame, **feature_args: dict) -> DataFrame:
         """Apply every registered feature: ``name`` becomes a column,
         built from the argument columns in ``feature_args[name]``
-        (default: the ``text_norm`` column of the flagship surface)."""
+        (default: the ``text_norm`` column of the flagship surface).
+        All features are added in one projection, so they read only
+        ``df``'s columns, not each other."""
+        cols = {}
         for name, fn in self._features.items():
             args = feature_args.get(name, ["text_norm"])
-            cols = [F.col(a) if isinstance(a, str) else a for a in args]
-            df = df.withColumn(name, fn(*cols))
-        return df
+            cols[name] = fn(*[F.col(a) if isinstance(a, str) else a for a in args])
+        return df.withColumns(cols)
 
     def build_features(self, df: DataFrame, spec=None) -> DataFrame:
         from turboxsl_spark.plans.featurespec import FeatureSpec, build_features

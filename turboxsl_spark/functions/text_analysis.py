@@ -25,8 +25,18 @@ _LANG_STOPWORDS = {
 def token_count(c: Column | str) -> Column:
     """Whitespace token count (0 for empty/blank)."""
     c = F.col(c) if isinstance(c, str) else c
-    n = F.trim(F.regexp_replace(c, r"\s+", " "))
-    return F.when(F.length(n) == 0, F.lit(0)).otherwise(F.size(F.split(n, " ")))
+    return normalized_token_count(F.trim(F.regexp_replace(c, r"\s+", " ")))
+
+
+def normalized_token_count(n: Column | str) -> Column:
+    """Token count of trimmed, single-spaced text (``normalize_space``
+    output): spaces + 1, 0 when empty. Equals ``size(split(n, ' '))``
+    without building a per-row array."""
+    n = F.col(n) if isinstance(n, str) else n
+    chars = F.length(n)
+    return F.when(chars == 0, F.lit(0)).otherwise(
+        chars - F.length(F.replace(n, F.lit(" "), F.lit(""))) + 1
+    )
 
 
 def bpe_ish_token_count(c: Column | str) -> Column:

@@ -1,20 +1,44 @@
 """Gap-based sessionization.
 
-Classic two-window composition (public Spark idiom): flag rows whose
-gap from the previous turn exceeds the timeout, then a running sum of
-flags over rows (-inf, 0] yields a 0-based session id per conversation.
-Both windows share the one conv sort, so the plan has a single Sort +
-Exchange (verify with ``.explain("formatted")``).
+Classic two-window composition (public Spark idiom): the gap from the
+previous turn, then a running sum over rows (-inf, 0] of "gap exceeds
+the timeout" flags yields a 0-based session id per conversation. The
+running sum reads the gap column by name, so it depends on the lag: the
+plan has one exchange, one sort and two ``Window`` operators, the lag's
+and the sum's (pinned in tests/test_plans.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, WindowSpec
+from pyspark.sql import Column, DataFrame, WindowSpec
 from pyspark.sql import functions as F
 
-from turboxsl_spark.operators.windows import conv_window
+from turboxsl_spark.operators.windows import conv_window, running_frame
 
 DEFAULT_TIMEOUT_S = 1800
+
+
+def gap_seconds_col(w: WindowSpec | None = None, ts_col: str = "ts") -> Column:
+    """Seconds since the previous turn; NULL on a conversation's first.
+
+    Integer-microsecond subtraction, then one division: bit-exact vs the
+    pandas reference (double epoch-seconds subtraction is not). The lag
+    reads the raw column, so no derived column is computed ahead of the
+    window's exchange and shuffled with the rows.
+    """
+    ts = F.col(ts_col)
+    prev = F.lag(ts, 1).over(w or conv_window())
+    gap_us = F.unix_micros(ts.cast("timestamp")) - F.unix_micros(prev.cast("timestamp"))
+    return gap_us.cast("double") / F.lit(1e6)
+
+
+def session_id_col(
+    gap_col: str, timeout_s: int = DEFAULT_TIMEOUT_S, w: WindowSpec | None = None
+) -> Column:
+    """0-based session id from the gap column named ``gap_col``; a new
+    session starts when gap > timeout (a NULL gap starts none)."""
+    is_new = F.when(F.col(gap_col) > F.lit(float(timeout_s)), 1).otherwise(0)
+    return F.sum(is_new).over(running_frame(w)).cast("int")
 
 
 def with_session_id(
@@ -28,17 +52,9 @@ def with_session_id(
     """0-based session id; a new session starts when gap > timeout.
 
     The first turn of a conversation (gap undefined) starts session 0.
+    ``keep_gap`` also keeps the gap as ``gap_s``.
     """
-    w = w or conv_window()
-    # integer-microsecond subtraction, then one division: bit-exact vs the
-    # pandas reference (double epoch-seconds subtraction is not)
-    micros = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    gap = ((micros - F.lag(micros, 1).over(w)).cast("double")) / F.lit(1e6)
-    is_new = F.when(gap > F.lit(float(timeout_s)), 1).otherwise(0)
-    df = df.withColumn("_gap_s", gap).withColumn("_new_sess", is_new)
-    run = w.rowsBetween(Window.unboundedPreceding, 0)
-    df = df.withColumn(out, F.sum("_new_sess").over(run).cast("int"))
-    drop = ["_new_sess"] if keep_gap else ["_new_sess", "_gap_s"]
-    if keep_gap:
-        df = df.withColumnRenamed("_gap_s", "gap_s")
-    return df.drop(*drop)
+    gap = "gap_s" if keep_gap else "_gap_s"
+    df = df.withColumn(gap, gap_seconds_col(w, ts_col))
+    df = df.withColumn(out, session_id_col(gap, timeout_s, w))
+    return df if keep_gap else df.drop(gap)

@@ -32,6 +32,18 @@ def _salted(df: DataFrame, ord_col: str, chunk: int) -> DataFrame:
     return df.withColumn("_salt", (F.col(ord_col) / chunk).cast("long"))
 
 
+def _join_carry(df: DataFrame, carry: DataFrame, key: str, col: str) -> DataFrame:
+    """Attach the per-(key, chunk) ``col`` of ``carry`` to every row.
+
+    NULL-safe equi-join: a plain inner join on ``[key, _salt]`` would
+    drop NULL-key rows, which the plain window keeps (its partitioning
+    groups NULLs), breaking salt invariance.
+    """
+    carry = carry.select(F.col(key).alias("_ck"), F.col("_salt").alias("_cs"), col)
+    cond = F.col(key).eqNullSafe(F.col("_ck")) & F.col("_salt").eqNullSafe(F.col("_cs"))
+    return df.join(carry, cond).drop("_ck", "_cs")
+
+
 def salted_cumsum(
     df: DataFrame,
     value: Column | str,
@@ -60,7 +72,7 @@ def salted_cumsum(
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     offsets = totals.withColumn("_offset", F.sum("_total").over(wo))
-    df = df.join(offsets.select(key, "_salt", "_offset"), [key, "_salt"])
+    df = _join_carry(df, offsets, key, "_offset")
     df = df.withColumn(
         out,
         F.when(F.col("_local").isNull(), F.col("_offset")).otherwise(
@@ -106,7 +118,7 @@ def salted_forward_fill(
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     carry = bounds.withColumn("_carry", F.last("_cl", ignorenulls=True).over(wb))
-    df = df.join(carry.select(key, "_salt", "_carry"), [key, "_salt"])
+    df = _join_carry(df, carry, key, "_carry")
     df = df.withColumn(out, F.coalesce("_localff", "_carry"))
     return df.drop("_salt", "_localff", "_chunk_lastnn", "_carry")
 
@@ -133,7 +145,7 @@ def salted_session_id(
     bounds = df.groupBy(key, "_salt").agg(F.max("_us").alias("_chunk_max"))
     wb = Window.partitionBy(key).orderBy("_salt")
     bounds = bounds.withColumn("_prev_chunk_max", F.lag("_chunk_max", 1).over(wb))
-    df = df.join(bounds.select(key, "_salt", "_prev_chunk_max"), [key, "_salt"])
+    df = _join_carry(df, bounds, key, "_prev_chunk_max")
     prev = F.coalesce(F.col("_prev_local"), F.col("_prev_chunk_max"))
     gap = (F.col("_us") - prev).cast("double") / F.lit(1e6)
     df = df.withColumn("_flag", F.when(gap > F.lit(float(timeout_s)), 1).otherwise(0))

@@ -8,9 +8,22 @@ the per-turn features — and ``build_features`` compiles it ONCE into a
 lazy DataFrame DAG that Catalyst optimizes (the stand-in for turboxsl's
 template precompilation + XPath memoization).
 
-All window features share ONE window spec so the physical plan sorts
-each partition once (single Exchange + Sort feeding every window
-function — verified in tests/test_plans.py).
+The plan is built as one ``withColumns`` projection per dependency
+level, each composed from the operator modules' Column builders:
+
+1. text: ``text_norm``, then ``text_len``/``n_tokens``;
+2. window level 1: ``position``, the lags/leads, ``gap_s`` (the
+   previous turn's ``ts`` lag), the forward fills and the running
+   ``turns_so_far``/``chars_so_far``;
+3. window level 2: the ``session_id`` running sum, which reads
+   ``gap_s`` by name and so cannot share level 1's ``Window``;
+4. template and digest.
+
+Every window feature shares ONE window spec, so the physical plan has
+one Exchange, one Sort and two ``Window`` operators (one per level),
+pinned in tests/test_plans.py. Chaining one projection per feature
+instead stacks a ``Window`` per call, each buffering and copying the
+full row.
 """
 
 from __future__ import annotations
@@ -21,13 +34,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from turboxsl_spark.functions.strings import avt_template, md5_hex, normalize_space
-from turboxsl_spark.operators.sessionize import with_session_id
+from turboxsl_spark.functions.text_analysis import normalized_token_count
+from turboxsl_spark.operators.sessionize import gap_seconds_col, session_id_col
 from turboxsl_spark.operators.windows import (
     conv_window,
-    with_forward_fill,
-    with_lag_lead,
-    with_position,
-    with_running,
+    forward_fill_cols,
+    lag_lead_cols,
+    position_col,
+    running_cols,
 )
 
 DEFAULT_TEMPLATE = "[{role}#{position}] {text_norm}"
@@ -60,46 +74,47 @@ class FeatureSpec:
 def build_features(df: DataFrame, spec: FeatureSpec = FeatureSpec()) -> DataFrame:
     """Compile the spec against a transcript-shaped DataFrame."""
     w = conv_window()
+    base = [c for c in df.columns if spec.keep_text or c != "text"]
 
-    # per-turn text stage (JVM-side codegen; no shuffle)
+    # text stage (JVM-side codegen; no shuffle)
     df = df.withColumn("text_norm", normalize_space("text"))
-    df = df.withColumn("text_len", F.length("text_norm"))
-    df = df.withColumn(
-        "n_tokens",
-        F.when(F.col("text_len") == 0, 0).otherwise(
-            F.size(F.split(F.col("text_norm"), " "))
-        ),
+    df = df.withColumns(
+        {
+            "text_len": F.length("text_norm"),
+            "n_tokens": normalized_token_count("text_norm"),
+        }
     )
 
-    # window navigation stage (one sort per conversation partition)
-    df = with_position(df, w)
-    df = with_lag_lead(df, spec.lag_cols, spec.lag_offsets, w, lead=spec.leads)
-    df = with_session_id(df, spec.session_timeout_s, w, keep_gap=True)
-    df = with_forward_fill(df, spec.ffill_cols, w)
+    # window level 1: every window feature over input columns only
+    nav = {
+        "position": position_col(w),
+        **lag_lead_cols(spec.lag_cols, spec.lag_offsets, w, lead=spec.leads),
+        "gap_s": gap_seconds_col(w),
+    }
+    running = forward_fill_cols(spec.ffill_cols, w)
     if spec.extra_running:
-        df = with_running(
-            df,
-            {
-                "turns_so_far": F.count(F.lit(1)),
-                "chars_so_far": F.sum("text_len"),
-            },
-            w,
+        running |= running_cols(
+            {"turns_so_far": F.count(F.lit(1)), "chars_so_far": F.sum("text_len")}, w
         )
+    df = df.withColumns({**nav, **running})
 
-    # templated per-turn text — the byte-equal invariant column
-    df = df.withColumn(
-        "rendered",
-        avt_template(
-            spec.template,
-            role=F.col("role"),
-            position=F.col("position"),
-            text_norm=F.col("text_norm"),
-        ),
+    # window level 2: the session running sum over level 1's gap
+    df = df.withColumn("session_id", session_id_col("gap_s", spec.session_timeout_s, w))
+
+    # templated per-turn text — the byte-equal invariant column — in the
+    # output's column order (session_id right after gap_s)
+    rendered = avt_template(
+        spec.template,
+        role=F.col("role"),
+        position=F.col("position"),
+        text_norm=F.col("text_norm"),
+    )
+    df = df.select(
+        *base, "text_norm", "text_len", "n_tokens", *nav, "session_id", *running,
+        rendered.alias("rendered"),
     )
     if spec.digest:
         df = df.withColumn("digest", md5_hex("conv_id", "turn_idx", "rendered"))
-    if not spec.keep_text:
-        df = df.drop("text")
     return df
 
 
