@@ -1519,13 +1519,10 @@ def oracle_sql() -> dict[str, str]:
     d["asof_salted_fwd"] = d["asof_forward"]
     d["ann_lsh_topk"] = _ann_lsh_oracle()
     d["embedding_near_dup"] = _embedding_near_dup_oracle()
-    try:
-        # reads the sf-0.01 corpus to re-train the quantizer; if that
-        # environment assumption ever breaks, degrade this one query to
-        # rows-only instead of failing the whole gate
-        d["ann_ivf_topk"] = _ann_ivf_oracle()
-    except Exception:
-        pass
+    # reads the sf-0.01 corpus to re-train the quantizer: a missing
+    # corpus or a training error fails loudly instead of silently
+    # downgrading this query to rows-only
+    d["ann_ivf_topk"] = _ann_ivf_oracle()
     return d
 
 

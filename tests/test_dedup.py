@@ -475,7 +475,10 @@ def test_reliable_checkpoint_conf_resolution():
     executor-local one. Mirrors test_default_scratch_cluster_safety."""
     import pytest
 
-    from turboxsl_spark.operators.dedup import _reliable_checkpoint
+    from turboxsl_spark.operators.dedup import (
+        _checkpoint_if_possible,
+        _reliable_checkpoint,
+    )
 
     class _Conf:
         def __init__(self, values):
@@ -520,6 +523,10 @@ def test_reliable_checkpoint_conf_resolution():
     df = _DF(_Spark({"spark.master": "yarn"}))
     with pytest.raises(ValueError, match="cluster-visible"):
         _reliable_checkpoint(df)
+    # ... where the best-effort form returns df untouched instead
+    df = _DF(_Spark({"spark.master": "yarn"}))
+    assert _checkpoint_if_possible(df) is df and df.calls == []
+    assert df.sparkSession.sparkContext.dir is None
 
     # cluster master + conf → reliable checkpoint, dir wired once
     sp = _Spark({"spark.master": "yarn",

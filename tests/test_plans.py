@@ -256,3 +256,56 @@ def test_embedding_near_dup_cap_has_no_window(spark):
     plan = plan_of(out)
     assert "Window" not in plan, plan[:4000]
     assert "BroadcastExchange" in plan  # the oversized-key anti-join
+
+
+# (exchanges incl. broadcast, sorts, windows) per salted operator on the
+# tests/test_skew.py fixture. One two-phase merge (skew.py) plans three
+# shuffles (local window, chunk-edge aggregate, carry window), the
+# carry's broadcast and two Windows; a max_by chunk edge over a string or
+# struct aggregates by sort, which adds two Sorts. salted_session_id
+# nests two merges. salted_forward_fill planned a third, full-frame
+# Window before its chunk edge became a max_by.
+SALTED_SHAPES = {
+    "cumsum": (4, 2, 2),
+    "ffill": (4, 4, 2),
+    "session": (13, 8, 6),
+    "asof_backward": (4, 4, 2),
+    "asof_forward": (4, 4, 2),
+}
+
+
+@pytest.fixture(scope="module")
+def skewed(spark):
+    from tests.test_skew import skewed_transcripts
+
+    return skewed_transcripts(spark)
+
+
+@pytest.mark.parametrize("op", sorted(SALTED_SHAPES))
+def test_salted_operator_plan_shapes(spark, skewed, op):
+    from turboxsl_spark.operators.asof import asof_join_salted
+    from turboxsl_spark.operators.skew import (
+        salted_cumsum,
+        salted_forward_fill,
+        salted_session_id,
+    )
+
+    if op == "cumsum":
+        out = salted_cumsum(skewed, F.length("text"), "run_len", chunk=64)
+    elif op == "ffill":
+        out = salted_forward_fill(skewed, "tool", chunk=64)
+    elif op == "session":
+        out = salted_session_id(skewed, chunk=64)
+    else:
+        facts = skewed.where(F.col("tool").isNotNull()).select(
+            "conv_id", "ts", F.col("turn_idx").alias("value")
+        )
+        out = asof_join_salted(
+            skewed.select("conv_id", "ts", "turn_idx"), facts, chunk_s=300.0,
+            direction=op.removeprefix("asof_"),
+        )
+    plan = plan_of(out)
+    shape = tuple(
+        len(re.findall(p, plan)) for p in (r"Exchange ", r"\bSort \[", r"\bWindow \[")
+    )
+    assert shape == SALTED_SHAPES[op], plan[:6000]

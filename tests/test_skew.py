@@ -1,6 +1,8 @@
 """Salt-invariance: the two-phase salted window merge must produce
 exactly the plain-window result for any chunk size (the analogue of the
-reference's pool-size-independent goldens)."""
+reference's pool-size-independent goldens). ``chunk=1`` puts every row
+in a chunk of its own, so every carry crosses chunks and the
+forward-fill carry must skip runs of chunks with no non-null ``tool``."""
 
 from __future__ import annotations
 
@@ -22,8 +24,7 @@ from turboxsl_spark.sources.transcripts import TRANSCRIPT_SCHEMA, gen_transcript
 KEYS = ["conv_id", "turn_idx"]
 
 
-@pytest.fixture(scope="module")
-def df(spark):
+def skewed_transcripts(spark):
     # mega_frac high so several conversations are >> chunk size
     pdf = gen_transcripts_pdf(n_convs=25, seed=3, mega_frac=0.1)
     assert pdf.groupby("conv_id").size().max() >= 1000
@@ -39,7 +40,12 @@ def df(spark):
     return spark.createDataFrame(pdf, schema=schema).cache()
 
 
-@pytest.mark.parametrize("chunk", [64, 1000])
+@pytest.fixture(scope="module")
+def df(spark):
+    return skewed_transcripts(spark)
+
+
+@pytest.mark.parametrize("chunk", [1, 64, 1000])
 def test_salted_cumsum_matches_plain(spark, df, chunk):
     plain = df.withColumn(
         "run_len",
@@ -53,7 +59,7 @@ def test_salted_cumsum_matches_plain(spark, df, chunk):
     assert_frames_match(salted.toPandas(), plain.toPandas(), KEYS)
 
 
-@pytest.mark.parametrize("chunk", [64, 1000])
+@pytest.mark.parametrize("chunk", [1, 64, 1000])
 def test_salted_ffill_matches_plain(spark, df, chunk):
     plain = df.withColumn(
         "tool_ffill",
@@ -65,7 +71,7 @@ def test_salted_ffill_matches_plain(spark, df, chunk):
     assert_frames_match(salted.toPandas(), plain.toPandas(), KEYS)
 
 
-@pytest.mark.parametrize("chunk", [64, 1000])
+@pytest.mark.parametrize("chunk", [1, 64, 1000])
 def test_salted_session_matches_plain(spark, df, chunk):
     plain = with_session_id(df, timeout_s=1800).select(*KEYS, "session_id")
     salted = salted_session_id(df, timeout_s=1800, chunk=chunk).select(

@@ -28,25 +28,19 @@ Tie handling via a union-side rank in the sort key:
 reference's work-stealing scenario, ``src/unbounded_queue.c:101-128``,
 transposed to a 10^9-turn conversation) collapses the plain form to one
 task; time-bucket salting bounds every partition and merges carry-in
-facts across buckets in a second, tiny phase.
+facts across buckets in a second, tiny phase (the two-phase merge of
+``skew.py``).
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-
-def _fact_struct_type(
-    spine: DataFrame, facts: DataFrame, ts_col: str, value_cols: Sequence[str]
-) -> T.StructType:
-    return T.StructType(
-        [T.StructField("_fts", facts.schema[ts_col].dataType)]
-        + [T.StructField(f"_v_{c}", facts.schema[c].dataType) for c in value_cols]
-    )
+from turboxsl_spark.operators.skew import _running, _two_phase
 
 
 def _union_sides(
@@ -57,7 +51,7 @@ def _union_sides(
     value_cols: Sequence[str],
     strict: bool,
     fact_seq_col: str | None,
-    direction: str = "backward",
+    direction: str,
 ) -> tuple[DataFrame, list[str], int]:
     """Tag + union both sides; the matched fact rides ONE struct column.
 
@@ -77,7 +71,10 @@ def _union_sides(
     seq = (
         F.col(fact_seq_col).cast("long") if fact_seq_col else F.lit(0).cast("long")
     )
-    struct_type = _fact_struct_type(spine, facts, ts_col, value_cols)
+    struct_type = T.StructType(
+        [T.StructField("_fts", facts.schema[ts_col].dataType)]
+        + [T.StructField(f"_v_{c}", facts.schema[c].dataType) for c in value_cols]
+    )
     f_side = facts.select(
         *[F.col(k) for k in keys],
         F.col(ts_col).alias("_asof_ts"),
@@ -108,10 +105,9 @@ def _project_out(
     suffix: str,
     fact_ts_out: str | None,
     tolerance_s: float | None,
-    fill_col: str = "_ff",
-    direction: str = "backward",
+    direction: str,
 ) -> DataFrame:
-    ff_ts = F.col(f"{fill_col}._fts")
+    ff_ts = F.col("_ff._fts")
     if tolerance_s is not None:
         # freshness judged on the matched fact's own timestamp — the
         # same struct the values come from, so a stale fact nulls out
@@ -123,10 +119,10 @@ def _project_out(
             fresh = fact_us >= spine_us - tol
         else:
             fresh = fact_us <= spine_us + tol
-        val = lambda c: F.when(fresh, F.col(f"{fill_col}._v_{c}"))
+        val = lambda c: F.when(fresh, F.col(f"_ff._v_{c}"))
         ts_val = F.when(fresh, ff_ts)
     else:
-        val = lambda c: F.col(f"{fill_col}._v_{c}")
+        val = lambda c: F.col(f"_ff._v_{c}")
         ts_val = ff_ts
     return filled.where(F.col("_side") == spine_rank).select(
         *[F.col(f"_s_{c}").alias(c) for c in spine_cols],
@@ -171,32 +167,9 @@ def asof_join(
     a fact farther than ``tolerance_s`` from the spine ts is treated as
     absent — stale features become NULL instead of silently ancient.
     """
-    if direction not in ("backward", "forward"):
-        raise ValueError(f"direction must be backward|forward, got {direction!r}")
-    keys = [on] if isinstance(on, str) else list(on)
-    if value_cols is None:
-        value_cols = [c for c in facts.columns if c not in keys and c != ts_col]
-
-    unioned, spine_cols, spine_rank = _union_sides(
-        spine, facts, keys, ts_col, value_cols, strict, fact_seq_col, direction
-    )
-    ordered = Window.partitionBy(*keys).orderBy("_asof_ts", "_side", "_seq")
-    if direction == "backward":
-        w = ordered.rowsBetween(Window.unboundedPreceding, 0)
-        fill = F.last("_fact", ignorenulls=True).over(w)
-    else:
-        w = ordered.rowsBetween(0, Window.unboundedFollowing)
-        fill = F.first("_fact", ignorenulls=True).over(w)
-    filled = unioned.select("*", fill.alias("_ff"))
-    return _project_out(
-        filled,
-        spine_cols,
-        spine_rank,
-        value_cols,
-        suffix,
-        fact_ts_out,
-        tolerance_s,
-        direction=direction,
+    return _asof(
+        spine, facts, on, ts_col, value_cols, strict, suffix, fact_ts_out,
+        fact_seq_col, tolerance_s, direction, chunk_s=None,
     )
 
 
@@ -214,41 +187,44 @@ def asof_join_salted(
     chunk_s: float = 86400.0,
     direction: str = "backward",
 ) -> DataFrame:
-    """Skew-safe as-of join: time-bucket salted two-phase merge.
-
-    The plain form puts a whole key in one task; a mega-conversation
-    then dominates the stage. Salting by time bucket
-    ``floor(unix_micros(ts) / chunk_s)`` bounds each partition:
-
-      phase 1: the union+window as-of runs LOCALLY within
-               ``(key, bucket)`` — bounded partitions;
-      phase 2: each bucket's LAST fact struct (``max_by`` over the
-               bucket's facts — atomic, whole row) is forward-filled
-               along the per-key bucket axis (one row per bucket —
-               tiny), giving every bucket the carry-in fact of all
-               previous buckets; rows whose local fill is NULL take
-               the carry. With ``direction="forward"`` the axes flip:
-               each bucket's FIRST fact (``min_by``) is back-filled
-               from FOLLOWING buckets, the local window looks ahead.
+    """Skew-safe ``asof_join``: the fact fill is the salted two-phase
+    merge of ``skew.py`` (its docstring covers the phases, the NULL-safe
+    join and salt invariance), salted by the time bucket
+    ``floor(unix_micros(ts) / chunk_s)`` and carrying the last non-null
+    ``_fact`` struct — the first one with ``direction="forward"``, whose
+    carry comes from FOLLOWING buckets.
 
     Tie semantics stay exact: a carried fact comes from a strictly
-    earlier (backward) / later (forward) bucket, so the
-    strict/inclusive distinction only matters at equal timestamps,
-    which always share a bucket and are resolved by phase 1's
-    ``(ts, side, seq)`` order. Salt-invariance vs the plain operator is
-    property-tested in tests/test_asof.py and oracle-checked by the
-    driver's ``asof_salted`` / ``asof_salted_fwd`` queries against the
-    SAME SQL as ``asof_join`` / ``asof_forward``.
-
-    NULL keys / NULL ts: phase 2's equi-join is NULL-SAFE (``<=>``),
-    so NULL-keyed or NULL-ts rows survive with the same NULL-group
-    window semantics as the plain operator (salt invariance holds on
-    them too — tested).
+    earlier (backward) / later (forward) bucket, and equal timestamps
+    always share a bucket, where the local ``(ts, side, seq)`` order
+    resolves strict vs inclusive as in the plain operator.
 
     ``chunk_s`` sets the skew bound: rows per task ≤ rows per
     ``(key, chunk_s)`` window. Pick it from the key's peak event rate
     (e.g. 1 day at 10^4 turns/day ≈ 10^4-row partitions).
     """
+    return _asof(
+        spine, facts, on, ts_col, value_cols, strict, suffix, fact_ts_out,
+        fact_seq_col, tolerance_s, direction, chunk_s=chunk_s,
+    )
+
+
+def _asof(
+    spine: DataFrame,
+    facts: DataFrame,
+    on: str | Sequence[str],
+    ts_col: str,
+    value_cols: Sequence[str] | None,
+    strict: bool,
+    suffix: str,
+    fact_ts_out: str | None,
+    fact_seq_col: str | None,
+    tolerance_s: float | None,
+    direction: str,
+    chunk_s: float | None,
+) -> DataFrame:
+    """Both public forms: one fill of ``_fact`` into ``_ff``, over the
+    whole key (``chunk_s=None``) or salted by ``chunk_s`` time buckets."""
     if direction not in ("backward", "forward"):
         raise ValueError(f"direction must be backward|forward, got {direction!r}")
     keys = [on] if isinstance(on, str) else list(on)
@@ -258,72 +234,16 @@ def asof_join_salted(
     unioned, spine_cols, spine_rank = _union_sides(
         spine, facts, keys, ts_col, value_cols, strict, fact_seq_col, direction
     )
-    chunk_us = int(chunk_s * 1_000_000)
-    unioned = unioned.withColumn(
-        "_bucket",
-        F.floor(
-            F.unix_micros(F.col("_asof_ts").cast("timestamp")) / F.lit(chunk_us)
-        ).cast("long"),
-    )
-
-    backward = direction == "backward"
-    # phase 1: local as-of within (key, bucket)
-    ordered_local = Window.partitionBy(*keys, "_bucket").orderBy(
-        "_asof_ts", "_side", "_seq"
-    )
-    if backward:
-        w_local = ordered_local.rowsBetween(Window.unboundedPreceding, 0)
-        fill_local = F.last("_fact", ignorenulls=True).over(w_local)
+    op = "last" if direction == "backward" else "first"
+    order = ["_asof_ts", "_side", "_seq"]
+    if chunk_s is None:
+        w = Window.partitionBy(*keys).orderBy(*order)
+        filled = unioned.select("*", _running(op, "_fact", w).alias("_ff"))
     else:
-        w_local = ordered_local.rowsBetween(0, Window.unboundedFollowing)
-        fill_local = F.first("_fact", ignorenulls=True).over(w_local)
-    local = unioned.withColumn("_ff_local", fill_local)
-
-    # phase 2: carry-in = last fact of any PREVIOUS bucket (backward)
-    # or first fact of any FOLLOWING bucket (forward).
-    # bucket spine = every (key, bucket) present; buckets with facts
-    # contribute their edge fact struct via max_by/min_by (atomic pick).
-    pick = F.max_by if backward else F.min_by
-    bucket_edge = (
-        unioned.groupBy(*keys, "_bucket")
-        .agg(
-            pick(
-                "_fact", F.when(F.col("_fact").isNotNull(), F.struct("_asof_ts", "_seq"))
-            ).alias("_bucket_fact")
-        )
-    )
-    ordered_carry = Window.partitionBy(*keys).orderBy("_bucket")
-    if backward:
-        w_carry = ordered_carry.rowsBetween(Window.unboundedPreceding, -1)
-        fill_carry = F.last("_bucket_fact", ignorenulls=True).over(w_carry)
-    else:
-        w_carry = ordered_carry.rowsBetween(1, Window.unboundedFollowing)
-        fill_carry = F.first("_bucket_fact", ignorenulls=True).over(w_carry)
-    carry = bucket_edge.withColumn("_carry", fill_carry).select(
-        *[F.col(k).alias(f"_ck_{k}") for k in keys],
-        F.col("_bucket").alias("_ck_bucket"),
-        "_carry",
-    )
-
-    # NULL-SAFE equi-join (still a hash/sort-merge equi-join in Spark):
-    # a plain inner join on [*keys, _bucket] would DROP rows whose key
-    # or ts is NULL, breaking salt invariance vs the plain operator,
-    # which keeps them (window partitioning groups NULLs).
-    cond = F.col("_bucket").eqNullSafe(F.col("_ck_bucket"))
-    for k in keys:
-        cond = cond & F.col(k).eqNullSafe(F.col(f"_ck_{k}"))
-    filled = (
-        local.join(carry, cond)
-        .drop("_ck_bucket", *[f"_ck_{k}" for k in keys])
-        .withColumn("_ff", F.coalesce("_ff_local", "_carry"))
-    )
+        micros = F.unix_micros(F.col("_asof_ts").cast("timestamp"))
+        bucket = F.floor(micros / F.lit(int(chunk_s * 1_000_000))).cast("long")
+        filled = _two_phase(unioned, keys, bucket, order, "_fact", op, "_ff")
     return _project_out(
-        filled,
-        spine_cols,
-        spine_rank,
-        value_cols,
-        suffix,
-        fact_ts_out,
-        tolerance_s,
-        direction=direction,
+        filled, spine_cols, spine_rank, value_cols, suffix, fact_ts_out,
+        tolerance_s, direction,
     )

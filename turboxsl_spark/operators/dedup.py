@@ -27,7 +27,7 @@ from pyspark.sql import types as T
 from .rank import SCRATCH_CONF
 
 
-def _reliable_checkpoint(df: DataFrame) -> DataFrame:
+def _reliable_checkpoint(df: DataFrame, optional: bool = False) -> DataFrame:
     """Truncate lineage in a way that survives executor loss.
 
     Under ``local[*]`` the executors ARE the driver process, so
@@ -39,7 +39,8 @@ def _reliable_checkpoint(df: DataFrame) -> DataFrame:
     scratch dir (``spark.turboxsl.scratchDir``, same conf as
     ``global_rank``), wiring ``sparkContext.setCheckpointDir`` on first
     use. No conf on a cluster → raise at plan time rather than silently
-    truncating lineage against volatile storage.
+    truncating lineage against volatile storage (``optional``: return
+    ``df`` unmaterialized instead).
     """
     spark = df.sparkSession
     master = spark.conf.get("spark.master", "")
@@ -52,6 +53,8 @@ def _reliable_checkpoint(df: DataFrame) -> DataFrame:
     if sc.getCheckpointDir() is None:
         base = spark.conf.get(SCRATCH_CONF, None)
         if not base:
+            if optional:
+                return df
             raise ValueError(
                 f"duplicate_components checkpoint on master {master!r}: "
                 f"localCheckpoint is not fault-tolerant off local[*] — set "
@@ -63,23 +66,13 @@ def _reliable_checkpoint(df: DataFrame) -> DataFrame:
 
 
 def _checkpoint_if_possible(df: DataFrame) -> DataFrame:
-    """Best-effort eager materialization: like ``_reliable_checkpoint``
-    but FALLS BACK to the unmaterialized lineage (recompute per
-    consumer) when no cluster-visible scratch is configured, instead of
-    raising — for callers where materialization is a pure optimization
-    (compute an expensive projection once) rather than a correctness
-    need (lineage truncation in an iterative loop)."""
-    spark = df.sparkSession
-    master = spark.conf.get("spark.master", "")
-    if re.match(r"local(\[|$)", master):
-        return df.localCheckpoint()
-    sc = spark.sparkContext
-    if sc.getCheckpointDir() is None:
-        base = spark.conf.get(SCRATCH_CONF, None)
-        if not base:
-            return df
-        sc.setCheckpointDir(f"{base.rstrip('/')}/cc_checkpoints")
-    return df.checkpoint()
+    """Best-effort eager materialization: ``_reliable_checkpoint``, but
+    FALLS BACK to the unmaterialized lineage (recompute per consumer)
+    when no cluster-visible scratch is configured, instead of raising —
+    for callers where materialization is a pure optimization (compute an
+    expensive projection once) rather than a correctness need (lineage
+    truncation in an iterative loop)."""
+    return _reliable_checkpoint(df, optional=True)
 
 
 def tokenize(c: Column | str, lowercase: bool = True) -> Column:
