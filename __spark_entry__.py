@@ -491,24 +491,27 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup dedup over documents, ORACLE-exact: the
-    md5-twin hash family (operators/dedup.py) lets one DuckDB statement
-    replay the WHOLE pipeline — 64-slot signatures (48-bit double
-    hashing over md5 shingle digests), 16-band bucket join, md5-shingle
-    Jaccard verify at 0.8, transitive-closure components, min-id
-    representative. The xxhash64 fast path stays pinned by
-    tests/test_dedup.py."""
-    from turboxsl_spark.operators.dedup import minhash_dedup_md5
+    """MinHash+LSH near-dup dedup over documents, ORACLE-exact:
+    ``minhash_dedup(hasher="md5")`` (the md5 hash family, see
+    operators/dedup.py) lets one DuckDB statement replay the WHOLE
+    pipeline — 64-slot signatures (48-bit double hashing over md5
+    shingle digests), 16-band bucket join, md5-shingle Jaccard verify
+    at 0.8, transitive-closure components, min-id representative. The
+    default xxh64 family is pinned by tests/test_dedup.py."""
+    from turboxsl_spark.operators.dedup import minhash_dedup
 
     d = _t(spark, sf_dir, "documents")
-    return minhash_dedup_md5(d, threshold=0.8).select("doc_id").orderBy("doc_id")
+    return (
+        minhash_dedup(d, threshold=0.8, hasher="md5").select("doc_id").orderBy("doc_id")
+    )
 
 
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact word-3-gram Jaccard for adjacent doc-id pairs — the verify
     stage of the near-dup pipeline, oracle-checked end-to-end (string
-    shingles here so DuckDB can mirror them; production uses the
-    hash-shingle fast path, pinned equal in tests/test_dedup.py)."""
+    shingles here so DuckDB can mirror them; ``dedup.ngram_jaccard``
+    computes the same value over xxh64 or md5 shingle hashes, pinned
+    in tests/test_dedup.py)."""
     from turboxsl_spark.operators.dedup import (
         _checkpoint_if_possible,
         shingles,
@@ -543,26 +546,27 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic 60-bit SimHash per document, ORACLE-exact: token
-    hashes are md5-derived (md5_hash60), so DuckDB restates the numpy
-    bit-vote as 60 conditional SUMs per doc and matches bit-for-bit.
-    The 64-bit xxhash64 variant stays pinned by tests/test_dedup.py."""
-    from turboxsl_spark.operators.dedup import simhash_md5
+    """Deterministic 60-bit SimHash per document, ORACLE-exact:
+    ``simhash(hasher="md5")`` hashes tokens with md5_hash60, so DuckDB
+    restates the numpy bit-vote as 60 conditional SUMs per doc and
+    matches bit-for-bit. The 64-bit default xxh64 family is pinned by
+    tests/test_dedup.py."""
+    from turboxsl_spark.operators.dedup import simhash
 
     d = _t(spark, sf_dir, "documents")
-    return simhash_md5(d).select("doc_id", "simhash")
+    return simhash(d, hasher="md5").select("doc_id", "simhash")
 
 
 def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-sensitive rolling document fingerprint, ORACLE-exact: the
-    md5-chained twin (fingerprint_md5) is replayed by DuckDB via
-    list_reduce over the same 4-gram digests. The 64-bit xxhash64
-    variant stays pinned by tests/test_text_analysis.py."""
-    from turboxsl_spark.functions.text_analysis import fingerprint_md5, words_of
+    md5 chain of ``fingerprint(hasher="md5")`` is replayed by DuckDB via
+    list_reduce over the same 4-gram digests. The 64-bit default xxh64
+    family is pinned by tests/test_text_analysis.py."""
+    from turboxsl_spark.functions.text_analysis import fingerprint, words_of
 
     d = _t(spark, sf_dir, "documents")
     return d.select("doc_id", words_of("text").alias("_w")).select(
-        "doc_id", fingerprint_md5(F.col("_w"), tokenized=True).alias("fp_md5")
+        "doc_id", fingerprint(F.col("_w"), tokenized=True, hasher="md5").alias("fp_md5")
     )
 
 

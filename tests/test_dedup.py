@@ -5,6 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from turboxsl_spark.functions.text_analysis import fingerprint
 from turboxsl_spark.operators.dedup import (
     exact_dedup,
     lsh_candidate_pairs,
@@ -12,9 +13,11 @@ from turboxsl_spark.operators.dedup import (
     minhash_signatures,
     ngram_jaccard,
     shingles,
-    simhash_xxh,
+    simhash,
     tokenize,
 )
+
+HASHERS = pytest.mark.parametrize("hasher", ["xxh64", "md5"])
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat sleeps "
@@ -56,8 +59,9 @@ def test_shingles_jvm_matches_python(spark, docs):
     assert row["sh"] == ["a b c", "b c d"]
 
 
-def test_minhash_identical_signatures(spark, docs):
-    sigs = minhash_signatures(docs, num_hashes=32).select("doc_id", "minhash").collect()
+@HASHERS
+def test_minhash_identical_signatures(spark, docs, hasher):
+    sigs = minhash_signatures(docs, num_hashes=32, hasher=hasher).collect()
     by_id = {r["doc_id"]: r["minhash"] for r in sigs}
     assert by_id[1] == by_id[2] == by_id[3]  # normalization folds ws
     assert by_id[1] != by_id[5]
@@ -66,9 +70,10 @@ def test_minhash_identical_signatures(spark, docs):
     assert same >= 16  # jaccard ~0.85 → expect most slots equal
 
 
-def test_lsh_finds_near_dup_pair(spark, docs):
-    sigs = minhash_signatures(docs, num_hashes=64)
-    pairs = lsh_candidate_pairs(sigs, bands=16, rows_per_band=4).toPandas()
+@HASHERS
+def test_lsh_finds_near_dup_pair(spark, docs, hasher):
+    sigs = minhash_signatures(docs, num_hashes=64, hasher=hasher)
+    pairs = lsh_candidate_pairs(sigs, bands=16, rows_per_band=4, hasher=hasher).toPandas()
     pairset = {tuple(p) for p in pairs[["id_a", "id_b"]].values}
     assert (1, 4) in pairset
     assert (1, 5) not in pairset and (5, 6) not in pairset
@@ -87,10 +92,11 @@ def test_ngram_jaccard_exact_value(spark, docs):
     assert j[(1, 5)] < 0.05
 
 
-def test_minhash_dedup_end_to_end(spark, docs):
+@HASHERS
+def test_minhash_dedup_end_to_end(spark, docs, hasher):
     # one-word change in 25 words → jaccard 20/26 ≈ 0.77
     kept = (
-        minhash_dedup(docs, threshold=0.7)
+        minhash_dedup(docs, threshold=0.7, hasher=hasher)
         .select("doc_id")
         .toPandas()["doc_id"]
         .sort_values()
@@ -99,7 +105,7 @@ def test_minhash_dedup_end_to_end(spark, docs):
     assert kept == [1, 5, 6]
     # at a stricter threshold the near-dup survives, exact dups still die
     strict = (
-        minhash_dedup(docs, threshold=0.8)
+        minhash_dedup(docs, threshold=0.8, hasher=hasher)
         .select("doc_id")
         .toPandas()["doc_id"]
         .sort_values()
@@ -163,16 +169,19 @@ def test_components_valley_graph(spark):
     assert set(rep) == {1} and sorted(rep.index) == [1, 3, 5, 8]
 
 
-def test_empty_and_null_text_hit_sentinel(spark):
+@HASHERS
+def test_empty_and_null_text_hit_sentinel(spark, hasher):
     """Empty/whitespace-only AND NULL texts all produce the max-long
     sentinel signature (no shingles at all), collapsing together."""
-    from turboxsl_spark.operators.dedup import minhash_signatures
-
     df = spark.createDataFrame(
         [(1, ""), (2, "   "), (3, None), (4, "real content here")],
         "doc_id long, text string",
     )
-    sig = minhash_signatures(df, num_hashes=8).toPandas().set_index("doc_id")["minhash"]
+    sig = (
+        minhash_signatures(df, num_hashes=8, hasher=hasher)
+        .toPandas()
+        .set_index("doc_id")["minhash"]
+    )
     sentinel = [(1 << 63) - 1] * 8
     assert list(sig[1]) == sentinel
     assert list(sig[2]) == sentinel
@@ -180,9 +189,13 @@ def test_empty_and_null_text_hit_sentinel(spark):
     assert list(sig[4]) != sentinel
 
 
-def test_simhash_deterministic_and_discriminative(spark, docs):
-    s1 = simhash_xxh(docs).select("doc_id", "simhash").toPandas().set_index("doc_id")["simhash"]
-    s2 = simhash_xxh(docs).select("doc_id", "simhash").toPandas().set_index("doc_id")["simhash"]
+@HASHERS
+def test_simhash_deterministic_and_discriminative(spark, docs, hasher):
+    def run():
+        out = simhash(docs, hasher=hasher).select("doc_id", "simhash").toPandas()
+        return out.set_index("doc_id")["simhash"]
+
+    s1, s2 = run(), run()
     assert (s1 == s2).all()
     assert s1[1] == s1[2] == s1[3]
     ham = bin((int(s1[1]) ^ int(s1[4])) & (2**64 - 1)).count("1")
@@ -253,7 +266,7 @@ def test_decontaminate_broadcast_plan(spark):
     assert "BroadcastHashJoin" in plan, plan[:3000]
 
 
-# ---- md5-twin hash family (the oracle-checkable variants) -----------
+# ---- md5 hash family: python replays of what the DuckDB oracle runs --
 
 
 def test_minhash_md5_signature_matches_python(spark, docs):
@@ -262,9 +275,9 @@ def test_minhash_md5_signature_matches_python(spark, docs):
     replays."""
     import hashlib
 
-    from turboxsl_spark.operators.dedup import P48, minhash_signatures_md5
+    from turboxsl_spark.operators.dedup import P48
 
-    sigs = minhash_signatures_md5(docs, num_hashes=8).select("doc_id", "minhash").collect()
+    sigs = minhash_signatures(docs, num_hashes=8, hasher="md5").collect()
     by_id = {r["doc_id"]: r["minhash"] for r in sigs}
 
     def py_sig(text, k=8, n=3):
@@ -290,34 +303,12 @@ def test_minhash_md5_signature_matches_python(spark, docs):
         assert by_id[doc_id] == py_sig(text), doc_id
 
 
-def test_minhash_md5_dedup_matches_xxh_on_fixture(spark, docs):
-    from turboxsl_spark.operators.dedup import minhash_dedup_md5
-
-    kept = (
-        minhash_dedup_md5(docs, threshold=0.7)
-        .select("doc_id")
-        .toPandas()["doc_id"]
-        .sort_values()
-        .tolist()
-    )
-    assert kept == [1, 5, 6]
-    strict = (
-        minhash_dedup_md5(docs, threshold=0.8)
-        .select("doc_id")
-        .toPandas()["doc_id"]
-        .sort_values()
-        .tolist()
-    )
-    assert strict == [1, 4, 5, 6]
-
-
-def test_minhash_md5_agreement_tracks_jaccard(spark, docs):
-    """Minwise quality of the double-hash family: identical docs agree
-    on every slot; the ~0.77-Jaccard near-dup agrees on roughly that
+@HASHERS
+def test_minhash_agreement_tracks_jaccard(spark, docs, hasher):
+    """Minwise quality of each slot family: identical docs agree on
+    every slot; the ~0.77-Jaccard near-dup agrees on roughly that
     fraction of slots; unrelated docs agree on ~none."""
-    from turboxsl_spark.operators.dedup import minhash_signatures_md5
-
-    sigs = minhash_signatures_md5(docs, num_hashes=64).select("doc_id", "minhash").collect()
+    sigs = minhash_signatures(docs, num_hashes=64, hasher=hasher).collect()
     by_id = {r["doc_id"]: r["minhash"] for r in sigs}
     assert by_id[1] == by_id[2] == by_id[3]
     frac_near = sum(a == b for a, b in zip(by_id[1], by_id[4])) / 64
@@ -329,11 +320,9 @@ def test_minhash_md5_agreement_tracks_jaccard(spark, docs):
 def test_simhash_md5_matches_python_bitvote(spark, docs):
     import hashlib
 
-    from turboxsl_spark.operators.dedup import simhash_md5
-
     got = {
         r["doc_id"]: r["simhash"]
-        for r in simhash_md5(docs).select("doc_id", "simhash").collect()
+        for r in simhash(docs, hasher="md5").select("doc_id", "simhash").collect()
     }
 
     def py_simhash(text):
@@ -411,19 +400,47 @@ def test_ngram_jaccard_null_text_is_empty_set(spark):
         assert j[(1, 3)] == 0.0, hasher
 
 
-def test_minhash_md5_family_is_minwise_unbiased(spark):
-    """Statistical check that the 48-bit double-hash family estimates
-    Jaccard without the slot-correlation bias that killed the affine
-    family: over 24 synthetic doc pairs spanning J ∈ ~[0.2, 0.9],
-    the pooled slot-agreement rate must track the pooled exact Jaccard
-    within a few standard errors (24 pairs × 32 slots = 768 draws,
-    se ≈ 0.018), and per-pair estimates must not be systematically
-    one-sided."""
+@pytest.mark.parametrize(
+    "entry",
+    [
+        "minhash_signatures",
+        "lsh_candidate_pairs",
+        "ngram_jaccard",
+        "minhash_dedup",
+        "simhash",
+        "fingerprint",
+    ],
+)
+def test_unknown_hasher_is_rejected(spark, docs, entry):
+    """Every ``hasher=`` entry point raises at plan time on any name
+    other than "xxh64"/"md5" instead of silently running xxh64."""
+    pairs = spark.createDataFrame([(1, 4)], "id_a long, id_b long")
+    sigs = spark.createDataFrame([(1, [1, 2, 3, 4])], "doc_id long, minhash array<bigint>")
+    calls = {
+        "minhash_signatures": lambda h: minhash_signatures(docs, hasher=h),
+        "lsh_candidate_pairs": lambda h: lsh_candidate_pairs(sigs, bands=1, hasher=h),
+        "ngram_jaccard": lambda h: ngram_jaccard(pairs, docs, hasher=h),
+        "minhash_dedup": lambda h: minhash_dedup(docs, hasher=h),
+        "simhash": lambda h: simhash(docs, hasher=h),
+        "fingerprint": lambda h: fingerprint("text", hasher=h),
+    }
+    for bad in ("md5x", "MD5", "xxhash64", ""):
+        with pytest.raises(ValueError, match="hasher must be one of"):
+            calls[entry](bad)
+
+
+@HASHERS
+def test_minhash_family_is_minwise_unbiased(spark, hasher):
+    """Statistical check that each slot family (xxh64 re-hash, md5
+    48-bit double hash) estimates Jaccard without the slot-correlation
+    bias that killed the affine family: over 24 synthetic doc pairs
+    spanning J ∈ ~[0.2, 0.9], the pooled slot-agreement rate must
+    track the pooled exact Jaccard within a few standard errors (24
+    pairs × 32 slots = 768 draws, se ≈ 0.018), and per-pair estimates
+    must not be systematically one-sided."""
     import hashlib
 
     import numpy as np
-
-    from turboxsl_spark.operators.dedup import minhash_signatures_md5
 
     rng = np.random.default_rng(17)
     rows = []
@@ -450,9 +467,7 @@ def test_minhash_md5_family_is_minwise_unbiased(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     sigs = {
         r["doc_id"]: r["minhash"]
-        for r in minhash_signatures_md5(df, num_hashes=32)
-        .select("doc_id", "minhash")
-        .collect()
+        for r in minhash_signatures(df, num_hashes=32, hasher=hasher).collect()
     }
     diffs = []
     agree_total = j_total = 0.0

@@ -4,9 +4,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
-from turboxsl_spark.operators.rank import global_rank, global_topk
+from turboxsl_spark.operators.rank import TOPK_MAX_K, global_rank, global_topk
 
 
 def _fixture(n=5000, seed=9):
@@ -58,6 +59,13 @@ def test_global_topk_matches_full_rank(spark):
     want = pdf.sort_values(["score", "id"], ascending=[False, True]).head(25)
     assert got["id"].tolist() == want["id"].tolist()
     assert got["rk"].tolist() == list(range(1, 26))
+
+
+@pytest.mark.parametrize("k", [0, -1, TOPK_MAX_K + 1])
+def test_global_topk_rejects_k_out_of_range(spark, k):
+    df = spark.createDataFrame([(1, 1.0)], "id long, score double")
+    with pytest.raises(ValueError, match="global_topk k"):
+        global_topk(df, [F.col("score").desc(), F.col("id").asc()], k=k)
 
 
 def test_global_rank_empty_after_filter(spark):

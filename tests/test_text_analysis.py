@@ -2,11 +2,12 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from turboxsl_spark.functions.text_analysis import (
     bpe_ish_token_count,
-    fingerprint64,
+    fingerprint,
     lang_id,
     quality_score,
     token_count,
@@ -50,27 +51,27 @@ def test_quality_score_bounds(spark):
     assert 0.0 <= b <= g <= 1.0
 
 
-def test_fingerprint_deterministic_order_sensitive(spark):
-    a = _one(spark, fingerprint64(F.col("text")), "one two three four five six")
-    a2 = _one(spark, fingerprint64(F.col("text")), "one two three four five six")
-    b = _one(spark, fingerprint64(F.col("text")), "six five four three two one")
+@pytest.mark.parametrize("hasher", ["xxh64", "md5"])
+def test_fingerprint_deterministic_order_sensitive(spark, hasher):
+    fp = fingerprint(F.col("text"), hasher=hasher)
+    a = _one(spark, fp, "one two three four five six")
+    a2 = _one(spark, fp, "one two three four five six")
+    b = _one(spark, fp, "six five four three two one")
     assert a == a2
     assert a != b
 
 
 def test_fingerprint_md5_matches_python_chain(spark):
-    """The md5-chained fingerprint twin must equal a pure-python replay
+    """The md5-chained fingerprint must equal a pure-python replay
     (the same fold the DuckDB oracle runs via list_reduce)."""
     import hashlib
-
-    from turboxsl_spark.functions.text_analysis import fingerprint_md5
 
     rows = [(1, "alpha beta gamma delta epsilon zeta"), (2, "tiny doc"), (3, "")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         r["doc_id"]: r["fp"]
         for r in df.select(
-            "doc_id", fingerprint_md5("text").alias("fp")
+            "doc_id", fingerprint("text", hasher="md5").alias("fp")
         ).collect()
     }
 
@@ -96,5 +97,5 @@ def test_fingerprint_md5_matches_python_chain(spark):
     df2 = spark.createDataFrame(
         [(1, "a b c d e f"), (2, "f e d c b a")], "doc_id long, text string"
     )
-    fps = [r["fp"] for r in df2.select(fingerprint_md5("text").alias("fp")).collect()]
+    fps = [r["fp"] for r in df2.select(fingerprint("text", hasher="md5").alias("fp")).collect()]
     assert fps[0] != fps[1]

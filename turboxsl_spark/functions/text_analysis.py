@@ -198,61 +198,68 @@ def repetition_metrics(words: Column) -> Column:
     )
 
 
-def fingerprint64(c: Column | str, tokenized: bool = False) -> Column:
-    """Order-sensitive 64-bit document fingerprint: xxhash64 chained over
-    word 4-gram hashes (rolling-hash-style content signature).
+_HASHERS = ("xxh64", "md5")
 
-    IMPORTANT for large inputs: pass a pre-materialized ``words_of``
-    column with ``tokenized=True`` — an inlined split expression is
-    re-evaluated per element access inside the interpreted transform
-    lambda (O(words²) regex work otherwise). Gram hashes use multi-arg
-    xxhash64 over token tuples: no gram strings are built.
+
+def _check_hasher(hasher: str) -> str:
+    """The one validation point for every ``hasher=`` parameter (the
+    near-dup operators in ``operators/dedup.py`` and ``fingerprint``).
+    The two families are described in that module's docstring."""
+    if hasher not in _HASHERS:
+        raise ValueError(f"hasher must be one of {_HASHERS}, got {hasher!r}")
+    return hasher
+
+
+def _gram_hashes(tokens: Column, n: int, hasher: str) -> Column:
+    """Per-position word n-gram identities of a token array, JVM-side:
+    multi-arg xxhash64 over the n tokens for ``xxh64`` (BIGINT), md5
+    hex of the space-joined n tokens for ``md5`` (STRING, the gram
+    strings any engine with md5 can rebuild).
+
+    xxh64 builds no gram strings: higher-order functions run
+    interpreted (no codegen/CSE), so per-gram string assembly dominates
+    the naive version, and hashing token tuples is ~10x cheaper
+    (collisions are negligible at 64 bits). Fewer than n tokens → one
+    hash of the whole joined string; zero tokens → empty array (no
+    grams, so min-hashing hits its explicit sentinel path).
     """
-    c = F.col(c) if isinstance(c, str) else c
-    words = c if tokenized else _word_set(c)
+    md5 = _check_hasher(hasher) == "md5"
 
     def gram(i: Column) -> Column:
-        return F.xxhash64(*[F.element_at(words, i + j) for j in range(4)])
+        toks = [F.element_at(tokens, i + j) for j in range(n)]
+        return F.md5(F.concat_ws(" ", *toks)) if md5 else F.xxhash64(*toks)
 
-    grams = F.when(
-        F.size(words) < 4, F.array(F.xxhash64(F.concat_ws(" ", words)))
-    ).otherwise(F.transform(F.sequence(F.lit(1), F.size(words) - 3), gram))
-    return F.aggregate(
-        grams,
-        F.lit(0).cast("long"),
-        lambda acc, h: F.xxhash64(acc, h),
+    whole = F.concat_ws(" ", tokens)
+    return (
+        F.when(F.size(tokens) == 0, F.array().cast("array<string>" if md5 else "array<bigint>"))
+        .when(F.size(tokens) < n, F.array(F.md5(whole) if md5 else F.xxhash64(whole)))
+        .otherwise(F.transform(F.sequence(F.lit(1), F.size(tokens) - (n - 1)), gram))
     )
 
 
-def fingerprint_md5(c: Column | str, tokenized: bool = False) -> Column:
-    """Engine-portable md5 twin of ``fingerprint64`` (same gram/window
-    structure; see that docstring for the tokenized= performance note).
-    Returns the 32-hex-char digest STRING of an md5 chain over word
-    4-gram digests:
+def fingerprint(c: Column | str, tokenized: bool = False, hasher: str = "xxh64") -> Column:
+    """Order-sensitive document fingerprint: a hash chain folded over
+    the word 4-gram hashes of ``_gram_hashes`` (rolling-hash-style
+    content signature). Map-only, zero shuffle.
+
+    ``xxh64`` returns a BIGINT: fold ``acc → xxhash64(acc, g)`` from 0.
+    ``md5`` returns the 32-hex-char digest STRING:
 
         fp = fold over grams g of  acc → md5(acc || ':' || g),
         acc0 = '',  g_i = md5(w_i ' ' w_i+1 ' ' w_i+2 ' ' w_i+3)
         (fewer than 4 words → one gram md5(join(words, ' ')))
 
-    Any engine replays it — DuckDB:
-    ``list_reduce(list_prepend('', grams), (a, g) -> md5(a||':'||g))``
-    — which is what flips the driver's fingerprint check from
-    rows-only to oracle-exact. Map-only, zero shuffle, same as the
-    xxh64 fast path.
+    which any engine replays — DuckDB:
+    ``list_reduce(list_prepend('', grams), (a, g) -> md5(a||':'||g))``.
+
+    IMPORTANT for large inputs: pass a pre-materialized ``words_of``
+    column with ``tokenized=True`` — an inlined split expression is
+    re-evaluated per element access inside the interpreted transform
+    lambda (O(words²) regex work otherwise).
     """
     c = F.col(c) if isinstance(c, str) else c
     words = c if tokenized else _word_set(c)
-
-    def gram(i: Column) -> Column:
-        return F.md5(
-            F.concat_ws(" ", *[F.element_at(words, i + j) for j in range(4)])
-        )
-
-    grams = F.when(
-        F.size(words) < 4, F.array(F.md5(F.concat_ws(" ", words)))
-    ).otherwise(F.transform(F.sequence(F.lit(1), F.size(words) - 3), gram))
-    return F.aggregate(
-        grams,
-        F.lit(""),
-        lambda acc, g: F.md5(F.concat(acc, F.lit(":"), g)),
-    )
+    grams = _gram_hashes(words, 4, hasher)
+    if hasher == "md5":
+        return F.aggregate(grams, F.lit(""), lambda acc, g: F.md5(F.concat(acc, F.lit(":"), g)))
+    return F.aggregate(grams, F.lit(0).cast("long"), lambda acc, h: F.xxhash64(acc, h))

@@ -2,10 +2,39 @@
 
 The training-data-pipeline operators (task brief): exact hash dedup,
 MinHash+LSH, SimHash, n-gram Jaccard verification, embedding-cosine
-near-dup. Everything except SimHash bit-voting stays JVM-side
-(xxhash64 + higher-order array functions); SimHash uses a vectorized
+near-dup. Everything except SimHash bit-voting stays JVM-side (hash
+functions + higher-order array functions); SimHash uses a vectorized
 numpy pandas-UDF because 64-bit bit-voting has no array-function
 equivalent that stays readable.
+
+Hash families. ``minhash_signatures``, ``lsh_candidate_pairs``,
+``ngram_jaccard``, ``minhash_dedup``, ``simhash`` and
+``text_analysis.fingerprint`` take ``hasher=``, validated in one place
+(``text_analysis._check_hasher``); the gram identities of both
+families come from one primitive (``text_analysis._gram_hashes``).
+Both keep the same plan shape (explode → fused min aggs → banded
+equi-self-join → candidate-only verify → CC):
+
+- ``"xxh64"`` (default) is the fast path: multi-arg xxhash64 over
+  token tuples, no digest strings. MinHash slot i re-hashes a gram
+  hash with seed 42+i, a fully-mixing minwise family.
+- ``"md5"`` is for oracle replay: every hash derives from md5 hex
+  digests, so ANY engine that can md5 (the DuckDB correctness oracle,
+  pandas, a future port) reproduces signatures, LSH buckets, Jaccard
+  sets, SimHash and fingerprints BIT-EXACTLY, at 1.4-2.2x the xxh64
+  query time (sf0.1, 4 cores). MinHash slots use 48-bit enhanced double hashing (Kirsch &
+  Mitzenmacher): slot_j(s) = (h1(s) + j*h2(s) + j**2) mod P48, with
+  h1/h2 the first/second 12 hex chars of md5(gram) — one digest per
+  gram, NOT k. An affine family over one hash, (a*h+b) mod M, is
+  piecewise-monotone: its slots correlate, and real shingle sets
+  showed agreement far below the Jaccard expectation. h1 and h2 are
+  INDEPENDENT 48-bit digests, so these slots decorrelate and track
+  Jaccard as closely as the xxh family (property-tested for both in
+  tests/test_dedup.py). The max slot h1 + 63*h2 + 63**2 < 2**54 stays
+  inside BIGINT in both engines: no overflow, no engine-specific wrap.
+
+Docs with no grams (empty, whitespace-only or NULL text) share the
+max-long sentinel signature in both families.
 
 Scale notes:
 - shingling/minhash are per-row map work — no shuffle, fully parallel;
@@ -23,6 +52,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from turboxsl_spark.functions.text_analysis import _check_hasher, _gram_hashes
 
 from .rank import SCRATCH_CONF
 
@@ -108,53 +139,9 @@ def shingles(tokens: Column, n: int = 3) -> Column:
     )
 
 
-def shingle_hashes(tokens: Column, n: int = 3) -> Column:
-    """64-bit hashes of word n-gram shingles WITHOUT building the shingle
-    strings: multi-arg xxhash64 over the n tokens at each position.
-
-    Higher-order functions run interpreted (no codegen/CSE), so string
-    assembly per shingle is the dominant cost of the naive version —
-    hashing token tuples directly is ~10x cheaper and equally valid as
-    a shingle identity (collisions are negligible at 64 bits).
-    Zero tokens → empty array (mirrors ``shingles``).
-    """
-
-    def gram(i: Column) -> Column:
-        return F.xxhash64(*[F.element_at(tokens, i + j) for j in range(n)])
-
-    return (
-        F.when(F.size(tokens) == 0, F.array().cast("array<bigint>"))
-        .when(F.size(tokens) < n, F.array(F.xxhash64(F.concat_ws(" ", tokens))))
-        .otherwise(F.transform(F.sequence(F.lit(1), F.size(tokens) - (n - 1)), gram))
-    )
-
-
-# ---------------------------------------------------------------------
-# Engine-portable md5 hash family ("md5 twins").
-#
-# Every hash below derives from md5 hex digests, so ANY engine that can
-# md5 — the DuckDB correctness oracle, pandas, a future engine port —
-# reproduces signatures, LSH buckets, and fingerprints BIT-EXACTLY,
-# which is what lets the driver's oracle gate check the full near-dup
-# pipeline end-to-end instead of rows-only. The xxhash64 variants above
-# stay the production fast path (multi-arg tuple hashing, no digest
-# strings); the twins trade ~2-3x map-side hash cost for end-to-end
-# oracle checkability — the SHAPE of the plan (explode → fused min
-# aggs → banded equi-self-join → candidate-only verify → CC) is
-# identical.
-#
-# MinHash slots use 48-bit enhanced double hashing (Kirsch &
-# Mitzenmacher): slot_j(s) = (h1(s) + j*h2(s) + j**2) mod P48 with
-# h1/h2 = the first/second 12 hex chars of md5(shingle). Unlike the
-# affine-over-one-hash family the xxh path replaced (piecewise-
-# monotone, slots correlated), h1 and h2 are INDEPENDENT 48-bit
-# digests, so slots decorrelate; agreement tracks Jaccard within the
-# same tolerance as the fully-mixing xxh family (property-tested in
-# tests/test_dedup.py). Max slot value h1 + 63*h2 + 63**2 < 2**54
-# stays inside BIGINT arithmetic in both engines — no overflow, no
-# engine-specific wrap semantics.
-P48 = (1 << 48) - 59  # largest prime below 2**48
-_SIG_SENTINEL = (1 << 63) - 1
+P48 = (1 << 48) - 59  # largest prime below 2**48 (md5 slot modulus)
+_SIG_SENTINEL = (1 << 63) - 1  # signature of a doc with no grams
+_MINHASH_SEED = 42  # xxh64 slot i re-hashes with seed 42+i
 
 
 def _hex_long(digest: Column, start: int, n: int) -> Column:
@@ -168,105 +155,6 @@ def md5_hash60(c: Column | str) -> Column:
     DuckDB: ``CAST(('0x' || substr(md5(c), 1, 15)) AS UBIGINT)``."""
     c = F.col(c) if isinstance(c, str) else c
     return _hex_long(F.md5(c), 1, 15)
-
-
-def minhash_signatures_md5(
-    df: DataFrame,
-    text_col: str = "text",
-    num_hashes: int = 64,
-    shingle_n: int = 3,
-    out: str = "minhash",
-    id_col: str = "doc_id",
-    attach: bool = True,
-) -> DataFrame:
-    """md5-twin of ``minhash_signatures`` (same plan shape: explode →
-    k fused min aggregates, map-side partial combine; see the xxh
-    docstring for the scale rationale).
-
-    signature[j] = min over shingles s of (h1 + j*h2 + j*j) mod P48,
-    h1/h2 = 12-hex-char halves of md5(shingle string). Docs with no
-    shingles share the max-long sentinel signature (as in the xxh
-    path). One md5 per shingle, k arithmetic slots derived from it —
-    NOT k digests per shingle.
-    """
-    exploded = df.select(F.col(id_col), tokenize(text_col).alias("_toks")).select(
-        F.col(id_col),
-        F.explode_outer(shingles(F.col("_toks"), shingle_n)).alias("_s"),
-    )
-    d = F.md5(F.col("_s"))
-    hashed = exploded.select(
-        F.col(id_col),
-        _hex_long(d, 1, 12).alias("_h1"),
-        _hex_long(d, 13, 12).alias("_h2"),
-    )
-    # NULL shingle (explode_outer of an empty doc) → NULL h1/h2 → NULL
-    # slot → min skips it → COALESCE sentinel, exactly as the xxh path.
-    # The k agg/array expressions are JVM-parsed SQL strings: building
-    # 64 Column-API trees cost ~1.2s of driver time per call (guide §1
-    # — construction is charged to the query by the bench timer).
-    aggs = [
-        F.expr(f"min((_h1 + {j}L * _h2 + {j * j}L) % {P48}L)").alias(f"_m{j}")
-        for j in range(num_hashes)
-    ]
-    sig = F.expr(
-        "array("
-        + ", ".join(
-            f"coalesce(_m{j}, {_SIG_SENTINEL}L)" for j in range(num_hashes)
-        )
-        + ")"
-    )
-    sig_rows = hashed.groupBy(id_col).agg(*aggs).select(F.col(id_col), sig.alias(out))
-    if not attach:
-        # (id, signature) only — the LSH banding path needs nothing
-        # else, and the join back onto ``df`` is a whole extra join
-        # whose payload the banding immediately projects away
-        return sig_rows
-    return df.join(sig_rows, id_col)
-
-
-def minhash_dedup_md5(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.8,
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_n: int = 3,
-    cc_max_rounds: int = 16,
-) -> DataFrame:
-    """md5-twin of ``minhash_dedup`` — the variant the driver's DuckDB
-    oracle replays end-to-end (signatures, band buckets, Jaccard
-    verify, transitive-closure components, min-id representative).
-
-    The candidate pairs are materialized (best-effort checkpoint) so
-    the verify stage can shingle ONLY candidate docs — see
-    ``ngram_jaccard(prefilter=True)``."""
-    sigs = minhash_signatures_md5(
-        df, text_col, num_hashes, shingle_n, id_col=id_col, attach=False
-    )
-    pairs = _checkpoint_if_possible(
-        lsh_candidate_pairs(
-            sigs, id_col, "minhash", bands, num_hashes // bands, hasher="md5"
-        )
-    )
-    dupes = ngram_jaccard(
-        pairs, df, id_col, text_col, shingle_n, hasher="md5", prefilter=True
-    ).where(F.col("jaccard") >= threshold)
-    comp = duplicate_components(dupes, max_rounds=cc_max_rounds)
-    losers = comp.where(F.col("rep") < F.col("node")).select(
-        F.col("node").alias(id_col)
-    )
-    return df.join(losers, id_col, "left_anti")
-
-
-def simhash_md5(df: DataFrame, text_col: str = "text", out: str = "simhash") -> DataFrame:
-    """md5-twin of ``simhash_xxh``: 60-bit SimHash (bits 60-63 always
-    zero) over md5-derived token hashes; same vectorized numpy
-    bit-vote. The DuckDB oracle restates the vote as 60 conditional
-    SUMs per doc — bit-exact."""
-    df = df.withColumn("_sh_toks", tokenize(text_col))
-    hashes = F.transform(F.col("_sh_toks"), lambda t: md5_hash60(t))
-    return df.withColumn(out, _bitvote_udf(hashes)).drop("_sh_toks")
 
 
 def exact_dedup(
@@ -298,71 +186,64 @@ def minhash_signatures(
     text_col: str = "text",
     num_hashes: int = 64,
     shingle_n: int = 3,
-    seed: int = 42,
     out: str = "minhash",
     id_col: str = "doc_id",
-    attach: bool = True,
+    hasher: str = "xxh64",
 ) -> DataFrame:
-    """k-permutation MinHash over word shingles, all JVM-side.
-
-    signature[i] = min over shingles s of xxhash64(h(s), seed+i)
-
-    Re-hashing with the slot index as a second xxhash64 argument gives
-    a fully-mixing minwise family. (A linear-congruential family
-    (a*h+b) mod M over 31-bit inputs wraps the modulus at most once —
-    piecewise-monotone, slots correlate, and real shingle sets showed
-    agreement far below the Jaccard expectation.)
+    """k-slot MinHash over word shingles, all JVM-side; returns
+    ``(id_col, out)`` rows (the LSH banding needs nothing else, so the
+    signature is not joined back onto ``df``). Slot families: module
+    docstring.
 
     Physical shape: EXPLODE the shingle hashes to narrow (id, hash)
     rows, one hash-aggregate with k fused min() expressions — all
-    inside whole-stage codegen — then join the signature back on id.
-    (Array-lambda variants run interpreted, with no common-subexpression
-    elimination, and profiled ~10x slower.) The exploded exchange
-    carries two longs per shingle and partial min() combines map-side,
-    so the shuffle stays tiny even when documents are megabytes.
-    Docs with no shingles (empty/whitespace text) share the max-long
-    sentinel signature, so ALL empty docs collapse into one
-    representative downstream — intended dedup semantics.
+    inside whole-stage codegen. (Array-lambda variants run
+    interpreted, with no common-subexpression elimination, and
+    profiled ~10x slower.) The exploded exchange carries one or two
+    values per shingle and partial min() combines map-side, so the
+    shuffle stays tiny even when documents are megabytes. Docs with no
+    shingles share the sentinel signature, so ALL empty docs collapse
+    into one representative downstream — intended dedup semantics.
     """
     # tokenize ONCE into a bound column: expressions inlined into an
     # interpreted lambda re-evaluate per element access (the regex split
     # would otherwise run 3x per shingle — profiled 6x slower)
-    exploded = (
-        df.select(F.col(id_col), tokenize(text_col).alias("_toks"))
-        .select(
-            F.col(id_col),
-            F.explode_outer(shingle_hashes(F.col("_toks"), shingle_n)).alias("_h"),
-        )
+    exploded = df.select(F.col(id_col), tokenize(text_col).alias("_toks")).select(
+        F.col(id_col),
+        F.explode_outer(_gram_hashes(F.col("_toks"), shingle_n, hasher)).alias("_h"),
     )
-    # xxhash64 silently skips NULL args (never returns NULL), so the
-    # no-shingle row from explode_outer must be masked explicitly or
-    # empty/NULL docs would get a real-looking signature of hash(seed).
-    # JVM-parsed SQL strings for the k aggs — see the md5 twin for the
-    # construction-cost rationale. CAST pins the seed literal to INT,
-    # the type F.lit(seed + i) produced (xxhash64 is type-sensitive).
-    def _seed_lit(v: int) -> str:
-        # match F.lit's type choice: INT when it fits, else BIGINT
-        return f"CAST({v} AS INT)" if -(2**31) <= v < 2**31 else f"{v}L"
+    if hasher == "md5":
+        # one digest per shingle, split into two 48-bit halves; the
+        # no-shingle row from explode_outer gives NULL halves → NULL
+        # slots → min skips them → coalesce to the sentinel below
+        exploded = exploded.select(
+            F.col(id_col),
+            _hex_long(F.col("_h"), 1, 12).alias("_h1"),
+            _hex_long(F.col("_h"), 13, 12).alias("_h2"),
+        )
 
-    aggs = [
-        F.expr(
-            "min(CASE WHEN _h IS NOT NULL "
-            f"THEN xxhash64(_h, {_seed_lit(seed + i)}) END)"
-        ).alias(f"_m{i}")
-        for i in range(num_hashes)
-    ]
-    sentinel = (1 << 63) - 1
+    def slot(i: int) -> str:
+        if hasher == "md5":
+            return f"(_h1 + {i}L * _h2 + {i * i}L) % {P48}L"
+        # xxhash64 silently skips NULL args (never returns NULL), so the
+        # no-shingle row must be masked explicitly or empty/NULL docs
+        # would get a real-looking signature of hash(seed). CAST pins
+        # the seed literal to INT (xxhash64 is type-sensitive).
+        return (
+            "CASE WHEN _h IS NOT NULL "
+            f"THEN xxhash64(_h, CAST({_MINHASH_SEED + i} AS INT)) END"
+        )
+
+    # The k agg/array expressions are JVM-parsed SQL strings: building
+    # 64 Column-API trees cost ~1.2s of driver time per call (guide §1
+    # — construction is charged to the query by the bench timer).
+    aggs = [F.expr(f"min({slot(i)})").alias(f"_m{i}") for i in range(num_hashes)]
     sig = F.expr(
         "array("
-        + ", ".join(f"coalesce(_m{i}, {sentinel}L)" for i in range(num_hashes))
+        + ", ".join(f"coalesce(_m{i}, {_SIG_SENTINEL}L)" for i in range(num_hashes))
         + ")"
     )
-    sig_rows = (
-        exploded.groupBy(id_col).agg(*aggs).select(F.col(id_col), sig.alias(out))
-    )
-    if not attach:
-        return sig_rows  # see the md5 twin: banding needs (id, sig) only
-    return df.join(sig_rows, id_col)
+    return exploded.groupBy(id_col).agg(*aggs).select(F.col(id_col), sig.alias(out))
 
 
 def lsh_candidate_pairs(
@@ -384,10 +265,11 @@ def lsh_candidate_pairs(
 
     The banded explode is ONE JVM-parsed SQL expression (identical
     tree to the per-band Column-API build; construction cost — see
-    ``minhash_signatures_md5``).
+    ``minhash_signatures``).
     """
     from turboxsl_spark.operators.similarity import _sql_ident
 
+    _check_hasher(hasher)
     sc = _sql_ident(sig_col)
 
     def bucket_sql(b: int) -> str:
@@ -432,11 +314,11 @@ def ngram_jaccard(
 ) -> DataFrame:
     """Exact n-gram Jaccard for candidate pairs (the verify stage).
 
-    Computed over 64-bit shingle hashes (no shingle strings built, long
-    arrays intersect ~10x faster; 64-bit collisions are negligible).
-    ``hasher="md5"`` uses md5-hex shingle identities instead — the
-    engine-portable twin the DuckDB oracle reproduces; same Jaccard
-    (identity sets are identical up to vanishing digest collisions).
+    Computed over the shingle identities of ``_gram_hashes``: 64-bit
+    hashes for xxh64 (no shingle strings built, long arrays intersect
+    ~10x faster; 64-bit collisions are negligible), md5 hex digests
+    for md5 (what the DuckDB oracle reproduces). Both give the same
+    Jaccard up to vanishing digest collisions.
 
     ``prefilter=True`` semi-joins ``docs`` to the ids appearing in
     ``pairs`` BEFORE tokenizing/shingling, so the (interpreted,
@@ -456,24 +338,17 @@ def ngram_jaccard(
         # no broadcast hint: AQE broadcasts the id set when it is small
         # and falls back to a shuffled semi-join when it is not
         docs = docs.join(ids, docs[id_col] == ids["_jid"], "left_semi")
-    if hasher == "md5":
-        ident = F.transform(
-            shingles(F.col("_toks"), shingle_n), lambda s: F.md5(s)
-        )
-        empty = F.array().cast("array<string>")
-    else:
-        ident = shingle_hashes(F.col("_toks"), shingle_n)
-        empty = F.array().cast("array<bigint>")
     sh = docs.select(
-        F.col(id_col).alias("_jid"), tokenize(text_col).alias("_toks")
+        F.col(id_col).alias("_jid"),
+        # NULL text → NULL token array, which would make the Jaccard
+        # NULL and silently exempt NULL-text docs from dedup; coalesce
+        # to NO tokens instead (→ the empty shingle set), so contentless
+        # docs (NULL or empty) compare as jaccard 1.0 — consistent with
+        # the signature stage, where they share the sentinel signature
+        F.coalesce(tokenize(text_col), F.array().cast("array<string>")).alias("_toks"),
     ).select(
         "_jid",
-        # NULL text → NULL token array → NULL shingle set, which would
-        # make the Jaccard NULL and silently exempt NULL-text docs from
-        # dedup; coalesce to the EMPTY set instead, so contentless docs
-        # (NULL or empty) compare as jaccard 1.0 — consistent with the
-        # signature stage, where they share the sentinel signature
-        F.coalesce(F.array_distinct(ident), empty).alias("_sh"),
+        F.array_distinct(_gram_hashes(F.col("_toks"), shingle_n, hasher)).alias("_sh"),
     )
     out = (
         pairs.join(sh.withColumnRenamed("_jid", "id_a").withColumnRenamed("_sh", "sh_a"), "id_a")
@@ -561,21 +436,28 @@ def minhash_dedup(
     bands: int = 16,
     shingle_n: int = 3,
     cc_max_rounds: int = 16,
+    hasher: str = "xxh64",
 ) -> DataFrame:
     """Full near-dup pipeline: sign → LSH buckets → Jaccard verify →
     connected components (label-prop + pointer-jump to fixpoint) →
-    keep the min-id representative of each component. Candidate pairs
-    are materialized so the verify shingles only candidate docs
-    (``ngram_jaccard(prefilter=True)``)."""
+    keep the min-id representative of each component. ``hasher``
+    picks the family for all three hashing stages; with ``"md5"`` the
+    driver's DuckDB oracle replays the whole pipeline end-to-end.
+
+    The candidate pairs are materialized (best-effort checkpoint) so
+    the verify stage can shingle ONLY candidate docs — see
+    ``ngram_jaccard(prefilter=True)``."""
     sigs = minhash_signatures(
-        df, text_col, num_hashes, shingle_n, id_col=id_col, attach=False
+        df, text_col, num_hashes, shingle_n, id_col=id_col, hasher=hasher
     )
     pairs = _checkpoint_if_possible(
-        lsh_candidate_pairs(sigs, id_col, "minhash", bands, num_hashes // bands)
+        lsh_candidate_pairs(
+            sigs, id_col, "minhash", bands, num_hashes // bands, hasher=hasher
+        )
     )
-    dupes = ngram_jaccard(pairs, df, id_col, text_col, prefilter=True).where(
-        F.col("jaccard") >= threshold
-    )
+    dupes = ngram_jaccard(
+        pairs, df, id_col, text_col, shingle_n, hasher=hasher, prefilter=True
+    ).where(F.col("jaccard") >= threshold)
     comp = duplicate_components(dupes, max_rounds=cc_max_rounds)
     losers = comp.where(F.col("rep") < F.col("node")).select(
         F.col("node").alias(id_col)
@@ -604,14 +486,22 @@ def _bitvote_udf(token_hashes: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-def simhash_xxh(df: DataFrame, text_col: str = "text", out: str = "simhash") -> DataFrame:
-    """Deterministic SimHash: JVM xxhash64 per token, numpy bit-voting.
+def simhash(
+    df: DataFrame, text_col: str = "text", out: str = "simhash", hasher: str = "xxh64"
+) -> DataFrame:
+    """Deterministic SimHash: one JVM hash per token, numpy bit-voting.
+
+    xxh64 hashes each token with xxhash64 (64-bit signature); md5 with
+    ``md5_hash60``, so the signature is 60-bit (bits 60-63 always zero)
+    and the DuckDB oracle restates the vote as 60 conditional SUMs per
+    doc — bit-exact.
 
     Tokens are materialized into a bound column first — an inlined
     tokenizer expression would re-run the regex split per element
     access inside the interpreted transform lambda."""
+    token_hash = md5_hash60 if _check_hasher(hasher) == "md5" else F.xxhash64
     df = df.withColumn("_sh_toks", tokenize(text_col))
-    hashes = F.transform(F.col("_sh_toks"), lambda t: F.xxhash64(t))
+    hashes = F.transform(F.col("_sh_toks"), lambda t: token_hash(t))
     return df.withColumn(out, _bitvote_udf(hashes)).drop("_sh_toks")
 
 
@@ -757,9 +647,9 @@ def decontaminate(
     broadcasts that side too. No all-pairs operation anywhere.
 
     ``use_hashes=True`` matches shingles by 64-bit xxhash64 of the
-    token tuple (``shingle_hashes`` — no string assembly, negligible
-    collision rate); ``False`` uses the literal shingle strings (the
-    SQL-expressible twin the driver oracle checks).
+    token tuple (``_gram_hashes`` with xxh64 — no string assembly,
+    negligible collision rate); ``False`` uses the literal shingle
+    strings (the SQL-expressible form the driver oracle checks).
 
     ``bloom_prefilter_m``: optional LOSSLESS accelerator for the
     shuffled path — a Bloom filter (``sketches.bloom_build``, m bits /
@@ -772,19 +662,22 @@ def decontaminate(
     shingles through the shuffle instead of all of them. Building the
     filter runs one bounded eager job (collect of m/32 longs).
     """
-    shingler = shingle_hashes if use_hashes else shingles
+
+    def shingler(toks: Column) -> Column:
+        return _gram_hashes(toks, n, "xxh64") if use_hashes else shingles(toks, n)
+
     # materialize tokens into a bound column BEFORE the shingle
     # higher-order lambda: an inlined tokenize() re-evaluates its
     # regex split per element access inside the interpreted transform
     # (measured 8.4s → ~1s for the sf0.1 doc side)
     bench_sh = (
         benchmark.select(tokenize(F.col(bench_text_col)).alias("_toks"))
-        .select(F.explode(shingler(F.col("_toks"), n)).alias("_sh"))
+        .select(F.explode(shingler(F.col("_toks"))).alias("_sh"))
         .distinct()
     )
     doc_sh = docs.select(
         F.col(id_col), tokenize(F.col(text_col)).alias("_toks")
-    ).select(F.col(id_col), F.explode(shingler(F.col("_toks"), n)).alias("_sh"))
+    ).select(F.col(id_col), F.explode(shingler(F.col("_toks"))).alias("_sh"))
     if bloom_prefilter_m is not None:
         from turboxsl_spark.operators.sketches import bloom_build, bloom_probe
 

@@ -275,6 +275,12 @@ def _ceil_rank(q: float, n: int) -> int:
     return max(1, math.ceil(q * n))
 
 
+# Largest k ``global_topk`` accepts: its ≤k rows are collected to the
+# driver and re-parallelized from a Python list, so k bounds driver
+# memory. Rank a larger prefix with ``global_rank`` + a filter instead.
+TOPK_MAX_K = 10_000
+
+
 def global_topk(
     df: DataFrame,
     order: Sequence[Column],
@@ -291,7 +297,10 @@ def global_topk(
     and bounded by k — the previous distributed phase 2
     (checkpoint + offset job + window) spent ~4 extra Spark jobs
     re-ranking rows the driver had just merged (r06, guide §1.2).
+    ``k`` must lie in ``1..TOPK_MAX_K`` (ValueError otherwise).
     """
+    if not 1 <= k <= TOPK_MAX_K:
+        raise ValueError(f"global_topk k must be in 1..{TOPK_MAX_K}, got {k}")
     spark = df.sparkSession
     rows = df.orderBy(*order).limit(k).collect()  # ≤ k rows, sorted
     schema = df.schema.add(StructField(out, LongType(), True))
