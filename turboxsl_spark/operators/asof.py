@@ -30,17 +30,25 @@ transposed to a 10^9-turn conversation) collapses the plain form to one
 task; time-bucket salting bounds every partition and merges carry-in
 facts across buckets in a second, tiny phase (the two-phase merge of
 ``skew.py``).
+
+Plans are built as SQL text: each Dataset step (the two union sides,
+the fill, the projection) is one ``selectExpr``/``where`` whose
+expressions the JVM parses, instead of a tree of Python ``Column``
+calls that each cross Py4J. The build runs serially on the driver
+while every core waits for the plan, so this is the one place a
+per-call cost multiplies: ~30 Py4J calls per plain build where
+Columns took ~400. Every column name enters the text through
+``skew._q`` (backtick-quoted, an inner backtick doubled), so names with
+spaces, dots or backticks resolve as the same plain column.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
+from pyspark.sql import DataFrame
 
-from turboxsl_spark.operators.skew import _running, _two_phase
+from turboxsl_spark.operators.skew import _check_chunk, _q, _running, _two_phase
 
 
 def _union_sides(
@@ -68,33 +76,23 @@ def _union_sides(
     else:
         fact_rank = 1 if not strict else 0
     spine_rank = 1 - fact_rank
-    seq = (
-        F.col(fact_seq_col).cast("long") if fact_seq_col else F.lit(0).cast("long")
+    seq = _q(fact_seq_col) if fact_seq_col else "0"
+    fields = ", ".join(
+        [f"{_q(ts_col)} AS _fts"] + [f"{_q(c)} AS {_q('_v_' + c)}" for c in value_cols]
     )
-    struct_type = T.StructType(
-        [T.StructField("_fts", facts.schema[ts_col].dataType)]
-        + [T.StructField(f"_v_{c}", facts.schema[c].dataType) for c in value_cols]
+    ts = f"{_q(ts_col)} AS _asof_ts"
+    qkeys = list(map(_q, keys))
+    f_side = facts.selectExpr(
+        *qkeys, ts, f"{fact_rank} AS _side", f"CAST({seq} AS BIGINT) AS _seq",
+        f"struct({fields}) AS _fact",
     )
-    f_side = facts.select(
-        *[F.col(k) for k in keys],
-        F.col(ts_col).alias("_asof_ts"),
-        F.lit(fact_rank).alias("_side"),
-        seq.alias("_seq"),
-        F.struct(
-            F.col(ts_col).alias("_fts"),
-            *[F.col(c).alias(f"_v_{c}") for c in value_cols],
-        ).alias("_fact"),
-        *[F.lit(None).cast(spine.schema[c].dataType).alias(f"_s_{c}") for c in spine_cols],
+    # each side's missing columns become typed NULLs: the spine side's
+    # _fact, the fact side's _s_* copies of the spine row
+    s_side = spine.selectExpr(
+        *qkeys, ts, f"{spine_rank} AS _side", "CAST(0 AS BIGINT) AS _seq",
+        *[f"{_q(c)} AS {_q('_s_' + c)}" for c in spine_cols],
     )
-    s_side = spine.select(
-        *[F.col(k) for k in keys],
-        F.col(ts_col).alias("_asof_ts"),
-        F.lit(spine_rank).alias("_side"),
-        F.lit(0).cast("long").alias("_seq"),
-        F.lit(None).cast(struct_type).alias("_fact"),
-        *[F.col(c).alias(f"_s_{c}") for c in spine_cols],
-    )
-    return f_side.unionByName(s_side), spine_cols, spine_rank
+    return f_side.unionByName(s_side, allowMissingColumns=True), spine_cols, spine_rank
 
 
 def _project_out(
@@ -107,27 +105,23 @@ def _project_out(
     tolerance_s: float | None,
     direction: str,
 ) -> DataFrame:
-    ff_ts = F.col("_ff._fts")
+    kept = lambda e: e
     if tolerance_s is not None:
         # freshness judged on the matched fact's own timestamp — the
         # same struct the values come from, so a stale fact nulls out
         # values AND timestamp together
-        tol = F.lit(int(tolerance_s * 1_000_000))
-        spine_us = F.unix_micros(F.col("_asof_ts").cast("timestamp"))
-        fact_us = F.unix_micros(ff_ts.cast("timestamp"))
+        tol = int(tolerance_s * 1_000_000)
+        spine_us = "unix_micros(CAST(_asof_ts AS TIMESTAMP))"
+        fact_us = "unix_micros(CAST(_ff._fts AS TIMESTAMP))"
         if direction == "backward":
-            fresh = fact_us >= spine_us - tol
+            fresh = f"{fact_us} >= {spine_us} - {tol}"
         else:
-            fresh = fact_us <= spine_us + tol
-        val = lambda c: F.when(fresh, F.col(f"_ff._v_{c}"))
-        ts_val = F.when(fresh, ff_ts)
-    else:
-        val = lambda c: F.col(f"_ff._v_{c}")
-        ts_val = ff_ts
-    return filled.where(F.col("_side") == spine_rank).select(
-        *[F.col(f"_s_{c}").alias(c) for c in spine_cols],
-        *[val(c).alias(f"{c}{suffix}") for c in value_cols],
-        *([ts_val.alias(fact_ts_out)] if fact_ts_out else []),
+            fresh = f"{fact_us} <= {spine_us} + {tol}"
+        kept = lambda e: f"CASE WHEN {fresh} THEN {e} END"
+    return filled.where(f"_side = {spine_rank}").selectExpr(
+        *[f"{_q('_s_' + c)} AS {_q(c)}" for c in spine_cols],
+        *[f"{kept('_ff.' + _q('_v_' + c))} AS {_q(c + suffix)}" for c in value_cols],
+        *([f"{kept('_ff._fts')} AS {_q(fact_ts_out)}"] if fact_ts_out else []),
     )
 
 
@@ -166,6 +160,7 @@ def asof_join(
     ``tolerance_s`` bounds the lookback/lookahead (pd.merge_asof-style):
     a fact farther than ``tolerance_s`` from the spine ts is treated as
     absent — stale features become NULL instead of silently ancient.
+    A negative ``tolerance_s`` raises ``ValueError``, as in pd.merge_asof.
     """
     return _asof(
         spine, facts, on, ts_col, value_cols, strict, suffix, fact_ts_out,
@@ -202,6 +197,8 @@ def asof_join_salted(
     ``chunk_s`` sets the skew bound: rows per task ≤ rows per
     ``(key, chunk_s)`` window. Pick it from the key's peak event rate
     (e.g. 1 day at 10^4 turns/day ≈ 10^4-row partitions).
+    It must be positive and finite (at least 1 µs); anything else
+    raises ``ValueError`` when the plan is built.
     """
     return _asof(
         spine, facts, on, ts_col, value_cols, strict, suffix, fact_ts_out,
@@ -227,6 +224,13 @@ def _asof(
     whole key (``chunk_s=None``) or salted by ``chunk_s`` time buckets."""
     if direction not in ("backward", "forward"):
         raise ValueError(f"direction must be backward|forward, got {direction!r}")
+    if tolerance_s is not None and not tolerance_s >= 0:
+        raise ValueError(f"tolerance_s must be >= 0, got {tolerance_s!r}")
+    if chunk_s is not None:
+        _check_chunk("chunk_s", chunk_s)
+        width = int(chunk_s * 1_000_000)
+        if width < 1:
+            raise ValueError(f"chunk_s must be at least 1 µs, got {chunk_s!r}")
     keys = [on] if isinstance(on, str) else list(on)
     if value_cols is None:
         value_cols = [c for c in facts.columns if c not in keys and c != ts_col]
@@ -237,11 +241,9 @@ def _asof(
     op = "last" if direction == "backward" else "first"
     order = ["_asof_ts", "_side", "_seq"]
     if chunk_s is None:
-        w = Window.partitionBy(*keys).orderBy(*order)
-        filled = unioned.select("*", _running(op, "_fact", w).alias("_ff"))
+        filled = unioned.selectExpr("*", f"{_running(op, '_fact', keys, order)} AS _ff")
     else:
-        micros = F.unix_micros(F.col("_asof_ts").cast("timestamp"))
-        bucket = F.floor(micros / F.lit(int(chunk_s * 1_000_000))).cast("long")
+        bucket = f"CAST(FLOOR(unix_micros(CAST(_asof_ts AS TIMESTAMP)) / {width}) AS BIGINT)"
         filled = _two_phase(unioned, keys, bucket, order, "_fact", op, "_ff")
     return _project_out(
         filled, spine_cols, spine_rank, value_cols, suffix, fact_ts_out,
