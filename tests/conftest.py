@@ -12,6 +12,25 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def py4j_calls(monkeypatch):
+    """A one-item list counting the Py4J method-call commands (``c\n``)
+    the driver sends while the test runs; set ``[0] = 0`` to restart.
+    A plan build runs on the driver while every core waits, so the
+    budget tests cap this count per build."""
+    from py4j.clientserver import ClientServerConnection
+
+    calls = [0]
+    send = ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        calls[0] += command.startswith("c\n")
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    return calls
+
+
 def assert_frames_match(
     spark_pdf: pd.DataFrame,
     ref_pdf: pd.DataFrame,

@@ -349,32 +349,23 @@ def test_asof_salted_keeps_null_keys_and_null_ts(spark, frames, direction):
     )
 
 
-def test_plan_build_py4j_budget(spark, frames, monkeypatch):
+def test_plan_build_py4j_budget(spark, frames, py4j_calls):
     """Each as-of build runs on the driver while every core waits, so
     its plan is SQL text parsed by the JVM: one Py4J call per Dataset
     step, not one per Column node. Built from Python Columns (the
     previous form), one build took 480 (plain) and 646 (salted) Py4J
     calls on the benchmark's asof_write inputs and 381 and 540 on these
     frames; as SQL text they take 32 and 59 here."""
-    from py4j.clientserver import ClientServerConnection
-
     spine, facts = (spark.createDataFrame(f) for f in frames)
     kw = dict(
         on="conv_id", ts_col="ts", value_cols=["value", "state"], strict=True,
         fact_seq_col="fact_id",
     )
-    calls = [0]
-    send = ClientServerConnection.send_command
-
-    def counting(self, command, *args, **kwargs):
-        calls[0] += command.startswith("c\n")
-        return send(self, command, *args, **kwargs)
-
-    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
     for op, extra, budget in (
         (asof_join, {}, 150),
         (asof_join_salted, {"chunk_s": 300.0}, 200),
     ):
-        calls[0] = 0
+        py4j_calls[0] = 0
         op(spine, facts, **kw, **extra)
-        assert calls[0] <= budget, f"{op.__name__}: {calls[0]} Py4J calls > {budget}"
+        n = py4j_calls[0]
+        assert n <= budget, f"{op.__name__}: {n} Py4J calls > {budget}"

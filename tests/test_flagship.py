@@ -105,3 +105,76 @@ def test_n_tokens_whitespace_edge_cases(spark):
     want = reference_features(pdf)
     assert got.sort_values("turn_idx")["n_tokens"].tolist() == [0, 0, 0, 1, 3, 3, 1, 3]
     assert_frames_match(got, want, KEYS, float_cols=FLOATS)
+
+
+@pytest.fixture(scope="module")
+def small_pdf():
+    return gen_transcripts_pdf(n_convs=20, seed=13, mega_frac=0.0)
+
+
+def test_build_py4j_budget(spark, small_pdf, py4j_calls):
+    """The feature plan is built on the driver while every core waits,
+    so it is SQL text: one JVM-parsed ``selectExpr`` per level, about 50
+    Py4J calls per build. Assembled from Python Columns (the previous
+    form), the default build made 394."""
+    df = spark.createDataFrame(small_pdf, schema=TRANSCRIPT_SCHEMA)
+    py4j_calls[0] = 0
+    build_features(df, FeatureSpec())
+    assert py4j_calls[0] <= 60, f"{py4j_calls[0]} Py4J calls > 60"
+
+
+@pytest.mark.parametrize("name", ["src.file", "x`y", "a b"])
+def test_pass_through_column_names(spark, small_pdf, name):
+    """An input column of any name is kept, in place, with its values."""
+    pdf = small_pdf.copy()
+    pdf.insert(2, name, [f"v{i}" for i in range(len(pdf))])
+    df = spark.createDataFrame(pdf)
+    out = build_features(df, FeatureSpec())
+    kept = [c for c in pdf.columns if c != "text"]
+    assert out.columns[: len(kept)] == kept
+    assert out.columns[len(kept):] == FLAGSHIP_FEATURE_COLS
+    got = out.toPandas().sort_values(KEYS).reset_index(drop=True)
+    want = pdf.sort_values(KEYS).reset_index(drop=True)
+    assert got[name].tolist() == want[name].tolist()
+
+
+# templates whose literal text needs SQL string escaping
+TEMPLATES = [
+    "{{{role}}} #{position}: {text_norm}}}",
+    "it's {role}'s turn '{position}'",
+    r"C:\tmp\{role}\n\\{text_norm}\'",
+    "100% {text_norm} %s %% → 日本語 ü {position}",
+]
+
+
+@pytest.mark.parametrize("timeout_s", [60, 1800])
+@pytest.mark.parametrize("template", TEMPLATES)
+def test_template_and_timeout_parity(spark, small_pdf, template, timeout_s):
+    """``rendered``, ``digest`` and ``session_id`` equal the reference's
+    for any template text and session timeout."""
+    df = spark.createDataFrame(small_pdf, schema=TRANSCRIPT_SCHEMA)
+    spec = FeatureSpec(session_timeout_s=timeout_s, template=template)
+    cols = [*KEYS, "session_id", "rendered", "digest"]
+    got = build_features(df, spec).select(*cols).toPandas()
+    want = reference_features(small_pdf, timeout_s, template)[cols]
+    assert_frames_match(got, want, KEYS)
+
+
+def test_spec_variant_schema(spark, small_pdf):
+    """Leads on, raw text kept, no digest, no extra running features:
+    the same columns, order and types as the Column-built plan had."""
+    df = spark.createDataFrame(small_pdf, schema=TRANSCRIPT_SCHEMA)
+    spec = FeatureSpec(leads=True, keep_text=True, digest=False, extra_running=False)
+    got = [(f.name, f.dataType.simpleString()) for f in build_features(df, spec).schema]
+    assert got == [
+        ("conv_id", "string"), ("turn_idx", "int"), ("role", "string"),
+        ("text", "string"), ("tool", "string"), ("ts", "timestamp"),
+        ("text_norm", "string"), ("text_len", "int"), ("n_tokens", "int"),
+        ("position", "int"),
+        ("role_lag1", "string"), ("role_lead1_future", "string"),
+        ("role_lag2", "string"), ("role_lead2_future", "string"),
+        ("text_len_lag1", "int"), ("text_len_lead1_future", "int"),
+        ("text_len_lag2", "int"), ("text_len_lead2_future", "int"),
+        ("gap_s", "double"), ("session_id", "int"), ("tool_ffill", "string"),
+        ("rendered", "string"),
+    ]

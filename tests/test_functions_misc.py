@@ -203,3 +203,44 @@ def test_xml_comment_and_pi_validity(spark):
     for r, (_, _, _, want_cm, want_pi) in zip(got, rows):
         assert r["cm"] == want_cm, (r["id"], r["cm"], want_cm)
         assert r["pi"] == want_pi, (r["id"], r["pi"], want_pi)
+
+
+def test_text_builders_sql_form_matches_column_form(spark):
+    """Each flagship text builder's SQL-text form optimizes to the same
+    expression as its Column form; the two share the whitespace regex
+    and the template parser."""
+    import re
+
+    from turboxsl_spark.functions.strings import (
+        avt_template,
+        avt_template_sql,
+        md5_hex,
+        md5_hex_sql,
+        normalize_space,
+        normalize_space_sql,
+    )
+    from turboxsl_spark.functions.text_analysis import (
+        normalized_token_count,
+        normalized_token_count_sql,
+    )
+
+    df = spark.range(3).selectExpr("CAST(id AS STRING) AS t", "CAST(id AS INT) AS i")
+    tmpl = "{{x}} it's {a}\\ 100% → ü {b}}}"
+    pairs = [
+        (normalize_space("t"), normalize_space_sql("`t`")),
+        (normalized_token_count("t"), normalized_token_count_sql("`t`")),
+        (md5_hex("t", "i"), md5_hex_sql("`t`", "`i`")),
+        (
+            avt_template(tmpl, a=F.col("t"), b=F.col("i")),
+            avt_template_sql(tmpl, a="`t`", b="`i`"),
+        ),
+        (avt_template("", a=F.col("t")), avt_template_sql("", a="`t`")),
+    ]
+
+    def optimized(d):
+        return re.sub(r"#\d+L?", "#", d._jdf.queryExecution().optimizedPlan().toString())
+
+    for col, sql in pairs:
+        assert optimized(df.select(col.alias("x"))) == optimized(df.selectExpr(f"{sql} AS x"))
+    with pytest.raises(KeyError):
+        avt_template_sql("{nope}", a="`t`")

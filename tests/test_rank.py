@@ -151,6 +151,36 @@ def test_default_scratch_cluster_safety():
     assert local.startswith("/")
 
 
+def test_local_cluster_master_is_not_in_process():
+    """``local-cluster[...]`` runs executors in separate JVMs: with no
+    scratch conf, both the global-rank scratch and the dedup checkpoint
+    raise there instead of using driver- or executor-local storage."""
+    import pytest
+
+    from turboxsl_spark.operators.dedup import _reliable_checkpoint
+    from turboxsl_spark.operators.rank import _default_scratch
+
+    class _Conf:
+        def get(self, key, default=None):
+            return {"spark.master": "local-cluster[2,1,1024]"}.get(key, default)
+
+    class _SC:
+        def getCheckpointDir(self):
+            return None
+
+    class _Spark:
+        conf = _Conf()
+        sparkContext = _SC()
+
+    class _DF:
+        sparkSession = _Spark()
+
+    with pytest.raises(ValueError, match="cluster-visible"):
+        _default_scratch(_Spark(), "t_")
+    with pytest.raises(ValueError, match="cluster-visible"):
+        _reliable_checkpoint(_DF())
+
+
 def test_caseorder_keys_lower_and_upper_first(spark):
     """XSLT 1.0 case-order semantics (the reference parses the flag at
     transform.c:358-360 but its strcasecmp comparator drops it — we

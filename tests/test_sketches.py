@@ -316,3 +316,40 @@ def test_cm_weighted_build_equals_occurrence_build(spark):
     assert cm_build(df, "key", w=64, d=4, salt="wv") == cm_build(
         agg, "key", w=64, d=4, salt="wv", weight_col="n"
     )
+
+
+@pytest.mark.parametrize(
+    "values",
+    [
+        [-(2**31), 2**31 - 1, 0],
+        [2**31],
+        [1, -(2**31) - 1],
+        [-(2**63), 2**63 - 1],
+        [[1, 2], [3, 2**31]],
+        [[-(2**63)], [0]],
+        [[5], [-(2**31)]],
+    ],
+)
+def test_int_array_literal_matches_lit(spark, values):
+    """The one-string ``array(...)`` literal has ``F.lit``'s element
+    types (int while every value fits int32, else bigint) and values."""
+    from pyspark.sql import functions as F
+
+    from turboxsl_spark.operators.sketches import _int_array
+
+    a = spark.range(1).select(_int_array(values).alias("x"))
+    b = spark.range(1).select(F.lit(values).alias("x"))
+    assert a.schema == b.schema
+    assert a.first()["x"] == b.first()["x"] == values
+
+
+def test_cm_token_freq_py4j_budget(spark, py4j_calls):
+    """The Count-Min counter matrix and the Bloom word list enter the
+    plan as one SQL string each; as ``F.lit`` of a list they cost one
+    Py4J call per element (4,236 of the 4,489 calls of this build)."""
+    import __spark_entry__ as m
+    from tests.test_plans import SF_DIR
+
+    py4j_calls[0] = 0
+    m.q_cm_token_freq(spark, SF_DIR)
+    assert py4j_calls[0] < 300, f"{py4j_calls[0]} Py4J calls >= 300"

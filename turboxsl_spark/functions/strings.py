@@ -18,6 +18,7 @@ from the XPath 1.0 spec, code not consulted for implementation):
 
 from __future__ import annotations
 
+import re
 import urllib.parse
 
 import pandas as pd
@@ -26,10 +27,28 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
+# the one whitespace-run regex of normalize-space, shared by its Column
+# and SQL-text forms
+_WS_RUN = r"\s+"
+
+
+def _sql_str(s: str) -> str:
+    """``s`` as a SQL string literal: single-quoted, backslash and quote
+    backslash-escaped and control characters as ``\\uXXXX`` (Spark's
+    default literal unescaping)."""
+    s = s.replace("\\", "\\\\").replace("'", "\\'")
+    return "'" + re.sub(r"[\x00-\x1f\x7f]", lambda m: f"\\u{ord(m[0]):04X}", s) + "'"
+
+
 def normalize_space(c: Column | str) -> Column:
     """Strip leading/trailing whitespace, collapse internal runs to one space."""
     c = F.col(c) if isinstance(c, str) else c
-    return F.trim(F.regexp_replace(c, r"\s+", " "))
+    return F.trim(F.regexp_replace(c, _WS_RUN, " "))
+
+
+def normalize_space_sql(c: str) -> str:
+    """``normalize_space`` as SQL text over the SQL expression ``c``."""
+    return f"trim(regexp_replace({c}, {_sql_str(_WS_RUN)}, ' '))"
 
 
 def xpath_translate(c: Column | str, frm: str, to: str) -> Column:
@@ -128,6 +147,11 @@ def md5_hex(*cols: Column | str) -> Column:
     return F.md5(F.concat(*[c.cast("string") for c in cs]))
 
 
+def md5_hex_sql(*cols: str) -> str:
+    """``md5_hex`` as SQL text over the SQL expressions ``cols``."""
+    return f"md5(concat({', '.join(f'CAST({c} AS STRING)' for c in cols)}))"
+
+
 @F.pandas_udf(T.StringType())
 def url_encode_udf(s: pd.Series) -> pd.Series:
     """Percent-encode (RFC 3986 unreserved kept) — vectorized via Arrow."""
@@ -208,15 +232,11 @@ def xml_pi(target: Column | str, data: Column | str) -> Column:
     return F.when(~bad, F.concat(F.lit("<?"), t, F.lit(" "), d, F.lit("?>")))
 
 
-def avt_template(template: str, **slots: Column) -> Column:
-    """Attribute-value-template expansion: ``"a {x} b {y}"`` with Columns.
-
-    The reference interpolates ``{expr}`` inside attribute values at
-    transform time; we compile the template ONCE at plan-build time into
-    a ``concat`` of literals and columns — pure JVM codegen, no UDF.
-    Doubled braces ``{{``/``}}`` emit literal braces.
-    """
-    parts: list[Column] = []
+def _avt_parts(template: str, slots) -> list[tuple[str, bool]]:
+    """The template's pieces in order: ``(text, False)`` for a literal
+    run, with ``{{``/``}}`` unescaped, and ``(name, True)`` for a
+    ``{name}`` slot, which must be one of ``slots``."""
+    parts: list[tuple[str, bool]] = []
     buf = []
     i = 0
     while i < len(template):
@@ -229,11 +249,11 @@ def avt_template(template: str, **slots: Column) -> Column:
             end = template.index("}", i)
             name = template[i + 1 : end].strip()
             if buf:
-                parts.append(F.lit("".join(buf)))
+                parts.append(("".join(buf), False))
                 buf = []
             if name not in slots:
                 raise KeyError(f"AVT slot {{{name}}} has no binding")
-            parts.append(F.coalesce(slots[name].cast("string"), F.lit("")))
+            parts.append((name, True))
             i = end + 1
         elif template.startswith("}}", i):
             buf.append("}")
@@ -242,7 +262,30 @@ def avt_template(template: str, **slots: Column) -> Column:
             buf.append(ch)
             i += 1
     if buf:
-        parts.append(F.lit("".join(buf)))
-    if not parts:
-        return F.lit("")
-    return F.concat(*parts)
+        parts.append(("".join(buf), False))
+    return parts
+
+
+def avt_template(template: str, **slots: Column) -> Column:
+    """Attribute-value-template expansion: ``"a {x} b {y}"`` with Columns.
+
+    The reference interpolates ``{expr}`` inside attribute values at
+    transform time; we compile the template ONCE at plan-build time into
+    a ``concat`` of literals and columns — pure JVM codegen, no UDF.
+    Doubled braces ``{{``/``}}`` emit literal braces; a NULL slot
+    renders as the empty string.
+    """
+    parts = [
+        F.coalesce(slots[t].cast("string"), F.lit("")) if slot else F.lit(t)
+        for t, slot in _avt_parts(template, slots)
+    ]
+    return F.concat(*parts) if parts else F.lit("")
+
+
+def avt_template_sql(template: str, **slots: str) -> str:
+    """``avt_template`` as SQL text, each slot bound to a SQL expression."""
+    parts = [
+        f"coalesce(CAST({slots[t]} AS STRING), '')" if slot else _sql_str(t)
+        for t, slot in _avt_parts(template, slots)
+    ]
+    return f"concat({', '.join(parts)})" if parts else "''"

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from turboxsl_spark.functions.strings import normalize_space
+
 # minimal stopword tables per language — n-gram/stopword-hit heuristic
 _LANG_STOPWORDS = {
     "en": ["the", "and", "of", "to", "in", "is", "that", "it", "was", "for"],
@@ -24,8 +26,7 @@ _LANG_STOPWORDS = {
 
 def token_count(c: Column | str) -> Column:
     """Whitespace token count (0 for empty/blank)."""
-    c = F.col(c) if isinstance(c, str) else c
-    return normalized_token_count(F.trim(F.regexp_replace(c, r"\s+", " ")))
+    return normalized_token_count(normalize_space(c))
 
 
 def normalized_token_count(n: Column | str) -> Column:
@@ -36,6 +37,15 @@ def normalized_token_count(n: Column | str) -> Column:
     chars = F.length(n)
     return F.when(chars == 0, F.lit(0)).otherwise(
         chars - F.length(F.replace(n, F.lit(" "), F.lit(""))) + 1
+    )
+
+
+def normalized_token_count_sql(n: str) -> str:
+    """``normalized_token_count`` as SQL text over the SQL expression
+    ``n``."""
+    return (
+        f"CASE WHEN length({n}) = 0 THEN 0 "
+        f"ELSE length({n}) - length(replace({n}, ' ', '')) + 1 END"
     )
 
 

@@ -45,8 +45,6 @@ Scale notes:
 
 from __future__ import annotations
 
-import re
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
@@ -55,7 +53,7 @@ from pyspark.sql import types as T
 
 from turboxsl_spark.functions.text_analysis import _check_hasher, _gram_hashes
 
-from .rank import SCRATCH_CONF
+from .rank import SCRATCH_CONF, _in_process_master
 
 
 def _reliable_checkpoint(df: DataFrame, optional: bool = False) -> DataFrame:
@@ -77,8 +75,8 @@ def _reliable_checkpoint(df: DataFrame, optional: bool = False) -> DataFrame:
     master = spark.conf.get("spark.master", "")
     # plain local[...] only: 'local-cluster[...]' runs executors in
     # separate JVMs, where an executor-local checkpoint has exactly the
-    # fault-tolerance hole this function exists to close (ADVICE r05)
-    if re.match(r"local(\[|$)", master):
+    # fault-tolerance hole this function exists to close
+    if _in_process_master(master):
         return df.localCheckpoint()
     sc = spark.sparkContext
     if sc.getCheckpointDir() is None:

@@ -38,6 +38,7 @@ agree even though range boundaries are SAMPLED per exchange.
 from __future__ import annotations
 
 import math
+import re
 import shutil
 import tempfile
 import uuid
@@ -72,6 +73,13 @@ def cleanup_scratch(path: str, spark=None) -> None:
 SCRATCH_CONF = "spark.turboxsl.scratchDir"
 
 
+def _in_process_master(master: str) -> bool:
+    """Whether the executors run inside the driver's JVM: a plain
+    ``local`` or ``local[...]`` master. ``local-cluster[...]`` runs them
+    in separate JVMs, so it is not one."""
+    return re.match(r"local(\[|$)", master) is not None
+
+
 def _default_scratch(spark, prefix: str) -> str:
     """Resolve a scratch location every EXECUTOR can reach.
 
@@ -86,7 +94,7 @@ def _default_scratch(spark, prefix: str) -> str:
     if base:
         return f"{base.rstrip('/')}/{prefix}{uuid.uuid4().hex}"
     master = spark.conf.get("spark.master", "")
-    if not master.startswith("local"):
+    if not _in_process_master(master):
         raise ValueError(
             f"global_rank scratch on master {master!r}: executors cannot "
             f"read the driver's temp dir — pass scratch_dir= or set "

@@ -31,6 +31,9 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from turboxsl_spark.functions.strings import _sql_str
+from turboxsl_spark.operators.skew import _q
+
 _U32 = float(1 << 32)
 # ASCII unit separator: makes the multi-key concatenation injective for
 # keys that don't themselves contain \x1f (true for ids/numeric keys).
@@ -47,12 +50,19 @@ SEP = "\x1f"
 NULL_SENTINEL = "\x00null"
 
 
-def _hash_u32(key_cols: Sequence[Column | str], salt: str) -> Column:
-    cols = [F.col(c) if isinstance(c, str) else c for c in key_cols]
-    keyed = [F.coalesce(c.cast("string"), F.lit(NULL_SENTINEL)) for c in cols]
-    digest = F.md5(F.concat_ws(SEP, F.lit(salt), *keyed))
+def _key_digest_sql(key_cols: Sequence[str], salt: str) -> str:
+    """SQL text of the hex ``md5(salt SEP key1 SEP key2 ...)``, each key
+    column cast to string and a NULL one encoded as ``NULL_SENTINEL`` —
+    the one keyed digest of the sampling and sketch families. SQL text,
+    not a ``Column`` tree, so it costs one Py4J call to build."""
+    keyed = [f"coalesce(CAST({_q(c)} AS STRING), {_sql_str(NULL_SENTINEL)})" for c in key_cols]
+    return f"md5(concat_ws({', '.join([_sql_str(SEP), _sql_str(salt), *keyed])}))"
+
+
+def _hash_u32(key_cols: Sequence[str], salt: str) -> Column:
     # first 8 hex chars → 32-bit uniform integer (conv returns string)
-    return F.conv(F.substring(digest, 1, 8), 16, 10).cast("long")
+    digest = _key_digest_sql(key_cols, salt)
+    return F.expr(f"CAST(conv(substring({digest}, 1, 8), 16, 10) AS BIGINT)")
 
 
 def hash_sample(

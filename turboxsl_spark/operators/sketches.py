@@ -34,7 +34,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from turboxsl_spark.operators.sampling import _hash_u32
+from turboxsl_spark.operators.sampling import _hash_u32, _key_digest_sql
 
 _U32 = float(1 << 32)
 
@@ -110,6 +110,19 @@ def kmv_distinct(
 BLOOM_WORD_BITS = 32
 
 
+def _int_array(values: list) -> Column:
+    """``F.lit(values)`` for a list (of lists) of ints, as ONE JVM-parsed
+    ``array(...)`` expression: ``F.lit`` of a list costs one Py4J call
+    per element. A SQL integer literal is an int when it fits int32 and
+    a bigint otherwise, as a Py4J-passed int is, so the element types
+    are ``F.lit``'s."""
+
+    def sql(v) -> str:
+        return f"array({', '.join(map(sql, v))})" if isinstance(v, list) else str(v)
+
+    return F.expr(sql(values))
+
+
 def _bit_mask(pos: Column) -> Column:
     """``1 << (pos % 32)`` as a long. ``F.shiftleft`` takes only a
     Python-int shift, so the column form goes through ``pow(2, b)`` —
@@ -117,31 +130,24 @@ def _bit_mask(pos: Column) -> Column:
     return F.pow(F.lit(2.0), (pos % BLOOM_WORD_BITS).cast("double")).cast("long")
 
 
-def _bloom_h12(key_cols: Sequence[Column | str], salt: str) -> tuple[Column, Column]:
-    """The two 48-bit halves of md5(salt SEP key...) — same NULL/SEP
-    encoding as ``sampling._hash_u32`` (injective tuple hashing)."""
-    from turboxsl_spark.operators.sampling import NULL_SENTINEL, SEP
+def _double_hash(key_cols: Sequence[str], n: int, k: int, salt: str) -> Column:
+    """``array<long>`` of pos_j = (h1 + j*h2) mod n for j < k, h1/h2 the
+    two 48-bit halves of the key digest (``sampling._key_digest_sql``,
+    the injective tuple hashing), as one JVM-parsed expression."""
+    digest = _key_digest_sql(key_cols, salt)
+    h1, h2 = (f"CAST(conv(substring({digest}, {i}, 12), 16, 10) AS BIGINT)" for i in (1, 13))
+    # the lambda variable is longer than any key name, so it shadows none
+    j = "j" * (1 + max(map(len, key_cols), default=0))
+    pos = f"({h1} + CAST({j} AS BIGINT) * {h2}) % {n}"
+    return F.expr(f"transform(sequence(0, {k - 1}), {j} -> {pos})")
 
-    cols = [F.col(c) if isinstance(c, str) else c for c in key_cols]
-    keyed = [F.coalesce(c.cast("string"), F.lit(NULL_SENTINEL)) for c in cols]
-    digest = F.md5(F.concat_ws(SEP, F.lit(salt), *keyed))
-    h1 = F.conv(F.substring(digest, 1, 12), 16, 10).cast("long")
-    h2 = F.conv(F.substring(digest, 13, 12), 16, 10).cast("long")
-    return h1, h2
 
-
-def bloom_positions(
-    key_cols: Sequence[Column | str], m: int, k: int, salt: str = ""
-) -> Column:
+def bloom_positions(key_cols: Sequence[str], m: int, k: int, salt: str = "") -> Column:
     """``array<long>`` of the key's k bit positions in an m-bit filter:
     pos_j = (h1 + j*h2) mod m (enhanced double hashing stays unbiased
     for k << 2^48). Max intermediate is h1 + (k-1)*h2 < (k)·2^48 —
     overflow-free in a long for any sane k (< 32767)."""
-    h1, h2 = _bloom_h12(key_cols, salt)
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(k - 1)),
-        lambda j: (h1 + j.cast("long") * h2) % m,
-    )
+    return _double_hash(key_cols, m, k, salt)
 
 
 def _validate_mk(m: int, k: int) -> None:
@@ -224,7 +230,7 @@ def bloom_probe(
     m = len(words) * BLOOM_WORD_BITS
     _validate_mk(m, k)
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-    lit = F.lit([int(w) for w in words])
+    lit = _int_array([int(w) for w in words])
     pos = bloom_positions(keys, m, k, salt)
     hit = F.forall(
         pos,
@@ -296,16 +302,10 @@ def bloom_probe_join(
 # every counter and every estimate exactly.
 
 
-def cm_positions(
-    key_cols: Sequence[Column | str], w: int, d: int, salt: str = ""
-) -> Column:
+def cm_positions(key_cols: Sequence[str], w: int, d: int, salt: str = "") -> Column:
     """``array<long>`` of the key's column index in each of the d rows:
     idx_j = (h1 + j*h2) mod w (the Bloom/minhash double-hash family)."""
-    h1, h2 = _bloom_h12(key_cols, salt)
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(d - 1)),
-        lambda j: (h1 + j.cast("long") * h2) % w,
-    )
+    return _double_hash(key_cols, w, d, salt)
 
 
 def _validate_wd(w: int, d: int) -> None:
@@ -389,7 +389,7 @@ def cm_estimate(
     w = len(counters[0]) if d else 0
     _validate_wd(w, d)
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-    lit = F.lit([[int(c) for c in row] for row in counters])
+    lit = _int_array([[int(c) for c in row] for row in counters])
     pos = cm_positions(keys, w, d, salt)
     ests = F.transform(
         pos,
