@@ -277,8 +277,6 @@ def q_sort_multikey(spark: SparkSession, sf_dir: str) -> DataFrame:
     exposed as a deterministic global rank — computed DISTRIBUTED via
     range-partition + local row_number + broadcast offsets (a
     no-partitionBy window would collapse to one task at scale)."""
-    import tempfile
-
     from turboxsl_spark.operators.rank import global_rank
 
     p = _t(spark, sf_dir, "part")
@@ -287,15 +285,7 @@ def q_sort_multikey(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p_retailprice").desc(),
         F.col("p_partkey").asc(),
     ]
-    # stable scratch path per sf (mode=overwrite inside) — repeated
-    # bench/driver invocations reuse one dir instead of accumulating
-    scratch = os.path.join(
-        tempfile.gettempdir(),
-        "turboxsl_rank_" + re.sub(r"[^A-Za-z0-9]+", "_", sf_dir).strip("_"),
-    )
-    return global_rank(p, order, out="sort_rank", scratch_dir=scratch).select(
-        "p_partkey", "sort_rank"
-    )
+    return global_rank(p, order, out="sort_rank").select("p_partkey", "sort_rank")
 
 
 def q_sort_caseorder(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -307,8 +297,6 @@ def q_sort_caseorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed two-phase global_rank as q_sort_multikey. Mixed-case
     keys are synthesized deterministically (even part keys lowercase
     their type) so every tie group exercises the case ordering."""
-    import tempfile
-
     from turboxsl_spark.operators.rank import caseorder_keys, global_rank
 
     p = _t(spark, sf_dir, "part")
@@ -317,11 +305,7 @@ def q_sort_caseorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise(F.col("p_type"))
     df = p.select("p_partkey", skey.alias("skey"))
     order = caseorder_keys("skey", "lower-first") + [F.col("p_partkey").asc()]
-    scratch = os.path.join(
-        tempfile.gettempdir(),
-        "turboxsl_caseorder_" + re.sub(r"[^A-Za-z0-9]+", "_", sf_dir).strip("_"),
-    )
-    return global_rank(df, order, out="sort_rank", scratch_dir=scratch).select(
+    return global_rank(df, order, out="sort_rank").select(
         "p_partkey", "skey", "sort_rank"
     )
 
@@ -512,11 +496,8 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles here so DuckDB can mirror them; ``dedup.ngram_jaccard``
     computes the same value over xxh64 or md5 shingle hashes, pinned
     in tests/test_dedup.py)."""
-    from turboxsl_spark.operators.dedup import (
-        _checkpoint_if_possible,
-        shingles,
-        tokenize,
-    )
+    from turboxsl_spark.operators.dedup import shingles, tokenize
+    from turboxsl_spark.operators.rank import _reliable_checkpoint
 
     d = _t(spark, sf_dir, "documents")
     # tokens materialized into a bound column FIRST — inlining the
@@ -526,10 +507,11 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sides of the adjacent-pair self-join, which otherwise re-runs
     # the interpreted per-shingle string assembly over every doc twice
     # (paired A/B at sf0.1: 1.28s -> 0.90s).
-    sh = _checkpoint_if_possible(
+    sh = _reliable_checkpoint(
         d.select("doc_id", tokenize(F.col("text")).alias("_toks")).select(
             "doc_id", F.array_distinct(shingles(F.col("_toks"), 3)).alias("sh")
-        )
+        ),
+        optional=True,
     )
     a = sh.selectExpr("doc_id AS id_a", "sh AS sh_a")
     b = sh.selectExpr("doc_id - 1 AS id_a", "doc_id AS id_b", "sh AS sh_b")
@@ -1051,9 +1033,8 @@ def q_cm_token_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     undercounts); equality wherever the token's d cells are
     collision-free. DuckDB rebuilds the identical counters and
     estimates — the md5 double-hash family again."""
+    from turboxsl_spark.operators.rank import _reliable_checkpoint
     from turboxsl_spark.operators.sketches import cm_build, cm_estimate
-
-    from turboxsl_spark.operators.dedup import _checkpoint_if_possible
 
     d = _t(spark, sf_dir, "documents")
     norm = F.lower(F.trim(F.regexp_replace("text", r"\s+", " ")))
@@ -1067,8 +1048,8 @@ def q_cm_token_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The rollup is materialized (bounded by |vocab|) because it has
     # TWO consumers — the eager sketch build and the output join —
     # which otherwise each re-run the full occurrence explode+agg.
-    exact = _checkpoint_if_possible(
-        toks.groupBy("tok").agg(F.count(F.lit(1)).alias("exact_cnt"))
+    exact = _reliable_checkpoint(
+        toks.groupBy("tok").agg(F.count(F.lit(1)).alias("exact_cnt")), optional=True
     )
     sketch = cm_build(exact, "tok", w=512, d=4, salt="cm_v1", weight_col="exact_cnt")
     probe = toks.where(F.col("doc_id") % 97 == 0).select("tok").distinct()

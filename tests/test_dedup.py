@@ -485,15 +485,12 @@ def test_minhash_family_is_minwise_unbiased(spark, hasher):
 
 
 def test_reliable_checkpoint_conf_resolution():
-    """VERDICT r04 item 2: off local[*], duplicate_components must use a
-    RELIABLE checkpoint into the scratch conf (or raise), never an
-    executor-local one. Mirrors test_default_scratch_cluster_safety."""
+    """VERDICT r04 item 2: off local[*], the one materialization policy
+    must use a RELIABLE checkpoint into the scratch conf (or raise),
+    never an executor-local one."""
     import pytest
 
-    from turboxsl_spark.operators.dedup import (
-        _checkpoint_if_possible,
-        _reliable_checkpoint,
-    )
+    from turboxsl_spark.operators.rank import _reliable_checkpoint
 
     class _Conf:
         def __init__(self, values):
@@ -535,12 +532,14 @@ def test_reliable_checkpoint_conf_resolution():
     assert _reliable_checkpoint(df) is df and df.calls == ["local"]
 
     # cluster master, no scratch conf → raise at plan time
-    df = _DF(_Spark({"spark.master": "yarn"}))
-    with pytest.raises(ValueError, match="cluster-visible"):
-        _reliable_checkpoint(df)
+    for master in ("yarn", "spark://host:7077"):
+        df = _DF(_Spark({"spark.master": master}))
+        with pytest.raises(ValueError, match="cluster-visible"):
+            _reliable_checkpoint(df)
+        assert df.calls == []
     # ... where the best-effort form returns df untouched instead
     df = _DF(_Spark({"spark.master": "yarn"}))
-    assert _checkpoint_if_possible(df) is df and df.calls == []
+    assert _reliable_checkpoint(df, optional=True) is df and df.calls == []
     assert df.sparkSession.sparkContext.dir is None
 
     # cluster master + conf → reliable checkpoint, dir wired once

@@ -112,13 +112,13 @@ def test_exact_quantiles_validation_and_empty(spark):
 
 
 def test_default_scratch_cluster_safety():
-    """Non-local master + no scratch_dir/conf must RAISE at plan-build
-    time (a driver-local default silently drops partitions on a real
-    cluster); the spark.turboxsl.scratchDir conf resolves to a unique
-    subdir of the configured base."""
+    """Non-local master + no scratch conf must RAISE at plan-build time
+    (a driver- or executor-local default silently drops partitions on a
+    real cluster); the spark.turboxsl.scratchDir conf resolves to a
+    subdir of the configured base, and a local master needs no conf."""
     import pytest
 
-    from turboxsl_spark.operators.rank import _default_scratch
+    from turboxsl_spark.operators.rank import SCRATCH_CONF, _reliable_checkpoint
 
     class _Conf:
         def __init__(self, values):
@@ -127,38 +127,56 @@ def test_default_scratch_cluster_safety():
         def get(self, key, default=None):
             return self._v.get(key, default)
 
+    class _SC:
+        def __init__(self):
+            self.dir = None
+
+        def getCheckpointDir(self):
+            return self.dir
+
+        def setCheckpointDir(self, d):
+            self.dir = d
+
     class _Spark:
         def __init__(self, values):
             self.conf = _Conf(values)
+            self.sparkContext = _SC()
 
-    with pytest.raises(ValueError, match="cluster-visible"):
-        _default_scratch(_Spark({"spark.master": "yarn"}), "t_")
-    with pytest.raises(ValueError, match="cluster-visible"):
-        _default_scratch(_Spark({"spark.master": "spark://host:7077"}), "t_")
-    got = _default_scratch(
-        _Spark({"spark.master": "yarn", "spark.turboxsl.scratchDir": "s3://bkt/scratch/"}),
-        "t_",
-    )
-    assert got.startswith("s3://bkt/scratch/t_") and len(got) > len("s3://bkt/scratch/t_")
-    # two resolutions must not collide
-    got2 = _default_scratch(
-        _Spark({"spark.master": "yarn", "spark.turboxsl.scratchDir": "s3://bkt/scratch"}),
-        "t_",
-    )
-    assert got != got2
-    # local master with no conf still gets a usable local tempdir
-    local = _default_scratch(_Spark({"spark.master": "local[4]"}), "t_")
-    assert local.startswith("/")
+    class _DF:
+        def __init__(self, values):
+            self.sparkSession = _Spark(values)
+            self.calls = []
+
+        def localCheckpoint(self):
+            self.calls.append("local")
+            return self
+
+        def checkpoint(self):
+            self.calls.append("reliable")
+            return self
+
+    for master in ("yarn", "spark://host:7077"):
+        df = _DF({"spark.master": master})
+        with pytest.raises(ValueError, match="cluster-visible"):
+            _reliable_checkpoint(df)
+        assert df.calls == [] and df.sparkSession.sparkContext.dir is None
+    for base in ("s3://bkt/scratch/", "s3://bkt/scratch"):
+        df = _DF({"spark.master": "yarn", SCRATCH_CONF: base})
+        assert _reliable_checkpoint(df) is df and df.calls == ["reliable"]
+        got = df.sparkSession.sparkContext.dir
+        assert got.startswith("s3://bkt/scratch/") and len(got) > len("s3://bkt/scratch/")
+    # local master with no conf still materializes, in process
+    df = _DF({"spark.master": "local[4]"})
+    assert _reliable_checkpoint(df) is df and df.calls == ["local"]
 
 
 def test_local_cluster_master_is_not_in_process():
     """``local-cluster[...]`` runs executors in separate JVMs: with no
-    scratch conf, both the global-rank scratch and the dedup checkpoint
-    raise there instead of using driver- or executor-local storage."""
+    scratch conf, the checkpoint raises there instead of using
+    executor-local storage."""
     import pytest
 
-    from turboxsl_spark.operators.dedup import _reliable_checkpoint
-    from turboxsl_spark.operators.rank import _default_scratch
+    from turboxsl_spark.operators.rank import _reliable_checkpoint
 
     class _Conf:
         def get(self, key, default=None):
@@ -176,9 +194,103 @@ def test_local_cluster_master_is_not_in_process():
         sparkSession = _Spark()
 
     with pytest.raises(ValueError, match="cluster-visible"):
-        _default_scratch(_Spark(), "t_")
-    with pytest.raises(ValueError, match="cluster-visible"):
         _reliable_checkpoint(_DF())
+
+
+def test_rank_queries_neither_clobber_nor_leak(spark, tmp_path, monkeypatch):
+    """Two builds of one rank query must not share an intermediate: the
+    second build may not delete what the first frame still reads. And
+    no rank query may leave anything in the temp dir."""
+    import tempfile
+
+    import __spark_entry__ as m
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    sf = m.SF_SMOKE
+    first = m.q_sort_multikey(spark, sf)
+    second = m.q_sort_multikey(spark, sf)
+    assert first.count() == second.count() > 0
+    assert m.q_sort_caseorder(spark, sf).count() > 0
+    assert m.q_exact_quantiles(spark, sf).count() > 0
+    assert list(tmp_path.iterdir()) == []
+
+
+_LOCAL_CLUSTER_SCRIPT = r"""
+import json, os, sys
+os.environ["SPARK_MASTER"] = "local-cluster[2,1,1024]"
+os.environ["SPARK_DRIVER_MEM"] = "1g"
+import numpy as np
+from pyspark.sql import functions as F
+from turboxsl_spark.session import get_spark
+from turboxsl_spark.operators.dedup import duplicate_components
+from turboxsl_spark.operators.rank import SCRATCH_CONF, exact_quantiles, global_rank
+
+scratch, n = sys.argv[1], 5000
+spark = get_spark("local-cluster-checkpoint", cores=2, shuffle_partitions=4)
+rng = np.random.default_rng(9)
+rows = [
+    (i, str(g), float(s))
+    for i, g, s in zip(range(n), rng.choice(list("abcde"), n), rng.integers(0, 50, n))
+]
+df = spark.createDataFrame(rows, "id long, grp string, score double")
+order = [F.col("grp").asc(), F.col("score").desc(), F.col("id").asc()]
+out = {"rows": rows}
+try:
+    global_rank(df, order, out="rk")
+    out["raised"] = None
+except ValueError as e:
+    out["raised"] = str(e)
+spark.conf.set(SCRATCH_CONF, scratch)
+ranked = global_rank(df, order, out="rk").select("id", "rk")
+out["ranks"] = [tuple(r) for r in ranked.collect()]
+qs = [0.0, 0.01, 0.25, 0.5, 0.9, 0.99, 1.0]
+out["quantiles"] = {
+    str(r["q"]): r["value"]
+    for r in exact_quantiles(df, "score", qs, tiebreak=["id"]).collect()
+}
+edges = spark.createDataFrame([(5, 3), (3, 8), (8, 1)], "id_a long, id_b long")
+out["components"] = [tuple(r) for r in duplicate_components(edges).collect()]
+spark.stop()
+print(json.dumps(out))
+"""
+
+
+def test_reliable_checkpoint_on_local_cluster(tmp_path):
+    """The reliable branch of ``_reliable_checkpoint``, run for real:
+    executors in separate JVMs. Without the scratch conf the rank
+    raises at build time; with it, the rank, the quantiles and the
+    connected components are correct and checkpoint files land under
+    ``<scratch>/cc_checkpoints``. A subprocess, because the session's
+    ``local[4]`` context cannot coexist with a second master."""
+    import json
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    proc = subprocess.run(
+        [sys.executable, "-c", _LOCAL_CLUSTER_SCRIPT, str(tmp_path)],
+        capture_output=True, text=True, timeout=120,
+        cwd=Path(__file__).resolve().parents[1],
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+
+    assert out["raised"] is not None and "cluster-visible" in out["raised"]
+
+    pdf = pd.DataFrame(out["rows"], columns=["id", "grp", "score"])
+    want = pdf.sort_values(
+        ["grp", "score", "id"], ascending=[True, False, True], kind="mergesort"
+    )
+    want_rk = dict(zip(want["id"], range(1, len(want) + 1)))
+    assert dict(out["ranks"]) == want_rk
+
+    s = np.sort(pdf["score"].to_numpy())
+    assert len(out["quantiles"]) == 7
+    for q, got in out["quantiles"].items():
+        assert got == s[max(1, int(np.ceil(float(q) * len(s)))) - 1], q
+
+    assert sorted(map(tuple, out["components"])) == [(1, 1), (3, 1), (5, 1), (8, 1)]
+    assert any(p.name.startswith("part-") for p in (tmp_path / "cc_checkpoints").rglob("*"))
 
 
 def test_caseorder_keys_lower_and_upper_first(spark):
@@ -219,13 +331,11 @@ def test_exact_quantiles_single_rank_scan(spark):
 
     df = spark.range(0, 1234).withColumn("v", (F.col("id") * 37) % 1000)
     ranked, n = _global_rank_counted(
-        df, [F.col("v").asc(), F.col("id").asc()], out="r",
-        materialize="memory",
+        df, [F.col("v").asc(), F.col("id").asc()], out="r"
     )
     assert n == 1234
     assert ranked.count() == 1234
     empty, n0 = _global_rank_counted(
-        df.where(F.lit(False)), [F.col("v").asc()], out="r",
-        materialize="memory",
+        df.where(F.lit(False)), [F.col("v").asc()], out="r"
     )
     assert n0 == 0 and empty.count() == 0

@@ -53,55 +53,7 @@ from pyspark.sql import types as T
 
 from turboxsl_spark.functions.text_analysis import _check_hasher, _gram_hashes
 
-from .rank import SCRATCH_CONF, _in_process_master
-
-
-def _reliable_checkpoint(df: DataFrame, optional: bool = False) -> DataFrame:
-    """Truncate lineage in a way that survives executor loss.
-
-    Under ``local[*]`` the executors ARE the driver process, so
-    ``localCheckpoint()`` (in-memory, executor-local) is both safe and
-    the fastest option. On any other master an executor-local checkpoint
-    is a fault-tolerance hole: losing one executor mid-loop discards
-    blocks whose lineage was just truncated and kills the whole job —
-    so there we use a RELIABLE ``checkpoint()`` into the cluster-visible
-    scratch dir (``spark.turboxsl.scratchDir``, same conf as
-    ``global_rank``), wiring ``sparkContext.setCheckpointDir`` on first
-    use. No conf on a cluster → raise at plan time rather than silently
-    truncating lineage against volatile storage (``optional``: return
-    ``df`` unmaterialized instead).
-    """
-    spark = df.sparkSession
-    master = spark.conf.get("spark.master", "")
-    # plain local[...] only: 'local-cluster[...]' runs executors in
-    # separate JVMs, where an executor-local checkpoint has exactly the
-    # fault-tolerance hole this function exists to close
-    if _in_process_master(master):
-        return df.localCheckpoint()
-    sc = spark.sparkContext
-    if sc.getCheckpointDir() is None:
-        base = spark.conf.get(SCRATCH_CONF, None)
-        if not base:
-            if optional:
-                return df
-            raise ValueError(
-                f"duplicate_components checkpoint on master {master!r}: "
-                f"localCheckpoint is not fault-tolerant off local[*] — set "
-                f"{SCRATCH_CONF} to a cluster-visible path (HDFS/S3/NFS) "
-                f"or call sparkContext.setCheckpointDir yourself"
-            )
-        sc.setCheckpointDir(f"{base.rstrip('/')}/cc_checkpoints")
-    return df.checkpoint()
-
-
-def _checkpoint_if_possible(df: DataFrame) -> DataFrame:
-    """Best-effort eager materialization: ``_reliable_checkpoint``, but
-    FALLS BACK to the unmaterialized lineage (recompute per consumer)
-    when no cluster-visible scratch is configured, instead of raising —
-    for callers where materialization is a pure optimization (compute an
-    expensive projection once) rather than a correctness need (lineage
-    truncation in an iterative loop)."""
-    return _reliable_checkpoint(df, optional=True)
+from .rank import _reliable_checkpoint
 
 
 def tokenize(c: Column | str, lowercase: bool = True) -> Column:
@@ -448,10 +400,11 @@ def minhash_dedup(
     sigs = minhash_signatures(
         df, text_col, num_hashes, shingle_n, id_col=id_col, hasher=hasher
     )
-    pairs = _checkpoint_if_possible(
+    pairs = _reliable_checkpoint(
         lsh_candidate_pairs(
             sigs, id_col, "minhash", bands, num_hashes // bands, hasher=hasher
-        )
+        ),
+        optional=True,
     )
     dupes = ngram_jaccard(
         pairs, df, id_col, text_col, shingle_n, hasher=hasher, prefilter=True

@@ -18,57 +18,49 @@ at 100 TB. This module is the two-phase form:
      row numbers.
 
 Cost: two passes over the ranked table (count job + rank job), both
-fully parallel — the range-partitioned table is WRITTEN ONCE to a
-scratch parquet (with its partition id embedded as a column) and read
-twice. No executor-memory persist: at 100 TB a MEMORY_AND_DISK cache
-of the whole table would squat on executor storage for the session
-lifetime; a scratch write is linear, spill-free, and freed by the
-caller when the ranked output has been materialized. The count pass
-scans ONLY the embedded pid column (parquet column pruning), so the
-second pass is nearly free.
+fully parallel. The range-partitioned table, with its partition id
+embedded as a column, is materialized ONCE by ``_reliable_checkpoint``
+and both jobs read it. That is the one materialization policy of the
+operators (``duplicate_components`` and the near-dup pipelines use it
+too), and no caller owns an intermediate's lifetime:
+
+  - under ``local[...]`` a ``localCheckpoint``: executor blocks, freed
+    by the ContextCleaner once the frame is dropped;
+  - on any other master a reliable checkpoint into
+    ``<spark.turboxsl.scratchDir>/cc_checkpoints`` (or into a
+    checkpoint dir the caller set), whose files Spark's ContextCleaner
+    removes when ``spark.cleaner.referenceTracking.cleanCheckpoints``
+    is on; with neither location set it raises at build time, so no
+    executor ever writes to a driver-local path.
+
+No path is chosen per call, so two builds cannot overwrite each
+other's intermediate and nothing is left behind in a temp dir.
+
+Trade-off: the count pass reads the checkpointed rows, not one pruned
+parquet column as a write-once parquet scratch would. On 4 vCPU the
+checkpoint was no slower per build: faster for ``sort_multikey`` and
+``sort_caseorder`` at sf0.01 and sf0.1 and for ``exact_quantiles`` at
+sf0.1, even for ``exact_quantiles`` at sf0.01. On a real cluster the
+difference is unmeasured.
 
 The order spec MUST be total (include a unique tiebreak column):
 equal keys may straddle a range boundary, so without a tiebreak the
 assignment of equal rows to ranks would be nondeterministic. Every
-caller in this repo ranks on (..., unique_id). Embedding the pid at
-write time (not recomputing it per job) is what makes the two passes
-agree even though range boundaries are SAMPLED per exchange.
+caller in this repo ranks on (..., unique_id). Embedding the pid
+before materializing (not recomputing it per job) is what makes the
+two passes agree even though range boundaries are SAMPLED per
+exchange.
 """
 
 from __future__ import annotations
 
 import math
 import re
-import shutil
-import tempfile
-import uuid
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-
-def cleanup_scratch(path: str, spark=None) -> None:
-    """Remove a scratch directory produced by ``global_rank`` (call
-    after the ranked output has been materialized/written).
-
-    Local paths are removed directly. Remote scratch (s3://, hdfs://
-    — the ``spark.turboxsl.scratchDir`` cluster path) is deleted
-    through the Hadoop FileSystem API when a ``spark`` session is
-    passed; WITHOUT one it is left to the storage layer's
-    lifecycle/TTL rules (there is no portable way to reach remote
-    storage from the driver outside the session)."""
-    if "://" in path and not path.startswith("file://"):
-        if spark is None:
-            return
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        fs.delete(hpath, True)
-        return
-    shutil.rmtree(path.removeprefix("file://"), ignore_errors=True)
-
 
 SCRATCH_CONF = "spark.turboxsl.scratchDir"
 
@@ -80,27 +72,41 @@ def _in_process_master(master: str) -> bool:
     return re.match(r"local(\[|$)", master) is not None
 
 
-def _default_scratch(spark, prefix: str) -> str:
-    """Resolve a scratch location every EXECUTOR can reach.
+def _reliable_checkpoint(df: DataFrame, optional: bool = False) -> DataFrame:
+    """Materialize ``df`` eagerly and truncate its lineage in a way that
+    survives executor loss.
 
-    Priority: the ``spark.turboxsl.scratchDir`` conf (point it at
-    HDFS/S3/shared-FS scratch on a cluster) → a driver-local temp dir,
-    which is only valid when the executors ARE the driver process
-    (local[...] master). On any other master with no conf set this
-    RAISES at plan-build time — a driver-local default would let each
-    executor silently write to its own filesystem and drop partitions.
+    Under ``local[*]`` the executors ARE the driver process, so
+    ``localCheckpoint`` (in-memory, executor-local) is both safe and
+    the fastest option. On any other master an executor-local checkpoint
+    is a fault-tolerance hole: losing one executor discards blocks whose
+    lineage was just truncated and kills the whole job — so there it is
+    a RELIABLE checkpoint into the cluster-visible scratch dir
+    (``spark.turboxsl.scratchDir``), wiring
+    ``sparkContext.setCheckpointDir`` on first use. No conf and no
+    checkpoint dir on a cluster → raise at build time rather than
+    truncate lineage against volatile storage; ``optional=True`` returns
+    ``df`` unmaterialized instead (recompute per consumer), for callers
+    where materializing is only an optimization.
     """
-    base = spark.conf.get(SCRATCH_CONF, None)
-    if base:
-        return f"{base.rstrip('/')}/{prefix}{uuid.uuid4().hex}"
+    spark = df.sparkSession
     master = spark.conf.get("spark.master", "")
-    if not _in_process_master(master):
-        raise ValueError(
-            f"global_rank scratch on master {master!r}: executors cannot "
-            f"read the driver's temp dir — pass scratch_dir= or set "
-            f"{SCRATCH_CONF} to a cluster-visible path (HDFS/S3/NFS)"
-        )
-    return tempfile.mkdtemp(prefix=prefix)
+    if _in_process_master(master):
+        return df.localCheckpoint()
+    sc = spark.sparkContext
+    if sc.getCheckpointDir() is None:
+        base = spark.conf.get(SCRATCH_CONF, None)
+        if not base:
+            if optional:
+                return df
+            raise ValueError(
+                f"checkpoint on master {master!r}: localCheckpoint is not "
+                f"fault-tolerant off local[*] — set {SCRATCH_CONF} to a "
+                f"cluster-visible path (HDFS/S3/NFS) or call "
+                f"sparkContext.setCheckpointDir yourself"
+            )
+        sc.setCheckpointDir(f"{base.rstrip('/')}/cc_checkpoints")
+    return df.checkpoint()
 
 
 def global_rank(
@@ -108,8 +114,6 @@ def global_rank(
     order: Sequence[Column],
     out: str = "rank",
     num_partitions: int | None = None,
-    scratch_dir: str | None = None,
-    materialize: str = "scratch",
 ) -> DataFrame:
     """Add a 1-based global ``row_number`` under a total order.
 
@@ -117,23 +121,15 @@ def global_rank(
     both the range partitioning and the in-partition sort; must include
     a unique tiebreak. Returns ``df`` plus the ``out`` long column.
 
-    ``materialize="scratch"`` (default, the unbounded-input path):
-    write-once-read-twice via parquet. ``scratch_dir`` is where the
-    intermediate lands; when omitted it resolves via
-    ``spark.turboxsl.scratchDir`` (set it to HDFS/S3/shared-FS scratch
-    on a cluster), falls back to a local temp dir ONLY under a
-    local[...] master, and raises otherwise (executors on other nodes
-    cannot read the driver's /tmp). The returned DataFrame READS from
-    it lazily; free it with ``cleanup_scratch`` once the ranked output
-    is materialized.
-
-    ``materialize="memory"``: a Spark cache instead — ONLY for inputs
-    already bounded by construction (``global_topk`` ranks ≤ k rows);
-    never hand an unbounded table to this mode.
+    The range-partitioned input is materialized once with
+    ``_reliable_checkpoint`` (see the module docstring): executor-local
+    under ``local[...]``, a reliable checkpoint into
+    ``spark.turboxsl.scratchDir`` on any other master, and a
+    ``ValueError`` at build time there when no checkpoint location is
+    set. The caller frees nothing; the module docstring says when
+    Spark does.
     """
-    ranked, _ = _global_rank_counted(
-        df, order, out, num_partitions, scratch_dir, materialize
-    )
+    ranked, _ = _global_rank_counted(df, order, out, num_partitions)
     return ranked
 
 
@@ -142,8 +138,6 @@ def _global_rank_counted(
     order: Sequence[Column],
     out: str = "rank",
     num_partitions: int | None = None,
-    scratch_dir: str | None = None,
-    materialize: str = "scratch",
 ) -> tuple[DataFrame, int]:
     """``global_rank`` plus the TOTAL row count as a by-product.
 
@@ -162,20 +156,11 @@ def _global_rank_counted(
         if num_partitions is not None
         else df.repartitionByRange(*order)
     ).withColumn("_gr_pid", F.spark_partition_id())
-    if materialize == "memory":
-        # localCheckpoint (not .cache()): RDD-backed, so the storage is
-        # freed by the ContextCleaner when the DataFrame is dropped —
-        # repeated calls can't accumulate session-lifetime cache entries
-        part = ranged.localCheckpoint(eager=True)
-    else:
-        if scratch_dir is None:
-            scratch_dir = _default_scratch(spark, "turboxsl_global_rank_")
-        # ONE range exchange, written once; both jobs below read this —
-        # partition ids are frozen in the data, immune to resample drift
-        ranged.write.mode("overwrite").parquet(scratch_dir)
-        # explicit schema: an EMPTY input writes no part files, and a
-        # schema-inferring read of the bare directory would throw
-        part = spark.read.schema(ranged.schema).parquet(scratch_dir)
+    # ONE range exchange, materialized once; both jobs below read this.
+    # Required, not optional: the partition ids must be frozen in the
+    # data for the count pass and the rank pass to agree (boundaries
+    # are resampled by every exchange)
+    part = _reliable_checkpoint(ranged)
     counts = part.groupBy("_gr_pid").count().collect()
     acc = 0
     offset_rows = []
@@ -200,7 +185,6 @@ def exact_quantiles(
     value: Column | str,
     qs: Sequence[float],
     tiebreak: Sequence[Column | str] = (),
-    scratch_dir: str | None = None,
 ) -> DataFrame:
     """EXACT discrete quantiles (percentile_disc semantics) of a column,
     distributed — returns ``(q double, value)`` with one row per q.
@@ -216,11 +200,9 @@ def exact_quantiles(
     VALUE at each position is order-independent, so any unique
     tiebreak yields the same result.
 
-    The result is materialized eagerly (bounded by ``len(qs)`` rows —
-    a driver collect of quantile values, not data) so the underlying
-    rank's scratch parquet is freed before returning; pass
-    ``scratch_dir`` to control where the intermediate lands (shared
-    storage on a cluster) — a caller-provided dir is NOT deleted.
+    The result is collected eagerly (bounded by ``len(qs)`` rows — a
+    driver collect of quantile values, not data), so nothing returned
+    still reads the rank's checkpoint.
     """
     for q in qs:
         if not 0.0 <= q <= 1.0:
@@ -233,48 +215,28 @@ def exact_quantiles(
     order = [F.col("_q_v").asc()] + [
         (F.col(c) if isinstance(c, str) else c).asc() for c in tiebreak
     ]
-    own_scratch = scratch_dir is None
-    if own_scratch:
-        scratch_dir = _default_scratch(spark, "turboxsl_quantiles_")
-    try:
-        # rank FIRST: the rank's own offset pass already sums the
-        # per-partition counts, so n falls out for free — no separate
-        # slim.count() scan (that was a whole extra pass at scale)
-        ranked, n = _global_rank_counted(
-            slim, order, out="_q_rank", scratch_dir=scratch_dir
-        )
-        if n == 0:
-            return spark.createDataFrame(
-                [],
-                StructType(
-                    [
-                        StructField("q", DoubleType()),
-                        StructField("value", slim.schema["_q_v"].dataType),
-                    ]
-                ),
-            )
-        targets = [(float(q), _ceil_rank(q, n)) for q in qs]
-        tdf = spark.createDataFrame(targets, "q double, _q_r long")
-        # the result is bounded by len(qs) — materialize it eagerly so
-        # the rank's scratch parquet can be freed HERE instead of
-        # leaking until some later action
-        # sort the ≤len(qs) result rows on the DRIVER: a DataFrame
-        # orderBy here would add a range exchange (plus its boundary
-        # sampling pass over the rank join) to order a handful of rows
-        rows = sorted(
-            ranked.join(F.broadcast(tdf), ranked["_q_rank"] == tdf["_q_r"])
-            .select("q", F.col("_q_v").alias("value"))
-            .collect(),
-            key=lambda r: r["q"],
-        )
-    finally:
-        if own_scratch:
-            cleanup_scratch(scratch_dir, spark)
     out_schema = StructType(
         [
             StructField("q", DoubleType()),
             StructField("value", slim.schema["_q_v"].dataType),
         ]
+    )
+    # rank FIRST: the rank's own offset pass already sums the
+    # per-partition counts, so n falls out for free — no separate
+    # slim.count() scan (that was a whole extra pass at scale)
+    ranked, n = _global_rank_counted(slim, order, out="_q_rank")
+    if n == 0:
+        return spark.createDataFrame([], out_schema)
+    targets = [(float(q), _ceil_rank(q, n)) for q in qs]
+    tdf = spark.createDataFrame(targets, "q double, _q_r long")
+    # sort the ≤len(qs) result rows on the DRIVER: a DataFrame
+    # orderBy here would add a range exchange (plus its boundary
+    # sampling pass over the rank join) to order a handful of rows
+    rows = sorted(
+        ranked.join(F.broadcast(tdf), ranked["_q_rank"] == tdf["_q_r"])
+        .select("q", F.col("_q_v").alias("value"))
+        .collect(),
+        key=lambda r: r["q"],
     )
     return spark.createDataFrame(rows, out_schema)
 
