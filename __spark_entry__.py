@@ -21,6 +21,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from turboxsl_spark.operators.similarity import EMB_DIM as _EMB_DIM
+
 SF_SMOKE = "/root/testdata/sf0.001"
 
 
@@ -373,28 +375,16 @@ def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k: 5 nearest neighbours of vec_id=0.
 
-    JVM-side dot product via zip_with + aggregate (no UDF)."""
+    JVM-side dot products (``similarity.cosine``, no UDF)."""
+    from turboxsl_spark.operators.similarity import cosine
+
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") == 0).select(
         F.col("embedding").alias("q_emb")
     )
     cand = emb.where(F.col("vec_id") != 0)
-    dot = F.aggregate(
-        F.zip_with(
-            F.col("embedding"), F.col("q_emb"),
-            lambda a, b: a.cast("double") * b.cast("double"),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    norm = lambda c: F.sqrt(
-        F.aggregate(
-            F.col(c), F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")
-        )
-    )
-    sim = (dot / (norm("embedding") * norm("q_emb"))).alias("cos_sim")
     scored = cand.crossJoin(F.broadcast(q)).select(
-        "vec_id", F.round(sim, 6).alias("cos_sim")
+        "vec_id", F.round(cosine("embedding", "q_emb"), 6).alias("cos_sim")
     )
     return scored.orderBy(F.desc("cos_sim"), F.asc("vec_id")).limit(5)
 
@@ -574,9 +564,9 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantizer trains on the (whole, file-ordered) sf-0.01 corpus with a
     fixed seed, so the oracle generator re-derives the SAME centroids
     via pyarrow+numpy and emits them as SQL literals; corpus AND query
-    assignment run as sequential-fold JVM dots (query_assign="jvm"),
-    which DuckDB replays bit-for-bit via list_reduce. Recall vs brute
-    force stays pinned in tests/test_similarity.py."""
+    assignment run as sequential-fold JVM dots, which DuckDB replays
+    bit-for-bit via list_reduce. Recall vs brute force stays pinned in
+    tests/test_similarity.py."""
     from turboxsl_spark.operators.similarity import ivf_topk
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -584,8 +574,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id AS q_id", "embedding"
     )
     out = ivf_topk(
-        emb, queries_df, k=5, n_centroids=16, nprobe=4, sample_size=2000,
-        query_assign="jvm",
+        emb, queries_df, k=5, n_centroids=16, nprobe=4, sample_size=2000
     )
     return out.select(
         "q_id", "vec_id", F.round("cos_sim", 6).alias("cos_sim"),
@@ -811,10 +800,11 @@ def q_explode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_response_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.11 grouped-map UDAF (applyInPandas): per-conversation
-    user→assistant response latency over the events adapter; the SQL
-    oracle re-derives it with window functions."""
-    from turboxsl_spark.operators.conv_udaf import response_latency_stats
+    """Per-conversation user→assistant response latency over the events
+    adapter: the conversation window's gap and role lag, then one
+    grouped aggregate; the SQL oracle states the same two LAGs and
+    GROUP BY."""
+    from turboxsl_spark.operators.sessionize import response_latency_stats
     from turboxsl_spark.sources.transcripts import transcripts_from_events
 
     tx = transcripts_from_events(spark, sf_dir)
@@ -1640,14 +1630,11 @@ def _minhash_dedup_oracle(
     """
 
 
-_EMB_DIM = 64
-
-
 def _sql_dot(a: str, b: str, dim: int = _EMB_DIM, cast_a: bool = True, cast_b: bool = True) -> str:
-    """Sequential-fold dot product in DuckDB — replays Spark's
-    ``F.aggregate(zip_with(a, b, x*y), 0.0, +)`` with the SAME IEEE op
-    order, so the doubles are bit-identical (list_sum / numpy matmul
-    would reassociate and drift in the last ulp)."""
+    """Sequential-fold dot product in DuckDB — replays
+    ``similarity._dot`` with the SAME IEEE op order, so the doubles are
+    bit-identical (list_sum / numpy matmul would reassociate and drift
+    in the last ulp)."""
     xa = f"CAST({a}[j] AS DOUBLE)" if cast_a else f"{a}[j]"
     xb = f"CAST({b}[j] AS DOUBLE)" if cast_b else f"{b}[j]"
     return (

@@ -225,6 +225,18 @@ def test_exact_dedup_partial_aggregation(spark):
     assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1
 
 
+def test_response_latency_single_exchange_no_python(spark, tx):
+    """response_latency_stats is the conv window's gap and role lag,
+    then a grouped aggregate on the window's partition key: one
+    exchange, one Window, and no Python node."""
+    from turboxsl_spark.operators.sessionize import response_latency_stats
+
+    plan = plan_of(response_latency_stats(tx))
+    assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1, plan[:4000]
+    assert len(re.findall(r"\bWindow \[", plan)) == 1, plan[:4000]
+    assert not re.search(r"EvalPython|InPandas|PythonUDF", plan), plan[:4000]
+
+
 def test_pack_greedy_single_exchange(spark):
     """pack_greedy = ONE shuffle (the shard groupBy feeding
     applyInPandas); a second exchange would mean the sequential packer

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
 
@@ -137,46 +139,61 @@ def test_lsh_topk_recall(spark, corpus, vectors):
     assert hits / total >= 0.6, f"recall {hits}/{total}"
 
 
-def test_ivf_corpus_assignment_is_jvm_side(spark, corpus):
-    """The corpus side of ivf_topk must never cross into Python: the
-    JVM argmax assignment plan has zero Arrow/Python eval nodes, it
-    agrees with the pandas-UDF assignment row-for-row, and the full
-    ivf_topk plan carries exactly ONE ArrowEvalPython (the tiny
-    broadcast query side)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
+def test_ivf_corpus_assignment_is_jvm_side(spark, corpus, vectors):
+    """Both IVF assignments run JVM-side and agree with numpy: the corpus
+    list is the argmax of a matmul against the centroids, the query
+    lists its top ``nprobe``, and the full ivf_topk plan has zero
+    Python nodes."""
     from turboxsl_spark.operators.similarity import (
-        _assign_udf,
         _kmeans_centroids,
-        ivf_assign_jvm,
+        ivf_assign,
+        ivf_probe_lists,
         ivf_topk,
     )
 
-    vecs = np.stack(
-        [np.asarray(r[0], np.float64) for r in corpus.select("embedding").collect()]
-    )
+    vecs = vectors.astype(np.float64)
     cents = _kmeans_centroids(vecs[:200], 16, seed=7)
+    sims = vecs @ cents.T
 
     assigned = corpus.select(
-        "vec_id", ivf_assign_jvm(F.col("embedding"), cents).alias("jvm_list")
+        "vec_id",
+        ivf_assign("embedding", cents).alias("lst"),
+        ivf_probe_lists("embedding", cents, 3).alias("top"),
     )
-    plan = assigned._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-
-    pandas_assign = _assign_udf(cents, 1)
-    both = (
-        assigned.join(
-            corpus.select(
-                "vec_id", F.element_at(pandas_assign("embedding"), 1).alias("py_list")
-            ),
-            "vec_id",
-        )
-        .toPandas()
-    )
-    assert (both["jvm_list"] == both["py_list"]).all()
+    got = assigned.toPandas().sort_values("vec_id")
+    assert got["vec_id"].tolist() == list(range(len(vecs)))
+    assert got["lst"].tolist() == np.argmax(sims, axis=1).tolist()
+    want_top = np.argsort(-sims, axis=1, kind="stable")[:, :3]
+    assert [list(t) for t in got["top"]] == want_top.tolist()
 
     queries = corpus.where("vec_id IN (10, 70)").selectExpr("vec_id AS q_id", "embedding")
     full = ivf_topk(corpus, queries, k=5, n_centroids=16, nprobe=3, sample_size=240)
     fplan = full._jdf.queryExecution().executedPlan().toString()
-    assert fplan.count("ArrowEvalPython") == 1, fplan[:4000]
+    assert not re.search(r"EvalPython|InPandas|PythonUDF", fplan), fplan[:4000]
+
+
+def test_width_mismatch_raises_in_lsh_and_near_dup(spark, corpus):
+    """The 32-d fixture without ``dim``: the planes are EMB_DIM (64)
+    wide, and the bucket raises naming both widths instead of folding a
+    NULL dot into no bucket (0 rows, 0 pairs)."""
+    from turboxsl_spark.operators.dedup import embedding_near_dup_pairs
+
+    queries = corpus.where("vec_id IN (10, 70)").selectExpr("vec_id AS q_id", "embedding")
+    with pytest.raises(Exception, match="embedding width 32 .*width 64"):
+        lsh_topk(corpus, queries, k=5, nbits=8).collect()
+    with pytest.raises(Exception, match="embedding width 32 .*width 64"):
+        embedding_near_dup_pairs(corpus, threshold=0.95).collect()
+
+
+def test_ivf_width_mismatch_raises(spark, corpus):
+    """One 31-d corpus row outside the training head: its assignment
+    raises instead of landing silently in list 0."""
+    from turboxsl_spark.operators.similarity import ivf_topk
+
+    odd = spark.createDataFrame([(10_000, [0.5] * 31)], "vec_id long, embedding array<float>")
+    queries = corpus.where("vec_id IN (10, 70)").selectExpr("vec_id AS q_id", "embedding")
+    out = ivf_topk(
+        corpus.unionByName(odd), queries, k=5, n_centroids=16, nprobe=3, sample_size=240
+    )
+    with pytest.raises(Exception, match="embedding width 31 .*width 32"):
+        out.collect()

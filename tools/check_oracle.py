@@ -63,16 +63,61 @@ def _norm_rows(cols, rows):
     return [cols[i] for i in idx], out
 
 
-def main(names: list[str] | None = None) -> int:
+def connect():
+    """A DuckDB connection with every table of SF_DIR as a view."""
     import duckdb
 
+    con = duckdb.connect()
+    for t in TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+    return con
+
+
+def compare(spark, con, fn, oracle: str | None) -> tuple[str, list[str]]:
+    """Build the query ``fn`` at SF_DIR and compare it with the DuckDB
+    SQL ``oracle``: column names, dtypes, row count and the sorted,
+    bit-exact values.
+
+    Returns ``(summary, mismatches)``: the summary is ``"OK (n rows)"``
+    or, without an oracle, ``"rows-only (n rows) — no oracle"``; each
+    failed check adds one line to ``mismatches``.
+    """
+    sdf = fn(spark, SF_DIR)
+    scols = sdf.columns
+    srows = [tuple(r) for r in sdf.collect()]
+    if oracle is None:
+        return f"rows-only ({len(srows)} rows) — no oracle", []
+    rel = con.sql(oracle)
+    dcols = rel.columns
+    drows = rel.fetchall()
+    sc, sn = _norm_rows(scols, srows)
+    dc, dn = _norm_rows(dcols, drows)
+    bad = []
+    if sc != dc:
+        bad.append(f"COLUMN MISMATCH spark={sc} duck={dc}")
+    # dtype parity: a value hash covers the type (DuckDB HUGEINT vs Spark BIGINT)
+    dtypes, _ = _duck_arrow_types(con.sql(oracle))
+    stypes = _spark_arrow_types(sdf)
+    for col in set(dtypes) & set(stypes):
+        a, b = stypes[col], dtypes[col]
+        if a != b and not (
+            a.startswith("timestamp") and b.startswith("timestamp")
+        ):
+            bad.append(f"DTYPE MISMATCH {col}: spark={a} duck={b}")
+    if len(sn) != len(dn):
+        bad.append(f"ROWCOUNT MISMATCH spark={len(sn)} duck={len(dn)}")
+    if not bad and sn != dn:
+        diff = [(a, b) for a, b in zip(sn, dn) if a != b][:3]
+        bad.append(f"VALUE MISMATCH, first diffs: {diff}")
+    return f"OK ({len(sn)} rows)", bad
+
+
+def main(names: list[str] | None = None) -> int:
     import __spark_entry__ as entrymod
     from turboxsl_spark.session import get_spark
 
     spark = get_spark("oracle-check", cores=8, shuffle_partitions=16)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+    con = connect()
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
@@ -86,43 +131,13 @@ def main(names: list[str] | None = None) -> int:
         if len(all_names) > 50 and name == all_names[50] and names is all_names:
             print("---- driver gate cutoff: entries below are NOT in "
                   "CORRECTNESS_r*.json this round (rotate next round) ----")
-        fn = qs[name]
-        sdf = fn(spark, SF_DIR)
-        scols = sdf.columns
-        srows = [tuple(r) for r in sdf.collect()]
-        if name not in oracles:
-            print(f"{name}: rows-only ({len(srows)} rows) — no oracle")
-            continue
-        rel = con.sql(oracles[name])
-        dcols = rel.columns
-        drows = rel.fetchall()
-        sc, sn = _norm_rows(scols, srows)
-        dc, dn = _norm_rows(dcols, drows)
-        ok = True
-        if sc != dc:
-            print(f"{name}: COLUMN MISMATCH spark={sc} duck={dc}")
-            ok = False
-        # dtype parity (HUGEINT vs BIGINT etc. fails the driver's hash)
-        dtypes, _ = _duck_arrow_types(con.sql(oracles[name]))
-        stypes = _spark_arrow_types(sdf)
-        for col in set(dtypes) & set(stypes):
-            a, b = stypes[col], dtypes[col]
-            if a != b and not (
-                a.startswith("timestamp") and b.startswith("timestamp")
-            ):
-                print(f"{name}: DTYPE MISMATCH {col}: spark={a} duck={b}")
-                ok = False
-        if len(sn) != len(dn):
-            print(f"{name}: ROWCOUNT MISMATCH spark={len(sn)} duck={len(dn)}")
-            ok = False
-        if ok and sn != dn:
-            diff = [(a, b) for a, b in zip(sn, dn) if a != b][:3]
-            print(f"{name}: VALUE MISMATCH, first diffs: {diff}")
-            ok = False
-        if ok:
-            print(f"{name}: OK ({len(sn)} rows)")
-        else:
+        summary, bad = compare(spark, con, qs[name], oracles.get(name))
+        for line in bad:
+            print(f"{name}: {line}")
+        if bad:
             failures += 1
+        else:
+            print(f"{name}: {summary}")
     return failures
 
 

@@ -54,6 +54,7 @@ from pyspark.sql import types as T
 from turboxsl_spark.functions.text_analysis import _check_hasher, _gram_hashes
 
 from .rank import _reliable_checkpoint
+from .skew import _q
 
 
 def tokenize(c: Column | str, lowercase: bool = True) -> Column:
@@ -217,10 +218,8 @@ def lsh_candidate_pairs(
     tree to the per-band Column-API build; construction cost — see
     ``minhash_signatures``).
     """
-    from turboxsl_spark.operators.similarity import _sql_ident
-
     _check_hasher(hasher)
-    sc = _sql_ident(sig_col)
+    sc = _q(sig_col)
 
     def bucket_sql(b: int) -> str:
         sl = f"slice({sc}, {b * rows_per_band + 1}, {rows_per_band})"
@@ -491,8 +490,8 @@ def embedding_near_dup_pairs(
     sf0.1).
 
     Construction cost note (guide §1, measured r06): the ``nbits``
-    fold-dot signature is built as ONE JVM-parsed SQL expression when
-    ``vec_col`` is a name (``random_hyperplane_bucket``) — the
+    fold-dot signature is built as ONE JVM-parsed SQL expression
+    (``random_hyperplane_bucket``) — the
     Column-API construction of 36 fold-dots cost ~1.5s of driver time
     per call, charged to the query by the bench's
     construction-inclusive timer. Two alternative plan shapes were
@@ -562,7 +561,7 @@ def embedding_near_dup_pairs(
         .dropDuplicates(["id_a", "id_b"])
     )
     return cand.select(
-        "id_a", "id_b", cosine(F.col("_va"), F.col("_vb")).alias("cos_sim")
+        "id_a", "id_b", cosine("_va", "_vb").alias("cos_sim")
     ).where(F.col("cos_sim") >= threshold)
 
 

@@ -1,65 +1,85 @@
 """Similarity search over embedding columns (array<float>).
 
-Baseline: brute-force cosine top-k — JVM-side dot products via
-zip_with/aggregate (no Python in the hot path), a crossJoin against a
-BROADCAST query set, and a per-query top-k window. Cost is
-|queries| × |corpus| dot products, embarrassingly parallel; correct
-answer, no recall loss — the oracle for the approximate paths.
+Every kernel is SQL text over column names, parsed JVM-side in one call
+per expression, with one dot-product body (``_dot``, a sequential fold):
+cosine, the LSH sign bits and the IVF centroid scores all use it, no
+embedding crosses into a Python worker, and the DuckDB oracles replay
+each double in the same IEEE operation order. The driver builds a plan
+while every core waits, and each Python ``Column`` node costs one Py4J
+round trip: at 36 hyperplanes x 64 dims the Column-API form of the fold
+dots cost ~1.5 s of plan construction per query (measured r06).
 
-Scale path: random-hyperplane LSH bucketing (sign-bit signature as the
-bucket key) — one shuffle on the bucket, search only within buckets;
-multi-probe = search the query's bucket plus 1-bit-flip neighbours.
-An IVF variant (k-means coarse quantizer) would follow the same
-bucket-join shape; LSH chosen because it needs no training pass.
+Baseline: brute-force cosine top-k — a crossJoin against a BROADCAST
+query set and a per-query top-k window. Cost is |queries| × |corpus|
+dot products, embarrassingly parallel; correct answer, no recall loss —
+the oracle for the approximate paths.
+
+Scale paths, each one equi-join on a bucket id with exact cosine inside:
+
+* random-hyperplane LSH (``lsh_topk``): the sign-bit signature is the
+  bucket; multi-probe also searches the query's 1-bit-flip neighbours.
+  No training pass.
+* IVF (``ivf_topk``): a k-means coarse quantizer trained on the
+  id-ordered head of the corpus; a vector's inverted list is its
+  nearest centroid, and a query probes its ``nprobe`` nearest lists.
+
+The plane and centroid assignments check each vector's width: a
+non-NULL vector whose width differs from the planes' or centroids'
+raises, where its NULL dot products would otherwise put it in no LSH
+bucket and silently in IVF list 0.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from turboxsl_spark.operators.skew import _q
+
+# embedding width of the generated corpus; random_hyperplane_bucket's default
+EMB_DIM = 64
 
 
-def dot(a: Column, b: Column) -> Column:
-    """JVM-side dot product of two array columns."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _sql_ident(name: str) -> str:
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _dot_lit_sql(vec: str, values) -> str:
-    """SQL text of ``dot(vec, literal_array)`` — the EXACT expression
-    ``dot(col, F.lit(values))`` builds (sequential fold, per-element
-    double casts), parsed JVM-side in ONE call. Building the same tree
-    through the Python Column API costs dozens of Py4J round-trips per
-    plane; at 36 hyperplanes x 64 dims that was ~1.5s of plan
-    CONSTRUCTION per query (measured r06) — which the bench timer
-    rightly charges to the query. ``repr(float)`` round-trips exactly,
-    so the parsed literals are bit-identical to ``F.lit``'s."""
-    arr = ", ".join(f"{float(x)!r}D" for x in values)
+def _dot(a: str, b: str) -> str:
+    """SQL text of the dot product of two array expressions: per-element
+    double casts, then a sequential fold from 0.0. The DuckDB oracles'
+    ``list_reduce`` replays this order bit for bit; a blocked matmul
+    (numpy, ``list_sum``) reassociates and drifts in the last ulp."""
     return (
-        f"aggregate(zip_with({vec}, array({arr}), "
+        f"aggregate(zip_with({a}, {b}, "
         "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
         "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
     )
 
 
-def l2norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double"))
+def _array(values) -> str:
+    """``values`` as a SQL array of doubles. ``repr(float)`` round-trips
+    exactly, so the parsed literals are bit-identical to the floats."""
+    return "array(" + ", ".join(f"{float(x)!r}D" for x in values) + ")"
+
+
+def _width_checked(vec: str, dim: int, expr: str) -> str:
+    """``expr`` where the array ``vec`` has ``dim`` elements or is NULL;
+    ``raise_error`` naming both widths where it has another width."""
+    return (
+        f"CASE WHEN {vec} IS NOT NULL AND size({vec}) <> {int(dim)} THEN "
+        f"raise_error(concat('embedding width ', CAST(size({vec}) AS STRING), "
+        f"' does not match the plane/centroid width {int(dim)}')) "
+        f"ELSE {expr} END"
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2norm(a) * l2norm(b))
+def l2norm(vec: str) -> Column:
+    """Euclidean norm of the array column named ``vec``."""
+    v = _q(vec)
+    return F.expr(f"sqrt({_dot(v, v)})")
+
+
+def cosine(a: str, b: str) -> Column:
+    """Cosine similarity of the array columns named ``a`` and ``b``."""
+    qa, qb = _q(a), _q(b)
+    return F.expr(f"{_dot(qa, qb)} / (sqrt({_dot(qa, qa)}) * sqrt({_dot(qb, qb)}))")
 
 
 def brute_force_topk(
@@ -82,7 +102,7 @@ def brute_force_topk(
     scored = c.crossJoin(F.broadcast(q)).select(
         query_id,
         corpus_id,
-        cosine(F.col("_cv"), F.col("_qv")).alias("cos_sim"),
+        cosine("_cv", "_qv").alias("cos_sim"),
     )
     w = Window.partitionBy(query_id).orderBy(F.desc("cos_sim"), F.asc(corpus_id))
     return (
@@ -97,39 +117,22 @@ def _hyperplanes(nbits: int, dim: int, seed: int) -> list[list[float]]:
 
 
 def random_hyperplane_bucket(
-    vec: Column | str, nbits: int = 16, seed: int = 7, dim: int | None = None
+    vec: str, nbits: int = 16, seed: int = 7, dim: int | None = None
 ) -> Column:
-    """Sign-bit LSH bucket id: bit i = (vec · plane_i) > 0.
+    """Sign-bit LSH bucket id of the array column named ``vec``: bit i =
+    (vec · plane_i) > 0.
 
-    Planes are deterministic (seeded) plan-time literals; the dot
-    products run JVM-side. ``dim`` defaults to 64 (the testdata
-    embedding width) — pass explicitly for other widths.
-
-    Pass ``vec`` as a COLUMN NAME to build the whole bucket as ONE
-    JVM-parsed SQL expression (identical tree, one Py4J call — the
-    Column-API construction of nbits fold-dots cost ~1.5s of driver
-    time per query at nbits=36, guide §1: construction is part of the
-    measured query). A Column argument falls back to the per-plane
-    Column-API builder (same result).
+    Planes are deterministic (seeded) plan-time literals of width
+    ``dim`` (default ``EMB_DIM``); a non-NULL vector of another width
+    raises.
     """
-    dim = dim or 64
-    planes = _hyperplanes(nbits, dim, seed)
-    if isinstance(vec, str):
-        v = _sql_ident(vec)
-        terms = [
-            f"(CAST(({_dot_lit_sql(v, p)} > 0.0D) AS BIGINT) * {1 << i}L)"
-            for i, p in enumerate(planes)
-        ]
-        return F.expr("(0L + " + " + ".join(terms) + ")")
-    bucket = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        # one array literal per plane (F.lit on the whole list), not 64
-        # per-element lits — plan CONSTRUCTION is driver-side Py4J
-        # traffic, and per-element lits made it ~2s per call at nbits=16
-        plane = F.lit([float(x) for x in p])
-        bit = (dot(vec, plane) > 0).cast("long")
-        bucket = bucket + bit * F.lit(1 << i)
-    return bucket
+    dim = dim or EMB_DIM
+    v = _q(vec)
+    terms = " + ".join(
+        f"(CAST(({_dot(v, _array(p))} > 0.0D) AS BIGINT) * {1 << i}L)"
+        for i, p in enumerate(_hyperplanes(nbits, dim, seed))
+    )
+    return F.expr(_width_checked(v, dim, f"(0L + {terms})"))
 
 
 def _kmeans_centroids(
@@ -157,80 +160,45 @@ def _kmeans_centroids(
     return c
 
 
-def ivf_assign_jvm(vec: Column | str, centroids: np.ndarray) -> Column:
-    """Nearest-centroid list id, fully JVM-side: each centroid is a
-    plan-time literal array (same trick as ``random_hyperplane_bucket``),
-    the dots run in codegen, and ``array_max`` over ``(sim, -idx)``
-    structs picks the argmax (ties → smallest idx, matching
-    ``np.argmax``). Used for the CORPUS side of ``ivf_topk`` so corpus
-    embeddings never cross the executor↔Python boundary; argmax of the
-    dot product is scale-invariant in the vector, so the normalization
-    the pandas path applies is unnecessary here (centroids are unit).
-    A column NAME builds the whole expression in one JVM parse (see
-    ``random_hyperplane_bucket`` — construction cost)."""
-    if isinstance(vec, str):
-        v = _sql_ident(vec)
-        entries = ", ".join(
-            f"struct({_dot_lit_sql(v, c)} AS s, {-i} AS ni)"
-            for i, c in enumerate(centroids)
+def ivf_assign(vec: str, centroids: np.ndarray) -> Column:
+    """Nearest-centroid list id of the array column named ``vec``.
+
+    Each centroid is a plan-time array literal, and ``array_max`` over
+    ``(dot, -idx)`` structs picks the argmax, ties to the smallest idx
+    as ``np.argmax`` does. The argmax of a dot product does not change
+    with the vector's scale, so the vector is not normalized (the
+    centroids are unit). A non-NULL vector whose width differs from the
+    centroids' raises.
+    """
+    v = _q(vec)
+    entries = ", ".join(
+        f"struct({_dot(v, _array(c))} AS s, {-i} AS ni)" for i, c in enumerate(centroids)
+    )
+    return F.expr(
+        _width_checked(
+            v, centroids.shape[1], f"CAST(-(array_max(array({entries})).ni) AS INT)"
         )
-        return F.expr(f"CAST(-(array_max(array({entries})).ni) AS INT)")
-    entries = []
-    for i, c in enumerate(centroids):
-        lit = F.lit([float(x) for x in c])  # whole-array literal, one Py4J call
-        entries.append(F.struct(dot(vec, lit).alias("s"), F.lit(-i).alias("ni")))
-    return (-F.array_max(F.array(*entries))["ni"]).cast("int")
+    )
 
 
-def _assign_udf(centroids: np.ndarray, nprobe: int):
-    """Arrow-vectorized nearest-centroid assignment: one numpy matmul
-    per batch (beats k interpreted array-lambda dot products by far)."""
-    c_t = centroids.T.astype(np.float64)
-
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def assign(vecs: pd.Series) -> pd.Series:
-        m = np.stack(vecs.to_numpy())
-        m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        sims = m @ c_t
-        top = np.argsort(-sims, axis=1)[:, :nprobe].astype(np.int32)
-        return pd.Series(list(top))
-
-    return assign
-
-
-def ivf_query_assign_jvm(
-    vec: Column | str, centroids: np.ndarray, nprobe: int
-) -> Column:
-    """Top-``nprobe`` nearest-centroid list ids, fully JVM-side.
-
-    Same centroid-literal trick as ``ivf_assign_jvm``: per-centroid
-    sequential-fold dots, sorted by (sim desc, idx asc) via
-    ``sort_array`` over (-sim, idx) structs, first ``nprobe`` ids.
-    Argmax ordering under a positive scale is normalization-invariant,
-    so the raw vector is used. This is the ENGINE-PORTABLE assignment:
-    the sequential fold matches the DuckDB oracle's ``list_reduce``
-    replay bit-for-bit, where numpy's blocked matmul (``_assign_udf``)
-    may differ in the last ulp. A column NAME builds the whole
-    expression in one JVM parse (construction cost — see
-    ``random_hyperplane_bucket``)."""
-    if isinstance(vec, str):
-        v = _sql_ident(vec)
-        entries = ", ".join(
-            f"struct(-({_dot_lit_sql(v, c)}) AS ns, {i} AS i)"
-            for i, c in enumerate(centroids)
-        )
-        return F.expr(
+def ivf_probe_lists(vec: str, centroids: np.ndarray, nprobe: int) -> Column:
+    """Ids of the ``nprobe`` nearest centroids of the array column named
+    ``vec``: ``sort_array`` over ``(-dot, idx)`` structs orders by dot
+    descending, ties to the smaller idx, and the first ``nprobe`` ids
+    are kept. Same scale invariance and width check as ``ivf_assign``.
+    """
+    v = _q(vec)
+    entries = ", ".join(
+        f"struct(-({_dot(v, _array(c))}) AS ns, {i} AS i)" for i, c in enumerate(centroids)
+    )
+    return F.expr(
+        _width_checked(
+            v,
+            centroids.shape[1],
             f"transform(slice(sort_array(array({entries})), 1, {nprobe}), "
-            "st -> CAST(st.i AS INT))"
+            "st -> CAST(st.i AS INT))",
         )
-    entries = []
-    for i, c in enumerate(centroids):
-        lit = F.lit([float(x) for x in c])  # whole-array literal, one Py4J call
-        entries.append(
-            F.struct((-dot(vec, lit)).alias("ns"), F.lit(i).alias("i"))
-        )
-    top = F.slice(F.sort_array(F.array(*entries)), 1, nprobe)
-    return F.transform(top, lambda st: st["i"].cast("int"))
+    )
 
 
 def ivf_topk(
@@ -244,7 +212,6 @@ def ivf_topk(
     nprobe: int = 3,
     sample_size: int = 4096,
     seed: int = 7,
-    query_assign: str = "pandas",
     corpus_count: int | None = None,
 ) -> DataFrame:
     """IVF approximate top-k: trained coarse quantizer, inverted lists.
@@ -261,16 +228,11 @@ def ivf_topk(
     ``ivf_topk`` itself from paying a full ``corpus.count()`` scan
     before any work (VERDICT r05 item 2: at 100 TB that pre-pass was
     an extra full pass over the data). Index: every corpus vector gets
-    its nearest centroid (the inverted list id) computed FULLY
-    JVM-SIDE (``ivf_assign_jvm`` — centroid literals + codegen dots;
-    corpus embeddings never cross into Python). Search: each query
-    probes its ``nprobe`` nearest lists via the Arrow-matmul pandas
-    path (the query side is tiny); exact cosine inside the probed
-    lists, top-k per query.
-
-    ``query_assign``: "pandas" (default — Arrow matmul, right for big
-    probe batches) or "jvm" (centroid-literal fold dots; bit-exactly
-    replayable by the SQL oracle, right for small probe sets).
+    its nearest centroid (``ivf_assign``). Search: each query probes
+    its ``nprobe`` nearest lists (``ivf_probe_lists``); exact cosine
+    inside the probed lists, top-k per query. Both assignments are
+    centroid-literal fold dots, which the SQL oracle replays bit for
+    bit; no vector crosses into Python.
 
     vs LSH: data-adapted partitions (clustered corpora get balanced
     lists where hyperplanes split clusters), one training pass, recall
@@ -309,19 +271,15 @@ def ivf_topk(
     c = corpus.select(
         F.col(corpus_id),
         F.col(vec_col).alias("_cv"),
-        ivf_assign_jvm(vec_col, cents).alias("_list"),
+        ivf_assign(vec_col, cents).alias("_list"),
     )
-    if query_assign == "jvm":
-        q_lists = ivf_query_assign_jvm(vec_col, cents, nprobe)
-    else:
-        q_lists = _assign_udf(cents, nprobe)(F.col(vec_col))
     q = queries.select(
         F.col(query_id),
         F.col(vec_col).alias("_qv"),
-        F.explode(q_lists).alias("_list"),
+        F.explode(ivf_probe_lists(vec_col, cents, nprobe)).alias("_list"),
     )
     scored = c.join(F.broadcast(q), "_list").select(
-        query_id, corpus_id, cosine(F.col("_cv"), F.col("_qv")).alias("cos_sim")
+        query_id, corpus_id, cosine("_cv", "_qv").alias("cos_sim")
     ).dropDuplicates([query_id, corpus_id])
     w = Window.partitionBy(query_id).orderBy(F.desc("cos_sim"), F.asc(corpus_id))
     return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
@@ -360,7 +318,7 @@ def lsh_topk(
         probes = F.array(F.col("_b0"))
     q = qb.select(query_id, "_qv", F.explode(probes).alias("bucket"))
     scored = c.join(F.broadcast(q), "bucket").select(
-        query_id, corpus_id, cosine(F.col("_cv"), F.col("_qv")).alias("cos_sim")
+        query_id, corpus_id, cosine("_cv", "_qv").alias("cos_sim")
     ).dropDuplicates([query_id, corpus_id])
     w = Window.partitionBy(query_id).orderBy(F.desc("cos_sim"), F.asc(corpus_id))
     return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)

@@ -99,3 +99,31 @@ def reference_asof(
             out.at[i, f"{c}_asof"] = picked[c]
         out.at[i, "ts_fact_asof"] = picked[ts_col]
     return out
+
+
+def reference_response_latency(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Per-conversation user→assistant response latency: ``n_turns``,
+    ``n_responses`` and the mean, median and max seconds from a
+    ``user`` turn to the ``assistant`` turn right after it, in
+    ``(ts, turn_idx)`` order (NaN when a conversation has none)."""
+    out = []
+    for conv_id, g in pdf.groupby("conv_id", sort=True):
+        g = g.sort_values(["ts", "turn_idx"], kind="mergesort")
+        # difference integer microseconds, then divide once, as the
+        # Spark gap does: exact int64 subtraction, one rounding
+        us = g["ts"].astype("datetime64[us]").astype("int64").to_numpy()
+        role = g["role"].to_numpy()
+        lat = (us[1:] - us[:-1]) / 1e6
+        resp = lat[(role[1:] == "assistant") & (role[:-1] == "user")]
+        has = len(resp) > 0
+        out.append(
+            {
+                "conv_id": conv_id,
+                "n_turns": len(g),
+                "n_responses": len(resp),
+                "mean_response_s": float(np.mean(resp)) if has else np.nan,
+                "p50_response_s": float(np.median(resp)) if has else np.nan,
+                "max_response_s": float(np.max(resp)) if has else np.nan,
+            }
+        )
+    return pd.DataFrame(out)
