@@ -276,8 +276,9 @@ def q_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_sort_multikey(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.7 xsl:sort: multi-key (text asc case-insensitive, number desc),
-    exposed as a deterministic global rank — computed DISTRIBUTED via
-    range-partition + local row_number + broadcast offsets (a
+    exposed as a deterministic global rank — computed DISTRIBUTED by
+    ``global_rank``: one range exchange whose stage sorts and numbers
+    its rows, then per-partition offsets added in a projection (a
     no-partitionBy window would collapse to one task at scale)."""
     from turboxsl_spark.operators.rank import global_rank
 
@@ -296,7 +297,7 @@ def q_sort_caseorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     strcasecmp comparator drops it; this engine implements the
     documented XSLT semantics via ``caseorder_keys`` — case-insensitive
     primary + whole-string byte-order tiebreak — on the same
-    distributed two-phase global_rank as q_sort_multikey. Mixed-case
+    distributed global_rank as q_sort_multikey. Mixed-case
     keys are synthesized deterministically (even part keys lowercase
     their type) so every tie group exercises the case ordering."""
     from turboxsl_spark.operators.rank import caseorder_keys, global_rank
@@ -1118,10 +1119,11 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT percentile_disc quantiles of l_extendedprice, distributed —
-    value at 1-based sorted position max(1, ceil(q*n)). Built on the
-    two-phase global_rank (range exchange + local row_number +
-    broadcast offsets), so no single-task window at any scale; the
-    oracle recomputes the positions with an explicit row_number so the
+    value at 1-based sorted position max(1, ceil(q*n)). Built on
+    global_rank's numbered range stage: the per-partition counts give n
+    and the target positions, and only the target rows are read back,
+    so no single-task window and no full rank at any scale; the oracle
+    recomputes the positions with an explicit row_number so the
     tie/interpolation semantics are pinned, not library-dependent."""
     from turboxsl_spark.operators.rank import exact_quantiles
 
@@ -1405,16 +1407,7 @@ def q_url_escape(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Ordering contract (VERDICT r04 item 1, r05 item 1): the driver's
-    # correctness gate records only the FIRST 50 entries. The 12
-    # queries rotated past the cutoff in r05 (driver-green r04,
-    # re-verified locally each session) come FIRST so they re-earn a
-    # driver row this round; the 12 rotated out below are exactly the
-    # ones freshly attested green in r05 (CORRECTNESS_r05.json), so
-    # after this round every one of the 62 queries holds a driver-green
-    # row across r05∪r06. Rotate again next round.
     return {
-        # -- rotated back inside the gate (driver-green r04, not r05) --
         "stratified_sample": q_stratified_sample,
         "repetition_profile": q_repetition_profile,
         "exact_quantiles": q_exact_quantiles,
@@ -1427,7 +1420,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "forward_fill": q_forward_fill,
         "asof_join": q_asof_join,
         "asof_forward": q_asof_forward,
-        # -- kept inside the 50-row window --
         "asof_salted": q_asof_salted,
         "asof_salted_fwd": q_asof_salted_fwd,
         "union_all": q_union_all,
@@ -1466,8 +1458,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "corpus_pipeline": q_corpus_pipeline,
         "decontaminate": q_decontaminate,
         "hash_sample": q_hash_sample,
-        # -- rotated past the 50-row cutoff this round (all freshly
-        #    driver-green in r05 — CORRECTNESS_r05.json) --
         "url_escape": q_url_escape,
         "base64": q_base64,
         "pack_sequences": q_pack_sequences,

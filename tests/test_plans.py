@@ -134,6 +134,22 @@ def test_rank_queries_have_no_single_partition_exchange(spark):
         assert "Exchange SinglePartition" not in plan, plan[:4000]
 
 
+def test_rank_plans_have_no_exchange_after_checkpoint(spark):
+    """A global rank reads its numbered range checkpoint once: the rows
+    carry their range partition and in-partition number, so the rank
+    is a projection over the checkpoint — no hash exchange on the
+    partition id, no Window, no broadcast offsets join."""
+    import __spark_entry__ as m
+    from turboxsl_spark.operators.rank import global_rank
+
+    df = spark.range(0, 500).selectExpr("id", "id % 7 AS k")
+    ranked = global_rank(df, [F.col("k").asc(), F.col("id").asc()], num_partitions=3)
+    for out in (m.q_sort_multikey(spark, SF_DIR), m.q_sort_caseorder(spark, SF_DIR), ranked):
+        plan = plan_of(out)
+        assert "Exchange" not in plan, plan[:4000]
+        assert "Window" not in plan, plan[:4000]
+
+
 def test_explode_tokens_uses_distributed_limit(spark):
     """Top-k phase 1 rides TakeOrderedAndProject (per-partition top-k +
     driver merge of k·P rows), not a global sort. Phase 2 (r06)

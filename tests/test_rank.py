@@ -324,18 +324,80 @@ def test_caseorder_keys_lower_and_upper_first(spark):
 
 
 def test_exact_quantiles_single_rank_scan(spark):
-    """After the r05 refactor, exact_quantiles derives n from the
-    rank's own per-partition counts — no separate count() pass. Guard
-    the wiring: _global_rank_counted's total equals the row count."""
-    from turboxsl_spark.operators.rank import _global_rank_counted
+    """exact_quantiles derives n from the per-partition counts of the
+    numbered range stage — no separate count() pass. Guard the wiring:
+    ``_numbered``'s total equals the row count."""
+    from turboxsl_spark.operators.rank import _numbered
 
     df = spark.range(0, 1234).withColumn("v", (F.col("id") * 37) % 1000)
-    ranked, n = _global_rank_counted(
-        df, [F.col("v").asc(), F.col("id").asc()], out="r"
+    part, offsets = _numbered(df, [F.col("v").asc(), F.col("id").asc()])
+    assert offsets[-1] == 1234
+    assert part.count() == 1234
+    empty, offsets0 = _numbered(df.where(F.lit(False)), [F.col("v").asc()])
+    assert offsets0[-1] == 0 and empty.count() == 0
+
+
+def _want_ranks(pdf):
+    want = pdf.sort_values(
+        ["grp", "score", "id"], ascending=[True, False, True], kind="mergesort"
     )
-    assert n == 1234
-    assert ranked.count() == 1234
-    empty, n0 = _global_rank_counted(
-        df.where(F.lit(False)), [F.col("v").asc()], out="r"
+    return dict(zip(want["id"], range(1, len(want) + 1)))
+
+
+@pytest.mark.parametrize(
+    "n, num_partitions", [(20, 50), (1, None), (1, 4), (1234, 37)]
+)
+def test_global_rank_partition_boundaries(spark, n, num_partitions):
+    """The id arithmetic at its edges: more range partitions asked for
+    than rows, a single row, and many small partitions. The frozen
+    in-partition numbers of each partition must be 1..count, so the
+    ranks match the pandas total order."""
+    pdf = _fixture(n=n, seed=n)
+    df = spark.createDataFrame(pdf)
+    order = [F.col("grp").asc(), F.col("score").desc(), F.col("id").asc()]
+    got = global_rank(df, order, out="rk", num_partitions=num_partitions)
+    assert dict(got.select("id", "rk").collect()) == _want_ranks(pdf)
+
+
+def test_rank_sql_skips_empty_partitions(spark):
+    """A partition id with no rows holds the running offset, so the
+    ranks of the partitions after it do not shift."""
+    from turboxsl_spark.operators.rank import _rank_sql
+
+    rows = [(0, 1), (0, 2), (2, 1), (2, 2), (3, 1)]
+    df = spark.createDataFrame(rows, "_gr_pid int, _gr_lrn long")
+    # counts {0: 2, 1: 0, 2: 2, 3: 1}
+    got = df.selectExpr(f"{_rank_sql([0, 2, 2, 4, 5])} AS r").collect()
+    assert [r["r"] for r in got] == [1, 2, 3, 4, 5]
+
+
+def test_exact_quantiles_partition_boundaries(spark):
+    """q = 0, q = 1, a repeated q, and targets on the first and the last
+    row of every range partition (read off the collected counts), on
+    values with many ties. AQE coalescing is off so the range stage
+    keeps its 8 partitions."""
+    from turboxsl_spark.operators.rank import _numbered, exact_quantiles
+
+    rng = np.random.default_rng(11)
+    vals = rng.integers(0, 60, 1234).astype("float64")
+    df = spark.createDataFrame(
+        [(i, float(v)) for i, v in enumerate(vals)], "id long, v double"
     )
-    assert n0 == 0 and empty.count() == 0
+    n = len(vals)
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        slim = df.select(F.col("v").alias("_q_v"), "id")
+        _, offsets = _numbered(slim, [F.col("_q_v").asc(), F.col("id").asc()])
+        assert len(offsets) > 2  # more than one range partition
+        edges = sorted({o + 1 for o in offsets[:-1]} | set(offsets[1:]))
+        # ceil(q*n) == r for q = (r - 0.5) / n
+        qs = [0.0, 1.0, 0.5, 0.5] + [(r - 0.5) / n for r in edges]
+        got = exact_quantiles(df, "v", qs, tiebreak=["id"]).collect()
+    finally:
+        spark.conf.set(key, prev)
+    s = np.sort(vals)
+    assert [r["q"] for r in got] == sorted(qs)
+    for r in got:
+        assert r["value"] == s[max(1, int(np.ceil(r["q"] * n))) - 1], r["q"]

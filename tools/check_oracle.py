@@ -39,21 +39,14 @@ def _norm_cell(v):
     return str(v)
 
 
-def _duck_arrow_types(rel):
-    """Column → arrow type for the DuckDB result (driver hashes include
-    types: DuckDB SUM(int)=HUGEINT vs Spark BIGINT was a round-1 fail)."""
-    t = rel.fetch_arrow_table()
-    return {f.name: str(f.type) for f in t.schema}, t
+def _arrow_result(table):
+    """Column names, row tuples and column → Arrow type of one result.
 
-
-def _spark_arrow_types(sdf):
-    import pyarrow as pa
-
-    batches = sdf._collect_as_arrow() if hasattr(sdf, "_collect_as_arrow") else None
-    if batches:
-        schema = pa.Table.from_batches(batches).schema
-        return {f.name: str(f.type) for f in schema}
-    return {}
+    One Arrow table per engine gives both the values and the types the
+    driver hashes (DuckDB SUM(int)=HUGEINT vs Spark BIGINT was a
+    round-1 fail), so each query runs once on each engine."""
+    rows = list(zip(*(c.to_pylist() for c in table.columns)))
+    return table.column_names, rows, {f.name: str(f.type) for f in table.schema}
 
 
 def _norm_rows(cols, rows):
@@ -82,22 +75,16 @@ def compare(spark, con, fn, oracle: str | None) -> tuple[str, list[str]]:
     or, without an oracle, ``"rows-only (n rows) — no oracle"``; each
     failed check adds one line to ``mismatches``.
     """
-    sdf = fn(spark, SF_DIR)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
+    scols, srows, stypes = _arrow_result(fn(spark, SF_DIR).toArrow())
     if oracle is None:
         return f"rows-only ({len(srows)} rows) — no oracle", []
-    rel = con.sql(oracle)
-    dcols = rel.columns
-    drows = rel.fetchall()
+    dcols, drows, dtypes = _arrow_result(con.sql(oracle).fetch_arrow_table())
     sc, sn = _norm_rows(scols, srows)
     dc, dn = _norm_rows(dcols, drows)
     bad = []
     if sc != dc:
         bad.append(f"COLUMN MISMATCH spark={sc} duck={dc}")
     # dtype parity: a value hash covers the type (DuckDB HUGEINT vs Spark BIGINT)
-    dtypes, _ = _duck_arrow_types(con.sql(oracle))
-    stypes = _spark_arrow_types(sdf)
     for col in set(dtypes) & set(stypes):
         a, b = stypes[col], dtypes[col]
         if a != b and not (
@@ -121,16 +108,8 @@ def main(names: list[str] | None = None) -> int:
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    all_names = list(qs)
-    names = names or all_names
     failures = 0
-    for name in names:
-        # the driver's correctness gate records only the FIRST 50
-        # queries() entries (discovered r04) — surface the cutoff so
-        # nobody mistakes a local-replica OK for a driver attestation
-        if len(all_names) > 50 and name == all_names[50] and names is all_names:
-            print("---- driver gate cutoff: entries below are NOT in "
-                  "CORRECTNESS_r*.json this round (rotate next round) ----")
+    for name in names or list(qs):
         summary, bad = compare(spark, con, qs[name], oracles.get(name))
         for line in bad:
             print(f"{name}: {line}")
