@@ -238,15 +238,15 @@ def exact_quantiles(
     n = offsets[-1]
     rows = []
     if n:
-        ranks = {float(q): _ceil_rank(q, n) for q in qs}
+        targets = {_ceil_rank(q, n) for q in qs}
         hits = dict(
             part.selectExpr(f"{_rank_sql(offsets)} AS _q_rank", "_q_v")
-            .where(f"_q_rank IN ({', '.join(map(str, set(ranks.values())))})")
+            .where(f"_q_rank IN ({', '.join(map(str, targets))})")
             .collect()
         )
         # sorted on the DRIVER: a DataFrame orderBy would add a range
         # exchange (and its sampling pass) to order a handful of rows
-        rows = sorted(((float(q), hits[ranks[float(q)]]) for q in qs), key=lambda r: r[0])
+        rows = sorted(((float(q), hits[_ceil_rank(q, n)]) for q in qs), key=lambda r: r[0])
     # from pandas the rows enter the plan as one Arrow batch (a
     # LocalRelation); from a Python list they would be a Python RDD
     # whose collect starts a Python worker (~0.4 s on 4 cores)
