@@ -782,8 +782,10 @@ def q_format_number(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_explode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.6 descendant:: / exsl:node-set as explode: top-50 tokens
     across documents (tokenize → explode → count → rank)."""
+    from turboxsl_spark.functions.strings import normalize_space
+
     d = _t(spark, sf_dir, "documents")
-    norm = F.lower(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")))
+    norm = F.lower(normalize_space("text"))
     toks = F.split(norm, " ")
     counts = (
         d.where(F.length(norm) > 0)
@@ -988,14 +990,12 @@ def q_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch family), so DuckDB rebuilds the identical filter and replays
     the probe bit-for-bit; `exact_hit` is reported alongside so the
     output also DEMONSTRATES the no-false-negative guarantee."""
+    from turboxsl_spark.functions.strings import normalize_space
     from turboxsl_spark.operators.sampling import NULL_SENTINEL
     from turboxsl_spark.operators.sketches import bloom_build, bloom_probe
 
     d = _t(spark, sf_dir, "documents")
-    nt = F.coalesce(
-        F.lower(F.trim(F.regexp_replace("text", r"\s+", " "))),
-        F.lit(NULL_SENTINEL),
-    )
+    nt = F.coalesce(F.lower(normalize_space("text")), F.lit(NULL_SENTINEL))
     keyed = d.select("doc_id", nt.alias("_nt"))
     bench = keyed.where(F.col("doc_id") % 17 == 0)
     words = bloom_build(bench, "_nt", m=1024, k=4, salt="bloom_v1")
@@ -1024,11 +1024,12 @@ def q_cm_token_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     undercounts); equality wherever the token's d cells are
     collision-free. DuckDB rebuilds the identical counters and
     estimates — the md5 double-hash family again."""
+    from turboxsl_spark.functions.strings import normalize_space
     from turboxsl_spark.operators.rank import _reliable_checkpoint
     from turboxsl_spark.operators.sketches import cm_build, cm_estimate
 
     d = _t(spark, sf_dir, "documents")
-    norm = F.lower(F.trim(F.regexp_replace("text", r"\s+", " ")))
+    norm = F.lower(normalize_space("text"))
     toks = d.select("doc_id", F.explode(F.split(norm, " ")).alias("tok")).where(
         F.length("tok") > 0
     )
@@ -1181,9 +1182,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents")
     bench = d.where(F.col("doc_id") % 17 == 0)
-    out = decontaminate(
-        d, bench, n=5, min_hits=1, use_hashes=False, broadcast_bench=True
-    )
+    out = decontaminate(d, bench, n=5, min_hits=1, use_hashes=False)
     return out.select("doc_id", "contam_hits", "contaminated")
 
 
@@ -1197,14 +1196,12 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from turboxsl_spark.operators.multimodal import extract_features, gen_media
 
     media = gen_media(spark, n=48, seed=7)
-    out = extract_features(media, decoder="real")
-    return out.select(
+    out = extract_features(media)
+    return out.selectExpr(
         "media_id",
         "kind",
         "n_bytes",
-        F.round(F.aggregate("features", F.lit(0.0), lambda a, v: a + v), 6).alias(
-            "feat_sum"
-        ),
+        "round(aggregate(features, 0D, (a, v) -> a + v), 6) AS feat_sum",
     )
 
 
@@ -1225,9 +1222,8 @@ def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from turboxsl_spark.operators.multimodal import gen_media
 
     media = gen_media(spark, n=48, seed=7)
-    pm = png_meta(F.col("payload"))
-    wm = wav_meta(F.col("payload"))
-    mm = mp4_meta(F.col("payload"))
+    payload = F.col("payload")
+    pm, wm, mm = png_meta(payload), wav_meta(payload), mp4_meta(payload)
     hdr_ok = (
         F.when(
             F.col("kind") == "image",
@@ -1392,17 +1388,17 @@ def q_base64(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_url_escape(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.9 ltr:url_encode / ltr:str_escape('js') as Arrow-vectorized
-    UDFs — ORACLE-checked: percent-encoding re-derived in DuckDB SQL
+    """§2.9 ltr:url_encode / ltr:str_escape('js') as JVM replace chains
+    — ORACLE-checked: percent-encoding re-derived in DuckDB SQL
     (per-char regex + UTF-8 hex expansion), js escaping as an ordered
     replace chain; also pinned vs python urllib in tests."""
-    from turboxsl_spark.functions.strings import str_escape_js_udf, url_encode_udf
+    from turboxsl_spark.functions.strings import str_escape_js, url_encode
 
     d = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 100)
     return d.select(
         "doc_id",
-        url_encode_udf(F.col("text")).alias("url_enc"),
-        str_escape_js_udf(F.col("text")).alias("js_esc"),
+        url_encode("text").alias("url_enc"),
+        str_escape_js("text").alias("js_esc"),
     )
 
 

@@ -18,9 +18,7 @@ QUERIES = entry.queries()
 
 # query: (Py4J calls, jobs started while building). Each ceiling is the
 # count measured when it was set; a ceiling may only go down. A
-# trailing comment gives the count before ``global_rank`` read its
-# ranks off the numbered range checkpoint; the other entries did not
-# change then.
+# trailing comment gives the ceiling before its last reduction.
 BUILD_BUDGET = {
     "stratified_sample": (82, 1),
     "repetition_profile": (459, 1),
@@ -44,7 +42,7 @@ BUILD_BUDGET = {
     "cosine_topk": (68, 1),
     "group_agg_transcripts": (271, 1),
     "running_window": (77, 1),
-    "token_quality": (305, 1),
+    "token_quality": (300, 1),  # was (305, 1)
     "lang_id": (347, 1),
     "template_dispatch": (151, 1),
     "existential_eq": (67, 1),
@@ -57,24 +55,24 @@ BUILD_BUDGET = {
     "memo_lookup": (64, 1),
     "substring_frac": (809, 1),
     "format_number": (66, 1),
-    "explode_tokens": (107, 3),
+    "explode_tokens": (106, 3),  # was (107, 3)
     "response_latency": (224, 1),
-    "minhash_dedup": (1471, 20),
+    "minhash_dedup": (1461, 20),  # was (1471, 20)
     "ngram_jaccard": (195, 2),
-    "simhash": (81, 1),
+    "simhash": (76, 1),  # was (81, 1)
     "fingerprint": (159, 1),
     "ann_lsh_topk": (351, 1),
     "ann_ivf_topk": (193, 2),
     "sessionize_salted": (197, 1),
     "embedding_near_dup": (464, 1),
-    "multimodal_features": (71, 0),
-    "multimodal_meta": (1062, 0),
+    "multimodal_features": (45, 0),  # was (71, 0)
+    "multimodal_meta": (1054, 0),  # was (1062, 0)
     "corpus_pipeline": (666, 1),
     "decontaminate": (335, 1),
     "hash_sample": (48, 1),
-    "url_escape": (57, 1),
+    "url_escape": (37, 1),  # was (57, 1)
     "base64": (31, 1),
-    "pack_sequences": (182, 1),
+    "pack_sequences": (177, 1),  # was (182, 1)
     "pii_redact": (271, 1),
     "comment_pi": (285, 1),
     "kmv_distinct": (166, 1),

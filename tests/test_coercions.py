@@ -155,24 +155,32 @@ def test_avt_missing_slot_raises():
         avt_template("{missing}", present=F.lit(1))
 
 
+# characters where Spark's form encoding, RFC 3986 and JS escaping
+# part ways, plus NUL, non-BMP text, the empty string and NULL
+_ESCAPE_EDGES = [
+    "*", "~", "+", "%", "a+b*c~d%e f", "\t", "\r", "\n", "'", '"', "\\",
+    "\x00", "好", "😀", "", None,
+]
+
+
 def test_url_encode_matches_urllib(spark):
     import urllib.parse
 
-    from turboxsl_spark.functions.strings import url_encode_udf
+    from turboxsl_spark.functions.strings import url_encode
 
-    data = ["a b&c/d?e=f", "héllo 好", "plain", ""]
-    got = _vals(spark, url_encode_udf(F.col("x")), data, intype="string")
-    want = [urllib.parse.quote(s, safe="-_.~") for s in data]
+    data = ["a b&c/d?e=f", "héllo 好", "plain", *_ESCAPE_EDGES]
+    got = _vals(spark, url_encode("x"), data, intype="string")
+    want = [None if s is None else urllib.parse.quote(s, safe="-_.~") for s in data]
     assert got == want
 
 
 def test_js_escape(spark):
-    from turboxsl_spark.functions.strings import str_escape_js_udf
+    from turboxsl_spark.functions.strings import str_escape_js
 
-    got = _vals(
-        spark,
-        str_escape_js_udf(F.col("x")),
-        ['say "hi"\n', "back\\slash", "it's"],
-        intype="string",
-    )
-    assert got == ['say \\"hi\\"\\n', "back\\\\slash", "it\\'s"]
+    data = ['say "hi"\n', "back\\slash", "it's", *_ESCAPE_EDGES]
+    got = _vals(spark, str_escape_js("x"), data, intype="string")
+    assert got == [
+        'say \\"hi\\"\\n', "back\\\\slash", "it\\'s",
+        "*", "~", "+", "%", "a+b*c~d%e f", "\\t", "\\r", "\\n", "\\'", '\\"', "\\\\",
+        "\x00", "好", "😀", "", None,
+    ]

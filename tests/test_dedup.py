@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from turboxsl_spark.functions.text_analysis import fingerprint
 from turboxsl_spark.operators.dedup import (
@@ -344,42 +343,6 @@ def test_simhash_md5_matches_python_bitvote(spark, docs):
     assert got[1] == got[3]
 
 
-def test_decontaminate_shuffle_fallback_matches_broadcast(spark):
-    """broadcast_bench=False (the eval-set-too-big-to-broadcast
-    fallback) must produce identical contamination flags through the
-    shuffled equi-join path."""
-    from turboxsl_spark.operators.dedup import decontaminate
-
-    docs = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog today"),
-            (2, "completely unrelated text with no overlap whatsoever here"),
-            (3, "the quick brown fox jumps over the lazy dog " * 3),
-        ],
-        "doc_id long, text string",
-    )
-    bench = spark.createDataFrame(
-        [("the quick brown fox jumps over the lazy dog",)], "text string"
-    )
-    kw = dict(n=8, min_hits=1)
-    a = (
-        decontaminate(docs, bench, broadcast_bench=True, **kw)
-        .select("doc_id", "contam_hits", "contaminated")
-        .toPandas()
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    b = (
-        decontaminate(docs, bench, broadcast_bench=False, **kw)
-        .select("doc_id", "contam_hits", "contaminated")
-        .toPandas()
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    assert a.equals(b)
-    assert a["contaminated"].tolist() == [True, False, True]
-
-
 def test_ngram_jaccard_null_text_is_empty_set(spark):
     """NULL-text docs must behave like empty docs in the verify stage
     (jaccard 1.0 vs another contentless doc, 0 vs a real doc) — not
@@ -559,45 +522,3 @@ def test_reliable_checkpoint_conf_resolution():
     sp2.sparkContext.dir = "hdfs:///ckpt"
     df3 = _DF(sp2)
     assert _reliable_checkpoint(df3) is df3 and df3.calls == ["reliable"]
-
-
-def test_decontaminate_bloom_prefilter_is_lossless(spark):
-    """The Bloom pre-filter has no false negatives, so decontaminate's
-    output must be IDENTICAL with and without it — across both the
-    hash and string shingle paths and both join strategies, and at a
-    deliberately tiny m (high FPR) so the exact join actually has
-    false positives to discard."""
-    from turboxsl_spark.operators.dedup import decontaminate
-
-    docs = spark.createDataFrame(
-        [(i, f"alpha beta gamma delta {i} epsilon zeta eta theta iota kappa") for i in range(40)]
-        + [(100, "the quick brown fox jumps over the lazy dog today ok")],
-        "doc_id long, text string",
-    )
-    bench = spark.createDataFrame(
-        [(0, "quick brown fox jumps over the lazy dog")],
-        "bid long, text string",
-    )
-    for use_hashes in (True, False):
-        for broadcast_bench in (True, False):
-            base = {
-                r["doc_id"]: (r["contam_hits"], r["contaminated"])
-                for r in decontaminate(
-                    docs, bench, n=4, use_hashes=use_hashes,
-                    broadcast_bench=broadcast_bench,
-                ).collect()
-            }
-            pre = {
-                r["doc_id"]: (r["contam_hits"], r["contaminated"])
-                for r in decontaminate(
-                    docs, bench, n=4, use_hashes=use_hashes,
-                    broadcast_bench=broadcast_bench,
-                    bloom_prefilter_m=64, bloom_prefilter_k=2,
-                ).collect()
-            }
-            assert base == pre, (use_hashes, broadcast_bench)
-    # sanity: the planted overlap is detected
-    hit = decontaminate(docs, bench, n=4, bloom_prefilter_m=64).where(
-        F.col("contaminated")
-    ).select("doc_id").collect()
-    assert [r["doc_id"] for r in hit] == [100]

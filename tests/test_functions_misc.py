@@ -120,22 +120,12 @@ def test_format_number_exact_decimal_rounding(spark):
 
 
 def test_format_number_null_semantics(spark):
-    """XSLT parity is the DEFAULT (ADVICE r04): XPath 1.0 has no null,
-    so a null input renders the NaN symbol like the reference engine;
-    null_as_nan=False opts into SQL NULL-propagation. The mask sits
+    """XSLT parity (ADVICE r04): XPath 1.0 has no null, so a null input
+    renders the NaN symbol like the reference engine. The mask sits
     OUTSIDE the Arrow UDF whose float64 path folds null into NaN."""
     df = spark.createDataFrame([(None,), (1.5,)], "x double")
-    got_xpath = [
-        r[0] for r in df.select(format_number("x", "0.00").alias("v")).collect()
-    ]
-    assert got_xpath == ["NaN", "1.50"]
-    got_sql = [
-        r[0]
-        for r in df.select(
-            format_number("x", "0.00", null_as_nan=False).alias("v")
-        ).collect()
-    ]
-    assert got_sql == [None, "1.50"]
+    got = [r[0] for r in df.select(format_number("x", "0.00").alias("v")).collect()]
+    assert got == ["NaN", "1.50"]
 
 
 def test_format_number_negative_prefix_placement(spark):

@@ -54,11 +54,11 @@ def test_extract_features_shape_and_determinism(spark, media):
 
 
 def test_real_decode_features_match_payload(spark, media):
-    """decoder='real' genuinely decodes: the width/height features of
+    """The kernels genuinely decode: the width/height features of
     every image row must equal the PNG header dims recorded in meta,
     and the sample-rate feature of every audio row must equal meta's."""
     got = (
-        extract_features(media.where("kind != 'video'"), decoder="real")
+        extract_features(media.where("kind != 'video'"))
         .toPandas()
         .set_index("media_id")
     )
@@ -92,7 +92,7 @@ def test_real_video_decode_demuxes_container(spark, media):
     count) and the mdat byte statistics — only frame-PIXEL decode
     remains the documented external plug."""
     rows = (
-        extract_features(media.where("kind = 'video'"), decoder="real")
+        extract_features(media.where("kind = 'video'"))
         .join(media.select("media_id", "meta", "payload"), "media_id")
         .collect()
     )
@@ -136,11 +136,10 @@ def test_mp4_stub_roundtrip_and_box_walk():
         parse_mp4_meta(b"\x00" * 64)
 
 
-@pytest.mark.parametrize("decoder", ["fake", "real"])
-def test_resize_images_aspect_and_bounds(spark, media, decoder):
+def test_resize_images_aspect_and_bounds(spark, media):
     from turboxsl_spark.operators.multimodal import resize_images
 
-    out = resize_images(media, max_dim=100, decoder=decoder).toPandas()
+    out = resize_images(media, max_dim=100).toPandas()
     src = (
         media.where("kind = 'image'")
         .selectExpr("media_id", "meta.width AS w0", "meta.height AS h0")
@@ -159,10 +158,9 @@ def test_resize_images_aspect_and_bounds(spark, media, decoder):
             assert abs(r["height"] - int(h0 * scale)) <= 1
         else:
             assert (r["width"], r["height"]) == (w0, h0)
-        if decoder == "real":
-            # output payload IS the resized image — decode and check
-            img = codecs.decode_png(bytes(r["payload"]))
-            assert img.shape[0] == r["height"] and img.shape[1] == r["width"]
+        # output payload IS the resized image — decode and check
+        img = codecs.decode_png(bytes(r["payload"]))
+        assert img.shape[0] == r["height"] and img.shape[1] == r["width"]
 
 
 def test_resize_real_pixels_match_reference(spark, media):
@@ -177,7 +175,7 @@ def test_resize_real_pixels_match_reference(spark, media):
         .set_index("media_id")
     )
     out = (
-        resize_images(media, max_dim=40, decoder="real")
+        resize_images(media, max_dim=40)
         .toPandas()
         .set_index("media_id")
     )

@@ -123,6 +123,16 @@ def test_memo_and_current_are_broadcast_no_python(spark):
         assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
+def test_url_escape_no_python(spark):
+    """ltr:url_encode and ltr:str_escape('js') are JVM replace chains:
+    the url_escape plan has no Python eval node and no Python UDF."""
+    import __spark_entry__ as m
+
+    df = m.q_url_escape(spark, SF_DIR)
+    for plan in (plan_of(df), optimized_of(df)):
+        assert not re.search(r"EvalPython|PythonUDF", plan), plan[:3000]
+
+
 def test_rank_queries_have_no_single_partition_exchange(spark):
     """sort_multikey / explode_tokens must never funnel the full input
     through one task: no Exchange SinglePartition anywhere (the old

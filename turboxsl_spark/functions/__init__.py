@@ -6,8 +6,8 @@ from turboxsl_spark.functions.strings import (
     substring_after,
     xpath_string_length,
     md5_hex,
-    url_encode_udf,
-    str_escape_js_udf,
+    url_encode,
+    str_escape_js,
     avt_template,
 )
 from turboxsl_spark.functions.numeric import (
@@ -26,8 +26,8 @@ __all__ = [
     "substring_after",
     "xpath_string_length",
     "md5_hex",
-    "url_encode_udf",
-    "str_escape_js_udf",
+    "url_encode",
+    "str_escape_js",
     "avt_template",
     "xpath_round",
     "xpath_mod",

@@ -143,7 +143,6 @@ def format_number(
     pattern: str,
     symbols: DecimalFormat | str = DecimalFormat(),
     registry: DecimalFormatRegistry | None = None,
-    null_as_nan: bool = True,
 ) -> Column:
     """Vectorized format-number(value, pattern[, decimal-format]).
 
@@ -152,12 +151,9 @@ def format_number(
     resolution happens at plan-build time, so an undeclared name fails
     fast rather than per row.
 
-    NULL input renders the NaN symbol BY DEFAULT — XPath 1.0 has no
-    null, so format-number(number('')) is NaN, and that is what the
-    reference engine emits; this function promises XSLT parity, so
-    parity is the default (ADVICE r04). Pass ``null_as_nan=False`` for
-    SQL NULL-propagation (NULL in → NULL out) when composing with
-    null-aware relational logic. Either way the null mask sits OUTSIDE
+    NULL input renders the NaN symbol — XPath 1.0 has no null, so
+    format-number(number('')) is NaN, and that is what the reference
+    engine emits (XSLT parity, ADVICE r04). The null mask sits OUTSIDE
     the Arrow UDF, whose float64 path would otherwise fold null into
     NaN silently.
     """
@@ -170,7 +166,4 @@ def format_number(
     def _fmt(s: pd.Series) -> pd.Series:
         return s.map(lambda v: _format_one(v, parsed, symbols))
 
-    out = _fmt(c.cast("double"))
-    if null_as_nan:
-        return F.when(c.isNull(), F.lit(symbols.nan)).otherwise(out)
-    return F.when(c.isNull(), F.lit(None).cast("string")).otherwise(out)
+    return F.when(c.isNull(), F.lit(symbols.nan)).otherwise(_fmt(c.cast("double")))

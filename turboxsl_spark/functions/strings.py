@@ -1,9 +1,7 @@
 """XPath-1.0-parity string functions, Spark-first.
 
-Everything that a built-in ``pyspark.sql.functions`` expression can
-express stays JVM-side inside whole-stage codegen; only escaping /
-templating that genuinely needs Python runs as Arrow-vectorized pandas
-UDFs (never per-row Python — ``input_hint`` requirement).
+Every function here is a built-in Spark expression (or a chain of
+them), so it stays JVM-side inside whole-stage codegen: no Python UDF.
 
 Reference parity targets (cited for the judge; semantics re-derived
 from the XPath 1.0 spec, code not consulted for implementation):
@@ -19,12 +17,9 @@ from the XPath 1.0 spec, code not consulted for implementation):
 from __future__ import annotations
 
 import re
-import urllib.parse
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 # the one whitespace-run regex of normalize-space, shared by its Column
@@ -42,7 +37,6 @@ def _sql_str(s: str) -> str:
 
 def normalize_space(c: Column | str) -> Column:
     """Strip leading/trailing whitespace, collapse internal runs to one space."""
-    c = F.col(c) if isinstance(c, str) else c
     return F.trim(F.regexp_replace(c, _WS_RUN, " "))
 
 
@@ -152,12 +146,22 @@ def md5_hex_sql(*cols: str) -> str:
     return f"md5(concat({', '.join(f'CAST({c} AS STRING)' for c in cols)}))"
 
 
-@F.pandas_udf(T.StringType())
-def url_encode_udf(s: pd.Series) -> pd.Series:
-    """Percent-encode (RFC 3986 unreserved kept) — vectorized via Arrow."""
-    return s.map(lambda x: None if x is None else urllib.parse.quote(x, safe="-_.~"))
+def url_encode(c: str) -> Column:
+    """``ltr:url_encode``: percent-encode the SQL expression ``c`` (a
+    column name, say), keeping only the RFC 3986 unreserved characters,
+    as ``urllib.parse.quote(x, safe="-_.~")`` does.
+
+    Spark's ``url_encode`` is form encoding (``java.net.URLEncoder``):
+    it writes a space as ``+`` and keeps ``*`` but encodes ``~``. A real
+    ``+`` comes out as ``%2B``, so every ``+`` left is a space, and three
+    replaces make it RFC 3986. One JVM-parsed SQL expression: a
+    Column-API chain costs Py4J calls per node at build time."""
+    return F.expr(
+        f"replace(replace(replace(url_encode({c}), '+', '%20'), '*', '%2A'), '%7E', '~')"
+    )
 
 
+# backslash first: a later replace must not see the backslashes it adds
 _JS_ESCAPES = {
     "\\": "\\\\",
     "'": "\\'",
@@ -168,19 +172,13 @@ _JS_ESCAPES = {
 }
 
 
-@F.pandas_udf(T.StringType())
-def str_escape_js_udf(s: pd.Series) -> pd.Series:
-    """JS-string escaping (backslash, quotes, control whitespace)."""
-
-    def esc(x):
-        if x is None:
-            return None
-        out = []
-        for ch in x:
-            out.append(_JS_ESCAPES.get(ch, ch))
-        return "".join(out)
-
-    return s.map(esc)
+def str_escape_js(c: str) -> Column:
+    """``ltr:str_escape('js')`` of the SQL expression ``c``: backslash,
+    quotes and control whitespace get a backslash escape. One
+    JVM-parsed SQL expression (see ``url_encode``)."""
+    for frm, to in _JS_ESCAPES.items():
+        c = f"replace({c}, {_sql_str(frm)}, {_sql_str(to)})"
+    return F.expr(c)
 
 
 def xml_escape(c: Column | str) -> Column:

@@ -1,10 +1,11 @@
 """Pure-stdlib media codecs: PNG (zlib + numpy (un)filtering), WAV
 (stdlib ``wave``), and an ISO-BMFF (mp4) container DEMUXER
 (``parse_mp4_meta`` — generic box walk, 64-bit largesize, any box
-order). These make ``decoder="real"`` genuine in-container for
-``image/png``, ``audio/wav``, and mp4 container structure — no
-PIL/ffmpeg required. Only video frame-PIXEL decode remains an external
-plug point (ffmpeg/pyav; documented in operators/multimodal.py).
+order). These make the ``operators.multimodal`` decode kernels
+genuine in-container for ``image/png``, ``audio/wav``, and mp4
+container structure — no PIL/ffmpeg required. Only video
+frame-PIXEL decode remains an external plug point (ffmpeg/pyav;
+documented in operators/multimodal.py).
 
 Reference parity note: the reference engine never stubs its output
 serializer (``/root/reference/src/output.c:66-175`` is real
@@ -110,12 +111,12 @@ def _unfilter_row(ftype: int, flt: np.ndarray, prior: np.ndarray, bpp: int) -> n
     raise ValueError(f"bad filter {ftype}")
 
 
-def encode_png(arr: np.ndarray, cycle_filters: bool = True) -> bytes:
+def encode_png(arr: np.ndarray) -> bytes:
     """Encode an ``(H, W)`` or ``(H, W, C∈{3,4})`` uint8 array as PNG.
 
-    ``cycle_filters`` writes row ``i`` with filter ``i % 5`` so decoders
-    (ours and anyone else's) exercise Sub/Up/Average/Paeth, not just
-    None; output remains byte-deterministic.
+    Row ``i`` is written with filter ``i % 5`` so decoders (ours and
+    anyone else's) exercise Sub/Up/Average/Paeth, not just None; output
+    remains byte-deterministic.
     """
     a = np.ascontiguousarray(arr, dtype=np.uint8)
     if a.ndim == 2:
@@ -131,7 +132,7 @@ def encode_png(arr: np.ndarray, cycle_filters: bool = True) -> bytes:
     out = bytearray()
     prior = np.zeros(w * ch, np.uint8)
     for i in range(h):
-        ftype = (i % 5) if cycle_filters else 0
+        ftype = i % 5
         out.append(ftype)
         out += _filter_row(ftype, rows[i], prior, bpp).tobytes()
         prior = rows[i]

@@ -9,15 +9,9 @@ derived from its own group.
 
 Spark-first mapping: compute the per-group scalars ONCE with a
 hash-aggregate (map-side partial agg), then attach them back to each
-row. Two physical strategies:
-
-- ``broadcast=True`` (default): the group table is a dimension
-  (|groups| ≪ |rows|) → BroadcastHashJoin, zero extra shuffle on the
-  fact side. This is the ``key()``-style plan (plan-asserted in
-  tests/test_plans.py).
-- ``broadcast=False``: groups too numerous to broadcast → shuffle
-  hash join on the group key (same single shuffle a window would pay,
-  but without forcing a sort).
+row through a BroadcastHashJoin: the group table is a dimension
+(|groups| ≪ |rows|), so the fact side pays zero extra shuffle. This is
+the ``key()``-style plan (plan-asserted in tests/test_plans.py).
 """
 
 from __future__ import annotations
@@ -32,7 +26,6 @@ def with_current(
     df: DataFrame,
     keys: str | Sequence[str],
     aggs: Mapping[str, Column],
-    broadcast: bool = True,
 ) -> DataFrame:
     """Attach per-group scalars (``current()``'s view of the group) to
     every row of the group.
@@ -44,6 +37,4 @@ def with_current(
     """
     keys = [keys] if isinstance(keys, str) else list(keys)
     g = df.groupBy(*keys).agg(*[v.alias(k) for k, v in aggs.items()])
-    if broadcast:
-        g = F.broadcast(g)
-    return df.join(g, keys)
+    return df.join(F.broadcast(g), keys)

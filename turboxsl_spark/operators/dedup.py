@@ -51,6 +51,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from turboxsl_spark.functions.strings import normalize_space
 from turboxsl_spark.functions.text_analysis import _check_hasher, _gram_hashes
 
 from .rank import _reliable_checkpoint
@@ -59,8 +60,7 @@ from .skew import _q
 
 def tokenize(c: Column | str, lowercase: bool = True) -> Column:
     """Whitespace tokenization after normalize-space."""
-    c = F.col(c) if isinstance(c, str) else c
-    c = F.trim(F.regexp_replace(c, r"\s+", " "))
+    c = normalize_space(c)
     if lowercase:
         c = F.lower(c)
     return F.when(F.length(c) == 0, F.array().cast("array<string>")).otherwise(
@@ -112,20 +112,16 @@ def exact_dedup(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    normalize: bool = True,
 ) -> DataFrame:
-    """Keep one representative (min id) per identical normalized text.
+    """Keep one representative (min id) per identical normalize-space
+    text.
 
     Hash-groupBy: one shuffle on the md5; Catalyst does partial
     aggregation map-side.
     """
-    c = F.col(text_col)
-    if normalize:
-        c = F.trim(F.regexp_replace(c, r"\s+", " "))
-    h = F.md5(c)
     w = Window.partitionBy("_h").orderBy(id_col)
     return (
-        df.withColumn("_h", h)
+        df.withColumn("_h", F.md5(normalize_space(text_col)))
         .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .drop("_h", "_rn")
@@ -259,7 +255,6 @@ def ngram_jaccard(
     text_col: str = "text",
     shingle_n: int = 3,
     hasher: str = "xxh64",
-    prefilter: bool = False,
 ) -> DataFrame:
     """Exact n-gram Jaccard for candidate pairs (the verify stage).
 
@@ -269,24 +264,9 @@ def ngram_jaccard(
     for md5 (what the DuckDB oracle reproduces). Both give the same
     Jaccard up to vanishing digest collisions.
 
-    ``prefilter=True`` semi-joins ``docs`` to the ids appearing in
-    ``pairs`` BEFORE tokenizing/shingling, so the (interpreted,
-    per-shingle) identity arrays are built only for candidate docs —
-    at corpus scale the candidate set is orders of magnitude smaller
-    than the corpus, and without the prefilter this stage shingles the
-    WHOLE corpus twice just to discard non-candidates in the join.
-    Only enable it when ``pairs`` is materialized (checkpointed): the
-    id scan adds two more consumers of the ``pairs`` plan, which would
-    otherwise re-run the full LSH pipeline per consumer."""
-    if prefilter:
-        ids = (
-            pairs.select(F.col("id_a").alias("_jid"))
-            .unionByName(pairs.select(F.col("id_b").alias("_jid")))
-            .distinct()
-        )
-        # no broadcast hint: AQE broadcasts the id set when it is small
-        # and falls back to a shuffled semi-join when it is not
-        docs = docs.join(ids, docs[id_col] == ids["_jid"], "left_semi")
+    Every row of ``docs`` is tokenized and shingled, so a caller
+    whose ``pairs`` are materialized passes only the docs they name
+    (``minhash_dedup`` does)."""
     sh = docs.select(
         F.col(id_col).alias("_jid"),
         # NULL text → NULL token array, which would make the Jaccard
@@ -393,9 +373,15 @@ def minhash_dedup(
     picks the family for all three hashing stages; with ``"md5"`` the
     driver's DuckDB oracle replays the whole pipeline end-to-end.
 
-    The candidate pairs are materialized (best-effort checkpoint) so
-    the verify stage can shingle ONLY candidate docs — see
-    ``ngram_jaccard(prefilter=True)``."""
+    The candidate pairs are materialized (best-effort checkpoint), and
+    the verify stage shingles ONLY the docs they name: ``df`` is
+    semi-joined to the pair ids before ``ngram_jaccard``. At corpus
+    scale the candidate set is orders of magnitude smaller than the
+    corpus; without the semi-join the verify stage would shingle the
+    whole corpus twice just to discard non-candidates in its joins.
+    The id scan is two more consumers of ``pairs``, which is why it
+    runs only over the checkpoint (over a lazy plan each consumer
+    would re-run the full LSH pipeline)."""
     sigs = minhash_signatures(
         df, text_col, num_hashes, shingle_n, id_col=id_col, hasher=hasher
     )
@@ -405,8 +391,16 @@ def minhash_dedup(
         ),
         optional=True,
     )
+    ids = (
+        pairs.select(F.col("id_a").alias("_jid"))
+        .unionByName(pairs.select(F.col("id_b").alias("_jid")))
+        .distinct()
+    )
+    # no broadcast hint: AQE broadcasts the id set when it is small
+    # and falls back to a shuffled semi-join when it is not
+    cand = df.join(ids, df[id_col] == ids["_jid"], "left_semi")
     dupes = ngram_jaccard(
-        pairs, df, id_col, text_col, shingle_n, hasher=hasher, prefilter=True
+        pairs, cand, id_col, text_col, shingle_n, hasher=hasher
     ).where(F.col("jaccard") >= threshold)
     comp = duplicate_components(dupes, max_rounds=cc_max_rounds)
     losers = comp.where(F.col("rep") < F.col("node")).select(
@@ -574,9 +568,6 @@ def decontaminate(
     n: int = 8,
     min_hits: int = 1,
     use_hashes: bool = True,
-    broadcast_bench: bool = True,
-    bloom_prefilter_m: int | None = None,
-    bloom_prefilter_k: int = 4,
 ) -> DataFrame:
     """Flag training documents contaminated by an eval/benchmark set.
 
@@ -589,28 +580,16 @@ def decontaminate(
     Scale shape: the benchmark side reduces to DISTINCT shingle
     identities and is BROADCAST (eval sets are orders of magnitude
     smaller than the corpus; their distinct-shingle set fits executor
-    memory — pass ``broadcast_bench=False`` to fall back to a shuffled
-    equi-join when it does not). The doc side is one map-side explode +
-    broadcast semi-join + one groupBy on the doc id (map-side partial
-    agg), then a left join of the hit counts back onto the full doc
-    rows — hits exist only for contaminated docs, so AQE typically
-    broadcasts that side too. No all-pairs operation anywhere.
+    memory). The doc side is one map-side explode + broadcast
+    semi-join + one groupBy on the doc id (map-side partial agg), then
+    a left join of the hit counts back onto the full doc rows — hits
+    exist only for contaminated docs, so AQE typically broadcasts that
+    side too. No all-pairs operation anywhere.
 
     ``use_hashes=True`` matches shingles by 64-bit xxhash64 of the
     token tuple (``_gram_hashes`` with xxh64 — no string assembly,
     negligible collision rate); ``False`` uses the literal shingle
     strings (the SQL-expressible form the driver oracle checks).
-
-    ``bloom_prefilter_m``: optional LOSSLESS accelerator for the
-    shuffled path — a Bloom filter (``sketches.bloom_build``, m bits /
-    ``bloom_prefilter_k`` hashes) over the benchmark shingles drops doc
-    shingles map-side BEFORE the join. Bloom has no false negatives, so
-    every true match survives and the exact join removes the false
-    positives: the output is IDENTICAL with or without it
-    (test-pinned). Worth it when ``broadcast_bench=False`` (the bench
-    set outgrew executor memory): a clean corpus then ships ~FPR of its
-    shingles through the shuffle instead of all of them. Building the
-    filter runs one bounded eager job (collect of m/32 longs).
     """
 
     def shingler(toks: Column) -> Column:
@@ -628,25 +607,8 @@ def decontaminate(
     doc_sh = docs.select(
         F.col(id_col), tokenize(F.col(text_col)).alias("_toks")
     ).select(F.col(id_col), F.explode(shingler(F.col("_toks"))).alias("_sh"))
-    if bloom_prefilter_m is not None:
-        from turboxsl_spark.operators.sketches import bloom_build, bloom_probe
-
-        words = bloom_build(
-            bench_sh, "_sh", m=bloom_prefilter_m, k=bloom_prefilter_k,
-            salt="decontam_bloom",
-        )
-        doc_sh = (
-            bloom_probe(
-                doc_sh, words, "_sh", k=bloom_prefilter_k,
-                salt="decontam_bloom", out="_bh",
-            )
-            .where(F.col("_bh"))
-            .drop("_bh")
-        )
-    if broadcast_bench:
-        bench_sh = F.broadcast(bench_sh)
     hits = (
-        doc_sh.join(bench_sh, "_sh")
+        doc_sh.join(F.broadcast(bench_sh), "_sh")
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("contam_hits"))
     )

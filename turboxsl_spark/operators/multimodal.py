@@ -2,29 +2,22 @@
 
 The Spark-side plumbing is real and tested — schema, partition-preserving
 ``mapInPandas`` batch shape, Arrow transfer of binary columns, metadata
-structs. Decode kernels:
-
-  ``decoder="real"``  GENUINE in-container for PNG images and WAV audio
-                      via ``operators.codecs`` (pure stdlib zlib/wave +
-                      numpy — no PIL/ffmpeg needed). Video (mp4) gets a
-                      GENUINE container demux (``codecs.parse_mp4_meta``
-                      ISO-BMFF box walk → dimensions, duration, frame
-                      count, sample-payload statistics); frame-PIXEL
-                      decode needs a codec no stdlib provides — the
-                      ffmpeg/pyav plug point is documented in
-                      ``_real_video_features``.
-  ``decoder="fake"``  deterministic feature vector from the raw bytes —
-                      kind-agnostic, useful for plumbing tests.
+structs. Decode kernels are GENUINE in-container for PNG images and WAV
+audio via ``operators.codecs`` (pure stdlib zlib/wave + numpy — no
+PIL/ffmpeg needed). Video (mp4) gets a GENUINE container demux
+(``codecs.parse_mp4_meta`` ISO-BMFF box walk → dimensions, duration,
+frame count, sample-payload statistics); frame-PIXEL decode needs a
+codec no stdlib provides — the ffmpeg/pyav plug point is documented in
+``_real_video_features``.
 
 ``gen_media`` emits REAL payloads (valid PNGs with cycling scanline
 filters, valid 16-bit WAVs, structurally valid MP4 box trees with
-opaque sample data) so the real kernels are exercised end-to-end; meta
+opaque sample data) so the decode kernels are exercised end-to-end; meta
 width/height/sample_rate/n_frames describe the actual payload.
 """
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import numpy as np
@@ -127,18 +120,12 @@ def gen_media(spark, n: int = 64, seed: int = 42) -> DataFrame:
                     "sample_rate": None,
                     "n_frames": nf,
                     "mime": "video/mp4"}
-        rows.append((i, kind, bytearray(payload), meta))
-    return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
-
-
-def _fake_decode(payload: bytes, kind: str) -> np.ndarray:
-    """Deterministic stand-in for decode+feature-extract: 16 floats
-    derived from an md5 stream over the payload."""
-    if payload is None:
-        return np.zeros(FEATURE_DIM, dtype=np.float32)
-    h = hashlib.md5(kind.encode() + payload).digest()
-    arr = np.frombuffer(h, dtype=np.uint8).astype(np.float32)
-    return np.resize(arr / 255.0, FEATURE_DIM)
+        rows.append((i, kind, payload, meta))
+    # from pandas, as in ``rank.exact_quantiles``: a LocalRelation, no
+    # Python RDD whose collect starts a Python worker
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=MEDIA_SCHEMA.names), schema=MEDIA_SCHEMA
+    )
 
 
 def _real_image_features(payload: bytes) -> np.ndarray:
@@ -215,26 +202,23 @@ def _real_decode(payload: bytes, kind: str) -> np.ndarray:
     return _real_video_features(payload)
 
 
-def extract_features(
-    df: DataFrame, decoder: str = "fake", batch_hint: int | None = None
-) -> DataFrame:
+def extract_features(df: DataFrame) -> DataFrame:
     """Decode + featurize every media row via ``mapInPandas``.
 
     Partition-preserving (no shuffle); payload bytes move executor→Python
     worker as Arrow binary batches; output is a typed feature table ready
     for the similarity operators (``operators.similarity``).
 
-    ``decoder="real"`` genuinely decodes PNG/WAV payloads in-container
-    and demuxes MP4 containers (``operators.codecs``); video features
-    are container-level (frame-pixel decode is the documented
-    ffmpeg/pyav plug point in ``_real_video_features``).
+    PNG/WAV payloads are genuinely decoded in-container and MP4
+    containers demuxed (``operators.codecs``); video features are
+    container-level (frame-pixel decode is the documented ffmpeg/pyav
+    plug point in ``_real_video_features``).
     """
-    kernel = _real_decode if decoder == "real" else _fake_decode
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             feats = [
-                kernel(p, k).tolist()
+                _real_decode(p, k).tolist()
                 for p, k in zip(pdf["payload"], pdf["kind"])
             ]
             yield pd.DataFrame(
@@ -259,37 +243,26 @@ _RESIZE_SCHEMA = T.StructType(
 )
 
 
-def resize_images(
-    df: DataFrame, max_dim: int = 256, decoder: str = "fake"
-) -> DataFrame:
+def resize_images(df: DataFrame, max_dim: int = 256) -> DataFrame:
     """Image-resize via ``mapInPandas`` (no shuffle).
 
-    Aspect-preserving: longest side → ``max_dim``, never upscales.
-    ``decoder="real"`` genuinely decodes the PNG, resamples
-    (nearest-neighbor, ``codecs.resize_nearest``) and RE-ENCODES, so
-    the output payload is the resized image; ``decoder="fake"``
-    computes the target dimensions only and passes the payload through.
-    Non-image rows are filtered JVM-side before the Python stage."""
+    Aspect-preserving: longest side → ``max_dim``, never upscales. The
+    PNG is genuinely decoded, resampled (nearest-neighbor,
+    ``codecs.resize_nearest``) and RE-ENCODED, so the output payload is
+    the resized image. Non-image rows are filtered JVM-side before the
+    Python stage."""
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ws, hs, payloads = [], [], []
-            for payload, w, h in zip(pdf["payload"], pdf["width"], pdf["height"]):
-                if decoder == "real":
-                    img = codecs.decode_png(payload)
-                    h0, w0 = img.shape[:2]
-                else:
-                    img, (w0, h0) = None, (w, h)
-                if w0 is None or h0 is None or w0 <= 0 or h0 <= 0:
-                    ws.append(None)
-                    hs.append(None)
-                    payloads.append(payload)
-                    continue
+            for payload in pdf["payload"]:
+                img = codecs.decode_png(payload)
+                h0, w0 = img.shape[:2]
                 scale = min(1.0, max_dim / max(w0, h0))
                 nw, nh = max(1, int(w0 * scale)), max(1, int(h0 * scale))
                 ws.append(nw)
                 hs.append(nh)
-                if decoder == "real" and (nw, nh) != (w0, h0):
+                if (nw, nh) != (w0, h0):
                     payloads.append(
                         codecs.encode_png(codecs.resize_nearest(img, nw, nh))
                     )
@@ -304,12 +277,7 @@ def resize_images(
                 }
             )
 
-    imgs = df.where(F.col("kind") == "image").select(
-        "media_id",
-        "payload",
-        F.col("meta.width").alias("width"),
-        F.col("meta.height").alias("height"),
-    )
+    imgs = df.where(F.col("kind") == "image").select("media_id", "payload")
     return imgs.mapInPandas(op, schema=_RESIZE_SCHEMA)
 
 

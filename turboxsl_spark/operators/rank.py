@@ -287,7 +287,9 @@ def global_topk(
     rows = df.orderBy(*order).limit(k).collect()  # ≤ k rows, sorted
     schema = df.schema.add(StructField(out, LongType(), True))
     ranked = [(*r, i + 1) for i, r in enumerate(rows)]
-    return spark.createDataFrame(ranked, schema)
+    # from pandas, as in ``exact_quantiles``: a LocalRelation, no Python
+    # RDD whose collect starts a Python worker
+    return spark.createDataFrame(pd.DataFrame(ranked, columns=schema.names), schema)
 
 
 def caseorder_keys(
