@@ -107,17 +107,19 @@ def q_positional_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.6 preceding/following-sibling as lag/lead over the event stream."""
-    ev = _t(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    micros = F.unix_micros(F.col("ts").cast("timestamp"))
-    return ev.select(
-        "user_id",
-        "event_id",
-        "value",
-        F.lag("value", 1).over(w).alias("value_lag1"),
-        F.lag("value", 2).over(w).alias("value_lag2"),
-        F.lead("value", 1).over(w).alias("value_lead1"),
-        ((micros - F.lag(micros, 1).over(w)).cast("double") / F.lit(1e6)).alias("gap_s"),
+    from turboxsl_spark.operators.sessionize import gap_seconds_fn
+    from turboxsl_spark.operators.windows import conv_over, lag_lead_fns
+
+    over = conv_over("user_id", ("ts", "event_id"))
+    fns = lag_lead_fns(["value"], (1, 2), lead=True)
+    cols = {
+        "value_lag1": fns["value_lag1"],
+        "value_lag2": fns["value_lag2"],
+        "value_lead1": fns["value_lead1_future"],
+        "gap_s": gap_seconds_fn(),
+    }
+    return _t(spark, sf_dir, "events").selectExpr(
+        "user_id", "event_id", "value", *[f"{f.sql(over)} AS {n}" for n, f in cols.items()]
     )
 
 
@@ -140,16 +142,14 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_forward_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Backfill: last non-null sparse marker at/before each event."""
-    ev = _t(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(
-        W.unboundedPreceding, 0
-    )
-    sparse = F.when(F.col("event_id") % 5 == 0, F.col("props"))
-    return ev.select(
-        "user_id",
-        "event_id",
-        sparse.alias("marker"),
-        F.last(sparse, ignorenulls=True).over(w).alias("marker_ffill"),
+    from turboxsl_spark.operators.windows import conv_over, forward_fill_fns
+
+    ffill = forward_fill_fns(["marker"])["marker_ffill"]
+    over = conv_over("user_id", ("ts", "event_id"))
+    return (
+        _t(spark, sf_dir, "events")
+        .selectExpr("*", "CASE WHEN event_id % 5 = 0 THEN props END AS marker")
+        .selectExpr("user_id", "event_id", "marker", f"{ffill.sql(over)} AS marker_ffill")
     )
 
 
@@ -408,15 +408,16 @@ def q_group_agg_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_running_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """position()/last()-style running count + running sum per user."""
-    ev = _t(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    run = w.rowsBetween(W.unboundedPreceding, 0)
-    return ev.select(
+    from turboxsl_spark.operators.windows import WindowFn, conv_over, position_fn
+
+    over = conv_over("user_id", ("ts", "event_id"))
+    running_sum = WindowFn("sum(value)", running=True)
+    return _t(spark, sf_dir, "events").selectExpr(
         "user_id",
         "event_id",
-        F.row_number().over(w).cast("long").alias("pos"),
-        F.count(F.lit(1)).over(W.partitionBy("user_id")).alias("last_pos"),
-        F.round(F.sum("value").over(run), 6).alias("running_value"),
+        f"CAST({position_fn().sql(over)} AS BIGINT) AS pos",
+        "count(1) OVER (PARTITION BY user_id) AS last_pos",
+        f"round({running_sum.sql(over)}, 6) AS running_value",
     )
 
 
@@ -782,14 +783,11 @@ def q_format_number(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_explode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.6 descendant:: / exsl:node-set as explode: top-50 tokens
     across documents (tokenize → explode → count → rank)."""
-    from turboxsl_spark.functions.strings import normalize_space
+    from turboxsl_spark.operators.dedup import tokenize
 
-    d = _t(spark, sf_dir, "documents")
-    norm = F.lower(normalize_space("text"))
-    toks = F.split(norm, " ")
     counts = (
-        d.where(F.length(norm) > 0)
-        .select(F.explode(toks).alias("token"))
+        _t(spark, sf_dir, "documents")
+        .select(F.explode(tokenize("text")).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -1024,15 +1022,12 @@ def q_cm_token_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     undercounts); equality wherever the token's d cells are
     collision-free. DuckDB rebuilds the identical counters and
     estimates — the md5 double-hash family again."""
-    from turboxsl_spark.functions.strings import normalize_space
+    from turboxsl_spark.operators.dedup import tokenize
     from turboxsl_spark.operators.rank import _reliable_checkpoint
     from turboxsl_spark.operators.sketches import cm_build, cm_estimate
 
     d = _t(spark, sf_dir, "documents")
-    norm = F.lower(normalize_space("text"))
-    toks = d.select("doc_id", F.explode(F.split(norm, " ")).alias("tok")).where(
-        F.length("tok") > 0
-    )
+    toks = d.select("doc_id", F.explode(tokenize("text")).alias("tok"))
     # ONE pass over the occurrences: the exact per-token rollup is
     # needed for the output anyway, so the sketch builds WEIGHTED from
     # (tok, count) — |vocab|·d exploded rows instead of |occurrences|·d
@@ -1252,25 +1247,20 @@ def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     lang = en AND exact-dedup representative — the filter→dedup chain a
     real corpus build runs, end-to-end oracle-checked. All map-side
     column expressions + ONE shuffle (the dedup hash window)."""
-    from turboxsl_spark.functions.strings import normalize_space
     from turboxsl_spark.functions.text_analysis import lang_id, quality_score, words_of
+    from turboxsl_spark.operators.dedup import exact_dedup
 
     d = _t(spark, sf_dir, "documents")
     # words materialized ONCE, shared by the 8 token lambdas across
     # quality_score + lang_id (inlined splits re-run per element access)
     scored = d.withColumn("_w", words_of("text")).select(
         "doc_id",
+        "text",
         quality_score(F.col("text"), words=F.col("_w")).alias("quality"),
         lang_id(F.col("_w"), tokenized=True).alias("lang"),
-        F.md5(normalize_space(F.col("text"))).alias("_h"),
     )
     kept = scored.where((F.col("quality") >= 0.5) & (F.col("lang") == "en"))
-    w = W.partitionBy("_h").orderBy("doc_id")
-    return (
-        kept.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select("doc_id", "quality", "lang")
-    )
+    return exact_dedup(kept).select("doc_id", "quality", "lang")
 
 
 def q_corpus_shards(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -27,9 +27,9 @@ BUILD_BUDGET = {
     "join_revenue_by_nation": (77, 3),
     "topk_per_group": (62, 1),
     "positional_filter": (45, 1),
-    "lag_lead": (113, 1),
+    "lag_lead": (13, 1),  # was (113, 1)
     "sessionize": (123, 1),
-    "forward_fill": (67, 1),
+    "forward_fill": (14, 1),  # was (67, 1)
     "asof_join": (85, 1),
     "asof_forward": (106, 1),
     "asof_salted": (124, 1),
@@ -41,7 +41,7 @@ BUILD_BUDGET = {
     "exact_dedup": (49, 1),
     "cosine_topk": (68, 1),
     "group_agg_transcripts": (271, 1),
-    "running_window": (77, 1),
+    "running_window": (11, 1),  # was (77, 1)
     "token_quality": (300, 1),  # was (305, 1)
     "lang_id": (347, 1),
     "template_dispatch": (151, 1),
@@ -55,11 +55,11 @@ BUILD_BUDGET = {
     "memo_lookup": (64, 1),
     "substring_frac": (809, 1),
     "format_number": (66, 1),
-    "explode_tokens": (106, 3),  # was (107, 3)
+    "explode_tokens": (100, 3),  # was (106, 3)
     "response_latency": (224, 1),
-    "minhash_dedup": (1461, 20),  # was (1471, 20)
-    "ngram_jaccard": (195, 2),
-    "simhash": (76, 1),  # was (81, 1)
+    "minhash_dedup": (1411, 18),  # was (1461, 20)
+    "ngram_jaccard": (175, 2),  # was (195, 2)
+    "simhash": (56, 1),  # was (76, 1)
     "fingerprint": (159, 1),
     "ann_lsh_topk": (351, 1),
     "ann_ivf_topk": (193, 2),
@@ -67,8 +67,8 @@ BUILD_BUDGET = {
     "embedding_near_dup": (464, 1),
     "multimodal_features": (45, 0),  # was (71, 0)
     "multimodal_meta": (1054, 0),  # was (1062, 0)
-    "corpus_pipeline": (666, 1),
-    "decontaminate": (335, 1),
+    "corpus_pipeline": (661, 1),  # was (666, 1)
+    "decontaminate": (295, 1),  # was (335, 1)
     "hash_sample": (48, 1),
     "url_escape": (37, 1),  # was (57, 1)
     "base64": (31, 1),
@@ -81,7 +81,7 @@ BUILD_BUDGET = {
     "mix_resample": (172, 1),
     "sort_caseorder": (123, 6),  # was (176, 6)
     "bloom_decontaminate": (229, 3),
-    "cm_token_freq": (226, 5),
+    "cm_token_freq": (219, 5),  # was (226, 5)
 }
 
 

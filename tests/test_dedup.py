@@ -45,6 +45,17 @@ def test_exact_dedup_normalized(spark, docs):
     assert kept == [1, 4, 5, 6]
 
 
+def test_tokenize_blank_null_and_case(spark):
+    """Blank text has no tokens (not one empty token), NULL stays NULL,
+    any whitespace run separates, and tokens are lowercased. NBSP is not
+    whitespace to ``normalize_space`` (Java ``\\s``), so it stays in its
+    token."""
+    texts = ["", "   ", None, "\tA  b\n", "MiXeD Case", "\u00a0x y"]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, text string")
+    got = [r["t"] for r in df.orderBy("i").select(tokenize("text").alias("t")).collect()]
+    assert got == [[], [], None, ["a", "b"], ["mixed", "case"], ["\u00a0x", "y"]]
+
+
 def test_shingles_jvm_matches_python(spark, docs):
     row = docs.where("doc_id = 6").select(
         shingles(tokenize("text"), 3).alias("sh")

@@ -4,7 +4,6 @@ from turboxsl_spark.functions.strings import (
     xpath_substring,
     substring_before,
     substring_after,
-    xpath_string_length,
     md5_hex,
     url_encode,
     str_escape_js,
@@ -24,7 +23,6 @@ __all__ = [
     "xpath_substring",
     "substring_before",
     "substring_after",
-    "xpath_string_length",
     "md5_hex",
     "url_encode",
     "str_escape_js",

@@ -8,7 +8,6 @@ from the XPath 1.0 spec, code not consulted for implementation):
   concat/substring/contains/starts-with  /root/reference/src/functions.c:160-332
   normalize-space                        /root/reference/src/functions.c:395-424
   translate (delete semantics)           /root/reference/src/functions.c:711-751
-  string-length (codepoints)             /root/reference/src/functions.c:426-445
   ltr:md5_hex                            /root/reference/src/functions.c:886-906
   ltr:url_encode / str_escape            /root/reference/src/functions.c:39-102
   AVT `{expr}` interpolation             /root/reference/src/strings.c:49-86
@@ -127,12 +126,6 @@ def substring_after(c: Column | str, sep: str) -> Column:
     c = F.col(c) if isinstance(c, str) else c
     skip = F.length(F.substring_index(c, sep, 1)) + len(sep) + 1
     return F.when(c.contains(sep), F.substring(c, skip, 0x7FFFFFFF)).otherwise(F.lit(""))
-
-
-def xpath_string_length(c: Column | str) -> Column:
-    """Codepoint count — ``F.length`` counts characters on StringType."""
-    c = F.col(c) if isinstance(c, str) else c
-    return F.length(c)
 
 
 def md5_hex(*cols: Column | str) -> Column:

@@ -58,7 +58,7 @@ def bpe_ish_token_count(c: Column | str) -> Column:
 
 
 def _word_set(c: Column) -> Column:
-    return F.split(F.lower(F.trim(F.regexp_replace(c, r"\s+", " "))), " ")
+    return F.split(F.lower(normalize_space(c)), " ")
 
 
 def words_of(c: Column | str) -> Column:

@@ -47,7 +47,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -58,14 +58,10 @@ from .rank import _reliable_checkpoint
 from .skew import _q
 
 
-def tokenize(c: Column | str, lowercase: bool = True) -> Column:
-    """Whitespace tokenization after normalize-space."""
-    c = normalize_space(c)
-    if lowercase:
-        c = F.lower(c)
-    return F.when(F.length(c) == 0, F.array().cast("array<string>")).otherwise(
-        F.split(c, " ")
-    )
+def tokenize(c: Column | str) -> Column:
+    """Lowercased whitespace tokens after normalize-space. Blank text
+    gives an empty array, NULL text NULL."""
+    return F.array_remove(F.split(F.lower(normalize_space(c)), " "), "")
 
 
 def shingles(tokens: Column, n: int = 3) -> Column:
@@ -116,8 +112,10 @@ def exact_dedup(
     """Keep one representative (min id) per identical normalize-space
     text.
 
-    Hash-groupBy: one shuffle on the md5; Catalyst does partial
-    aggregation map-side.
+    A ``row_number`` window over the md5 of the normalized text, ordered
+    by id: one shuffle and sort on the md5, which carries only the
+    columns the caller keeps (Catalyst prunes the rest below the
+    window).
     """
     w = Window.partitionBy("_h").orderBy(id_col)
     return (
@@ -310,7 +308,8 @@ def duplicate_components(dupes: DataFrame, max_rounds: int = 16) -> DataFrame:
     rep) long table, checkpointed to truncate lineage (executor-local
     under ``local[*]``, RELIABLE into ``spark.turboxsl.scratchDir`` on
     a cluster — see ``_reliable_checkpoint``), and stops at the
-    fixpoint detected by a cheap changed-row probe.
+    fixpoint: an ``Observation`` on each round's checkpoint counts the
+    changed labels, so the checkpoint job itself reports it.
     ``max_rounds`` (default 16 → diameter ≤ 2^16) is a runaway bound,
     not a correctness knob.
 
@@ -337,10 +336,11 @@ def duplicate_components(dupes: DataFrame, max_rounds: int = 16) -> DataFrame:
             F.col("rep").alias("_old"),
         )
         # (2) pointer-jump through the (tiny) label table; the PREVIOUS
-        # round's label rides along so the fixpoint probe below is a
-        # filter over this checkpoint, not a join back to the old table
-        # (the probe join was a measured ~0.3s/round at sf0.1)
+        # round's label rides along so the checkpoint job counts the
+        # changed labels, with no join back to the old table and no
+        # probe job of its own
         r2 = stepped.select(F.col("node").alias("_n2"), F.col("rep").alias("_r2"))
+        changed = Observation()
         jumped = _reliable_checkpoint(
             stepped.join(r2, stepped.rep == r2._n2, "left")
             .select(
@@ -348,10 +348,10 @@ def duplicate_components(dupes: DataFrame, max_rounds: int = 16) -> DataFrame:
                 F.least("rep", F.coalesce("_r2", "rep")).alias("rep"),
                 "_old",
             )
+            .observe(changed, F.expr("count_if(rep != _old)").alias("n"))
         )
-        changed = jumped.where(F.col("rep") != F.col("_old")).limit(1).count()
         rep = jumped.drop("_old")
-        if changed == 0:
+        if changed.get["n"] == 0:
             break
     return rep
 
@@ -373,9 +373,9 @@ def minhash_dedup(
     picks the family for all three hashing stages; with ``"md5"`` the
     driver's DuckDB oracle replays the whole pipeline end-to-end.
 
-    The candidate pairs are materialized (best-effort checkpoint), and
-    the verify stage shingles ONLY the docs they name: ``df`` is
-    semi-joined to the pair ids before ``ngram_jaccard``. At corpus
+    The candidate pairs are checkpointed, and the verify stage
+    shingles ONLY the docs they name: ``df`` is semi-joined to the
+    pair ids before ``ngram_jaccard``. At corpus
     scale the candidate set is orders of magnitude smaller than the
     corpus; without the semi-join the verify stage would shingle the
     whole corpus twice just to discard non-candidates in its joins.
@@ -388,8 +388,7 @@ def minhash_dedup(
     pairs = _reliable_checkpoint(
         lsh_candidate_pairs(
             sigs, id_col, "minhash", bands, num_hashes // bands, hasher=hasher
-        ),
-        optional=True,
+        )
     )
     ids = (
         pairs.select(F.col("id_a").alias("_jid"))

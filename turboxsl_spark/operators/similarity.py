@@ -70,12 +70,6 @@ def _width_checked(vec: str, dim: int, expr: str) -> str:
     )
 
 
-def l2norm(vec: str) -> Column:
-    """Euclidean norm of the array column named ``vec``."""
-    v = _q(vec)
-    return F.expr(f"sqrt({_dot(v, v)})")
-
-
 def cosine(a: str, b: str) -> Column:
     """Cosine similarity of the array columns named ``a`` and ``b``."""
     qa, qb = _q(a), _q(b)

@@ -151,11 +151,6 @@ def with_position(df: DataFrame, w: WindowSpec | None = None, col: str = "positi
     return with_window_fns(df, {col: position_fn()}, w)
 
 
-def with_last(df: DataFrame, key: str = KEY, col: str = "last_pos") -> DataFrame:
-    """XPath ``last()`` = size of the selection = count over the group."""
-    return df.withColumn(col, F.count("*").over(Window.partitionBy(key)))
-
-
 def with_lag_lead(
     df: DataFrame,
     cols: Sequence[str],

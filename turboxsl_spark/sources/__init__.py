@@ -6,7 +6,6 @@ from turboxsl_spark.sources.transcripts import (
     transcripts_from_events,
     TRANSCRIPT_SCHEMA,
 )
-from turboxsl_spark.sources.tables import load_table, load_all, register_views
 
 __all__ = [
     "gen_transcripts_pdf",
@@ -15,7 +14,4 @@ __all__ = [
     "gen_tool_catalog",
     "transcripts_from_events",
     "TRANSCRIPT_SCHEMA",
-    "load_table",
-    "load_all",
-    "register_views",
 ]

@@ -1,46 +1,18 @@
-"""Parquet table loaders for the driver's testdata star schema.
+"""Bucketed table layouts: writers and the one reader that keeps the
+layout.
 
 The reference parses one XML document per request
 (``/root/reference/src/parse.c:334-395``); our sources are columnar
 parquet/Iceberg scans — rows arrive already structured, predicate
 pushdown and column pruning are free (check ``PushedFilters`` /
-``ReadSchema`` in ``df.explain``).
+``ReadSchema`` in ``df.explain``). The driver's testdata star schema is
+read by ``__spark_entry__._t``; this module holds only the cluster
+layout that makes the flagship window a zero-exchange plan.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
-def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def load_all(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    return {t: load_table(spark, t, sf_dir) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register every table as a temp view for ``spark.sql`` use."""
-    for t in TABLES:
-        load_table(spark, t, sf_dir).createOrReplaceTempView(t)
 
 
 def write_bucketed(
