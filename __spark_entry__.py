@@ -467,27 +467,27 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup dedup over documents, ORACLE-exact:
-    ``minhash_dedup(hasher="md5")`` (the md5 hash family, see
-    operators/dedup.py) lets one DuckDB statement replay the WHOLE
-    pipeline — 64-slot signatures (48-bit double hashing over md5
-    shingle digests), 16-band bucket join, md5-shingle Jaccard verify
-    at 0.8, transitive-closure components, min-id representative. The
-    default xxh64 family is pinned by tests/test_dedup.py."""
+    """MinHash+LSH near-dup dedup over documents, ORACLE-exact: every
+    hash of ``minhash_dedup`` is md5-derived (see operators/dedup.py),
+    so one DuckDB statement replays the WHOLE pipeline — 64-slot
+    signatures (48-bit double hashing over md5 shingle digests),
+    16-band bucket join, md5-shingle Jaccard verify at 0.8,
+    transitive-closure components, min-id representative."""
     from turboxsl_spark.operators.dedup import minhash_dedup
 
     d = _t(spark, sf_dir, "documents")
     return (
-        minhash_dedup(d, threshold=0.8, hasher="md5").select("doc_id").orderBy("doc_id")
+        minhash_dedup(d, threshold=0.8).select("doc_id").orderBy("doc_id")
     )
 
 
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact word-3-gram Jaccard for adjacent doc-id pairs — the verify
-    stage of the near-dup pipeline, oracle-checked end-to-end (string
-    shingles here so DuckDB can mirror them; ``dedup.ngram_jaccard``
-    computes the same value over xxh64 or md5 shingle hashes, pinned
-    in tests/test_dedup.py)."""
+    stage of the near-dup pipeline, oracle-checked end-to-end over the
+    shingle strings DuckDB mirrors. ``dedup.ngram_jaccard`` computes
+    the same value over md5 shingle digests (pinned in
+    tests/test_dedup.py); called here it was slower in a paired A/B
+    (AB_hash.json), because it shingles every doc once per join side."""
     from turboxsl_spark.operators.dedup import shingles, tokenize
     from turboxsl_spark.operators.rank import _reliable_checkpoint
 
@@ -501,9 +501,8 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (paired A/B at sf0.1: 1.28s -> 0.90s).
     sh = _reliable_checkpoint(
         d.select("doc_id", tokenize(F.col("text")).alias("_toks")).select(
-            "doc_id", F.array_distinct(shingles(F.col("_toks"), 3)).alias("sh")
-        ),
-        optional=True,
+            "doc_id", F.array_distinct(shingles("_toks", 3)).alias("sh")
+        )
     )
     a = sh.selectExpr("doc_id AS id_a", "sh AS sh_a")
     b = sh.selectExpr("doc_id - 1 AS id_a", "doc_id AS id_b", "sh AS sh_b")
@@ -521,26 +520,24 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 60-bit SimHash per document, ORACLE-exact:
-    ``simhash(hasher="md5")`` hashes tokens with md5_hash60, so DuckDB
-    restates the numpy bit-vote as 60 conditional SUMs per doc and
-    matches bit-for-bit. The 64-bit default xxh64 family is pinned by
-    tests/test_dedup.py."""
+    ``simhash`` hashes tokens with md5_hash60, so DuckDB restates the
+    numpy bit-vote as 60 conditional SUMs per doc and matches
+    bit-for-bit."""
     from turboxsl_spark.operators.dedup import simhash
 
     d = _t(spark, sf_dir, "documents")
-    return simhash(d, hasher="md5").select("doc_id", "simhash")
+    return simhash(d).select("doc_id", "simhash")
 
 
 def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-sensitive rolling document fingerprint, ORACLE-exact: the
-    md5 chain of ``fingerprint(hasher="md5")`` is replayed by DuckDB via
-    list_reduce over the same 4-gram digests. The 64-bit default xxh64
-    family is pinned by tests/test_text_analysis.py."""
+    md5 chain of ``fingerprint`` is replayed by DuckDB via list_reduce
+    over the same 4-gram digests."""
     from turboxsl_spark.functions.text_analysis import fingerprint, words_of
 
     d = _t(spark, sf_dir, "documents")
     return d.select("doc_id", words_of("text").alias("_w")).select(
-        "doc_id", fingerprint(F.col("_w"), tokenized=True, hasher="md5").alias("fp_md5")
+        "doc_id", fingerprint("_w").alias("fp_md5")
     )
 
 
@@ -1034,9 +1031,11 @@ def q_cm_token_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (identical counters; the pre-aggregated form is the 100-TB shape).
     # The rollup is materialized (bounded by |vocab|) because it has
     # TWO consumers — the eager sketch build and the output join —
-    # which otherwise each re-run the full occurrence explode+agg.
+    # which otherwise each re-run the full occurrence explode+agg
+    # (paired A/B, AB_cm_checkpoint.json: 1.17 s with the checkpoint vs
+    # 1.24 s without at sf0.1, 5 of 6 pairs; a wash at sf0.01).
     exact = _reliable_checkpoint(
-        toks.groupBy("tok").agg(F.count(F.lit(1)).alias("exact_cnt")), optional=True
+        toks.groupBy("tok").agg(F.count(F.lit(1)).alias("exact_cnt"))
     )
     sketch = cm_build(exact, "tok", w=512, d=4, salt="cm_v1", weight_col="exact_cnt")
     probe = toks.where(F.col("doc_id") % 97 == 0).select("tok").distinct()
@@ -1169,15 +1168,14 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """N-gram benchmark decontamination, oracle-checked end-to-end:
     every doc with doc_id % 17 == 0 plays the role of an eval document;
     a training doc is contaminated when any of its word 5-gram shingle
-    occurrences appears in the eval set's shingle set. String-shingle
-    twin of the xxhash64 fast path (use_hashes=False so DuckDB can
-    express the identical containment); hash/string agreement is
-    property-tested in tests/test_dedup.py."""
+    occurrences appears in the eval set's shingle set. Shingles match
+    as literal strings, so DuckDB expresses the identical
+    containment."""
     from turboxsl_spark.operators.dedup import decontaminate
 
     d = _t(spark, sf_dir, "documents")
     bench = d.where(F.col("doc_id") % 17 == 0)
-    out = decontaminate(d, bench, n=5, min_hits=1, use_hashes=False)
+    out = decontaminate(d, bench, n=5, min_hits=1)
     return out.select("doc_id", "contam_hits", "contaminated")
 
 

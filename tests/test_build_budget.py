@@ -57,10 +57,10 @@ BUILD_BUDGET = {
     "format_number": (66, 1),
     "explode_tokens": (100, 3),  # was (106, 3)
     "response_latency": (224, 1),
-    "minhash_dedup": (1411, 18),  # was (1461, 20)
-    "ngram_jaccard": (175, 2),  # was (195, 2)
+    "minhash_dedup": (1229, 18),  # was (1411, 18)
+    "ngram_jaccard": (107, 2),  # was (175, 2)
     "simhash": (56, 1),  # was (76, 1)
-    "fingerprint": (159, 1),
+    "fingerprint": (60, 1),  # was (159, 1)
     "ann_lsh_topk": (351, 1),
     "ann_ivf_topk": (193, 2),
     "sessionize_salted": (197, 1),
@@ -68,7 +68,7 @@ BUILD_BUDGET = {
     "multimodal_features": (45, 0),  # was (71, 0)
     "multimodal_meta": (1054, 0),  # was (1062, 0)
     "corpus_pipeline": (661, 1),  # was (666, 1)
-    "decontaminate": (295, 1),  # was (335, 1)
+    "decontaminate": (159, 1),  # was (295, 1)
     "hash_sample": (48, 1),
     "url_escape": (37, 1),  # was (57, 1)
     "base64": (31, 1),

@@ -4,7 +4,6 @@ from __future__ import annotations
 
 import pytest
 
-from turboxsl_spark.functions.text_analysis import fingerprint
 from turboxsl_spark.operators.dedup import (
     exact_dedup,
     lsh_candidate_pairs,
@@ -15,8 +14,6 @@ from turboxsl_spark.operators.dedup import (
     simhash,
     tokenize,
 )
-
-HASHERS = pytest.mark.parametrize("hasher", ["xxh64", "md5"])
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat sleeps "
@@ -57,21 +54,24 @@ def test_tokenize_blank_null_and_case(spark):
 
 
 def test_shingles_jvm_matches_python(spark, docs):
-    row = docs.where("doc_id = 6").select(
-        shingles(tokenize("text"), 3).alias("sh")
-    ).collect()[0]
+    row = (
+        docs.where("doc_id = 6")
+        .select(tokenize("text").alias("t"))
+        .select(shingles("t", 3).alias("sh"))
+        .collect()[0]
+    )
     assert row["sh"] == ["short doc"]  # shorter than n → whole text
     row = (
         spark.createDataFrame([("a b c d",)], "text string")
-        .select(shingles(tokenize("text"), 3).alias("sh"))
+        .select(tokenize("text").alias("t"))
+        .select(shingles("t", 3).alias("sh"))
         .collect()[0]
     )
     assert row["sh"] == ["a b c", "b c d"]
 
 
-@HASHERS
-def test_minhash_identical_signatures(spark, docs, hasher):
-    sigs = minhash_signatures(docs, num_hashes=32, hasher=hasher).collect()
+def test_minhash_identical_signatures(spark, docs):
+    sigs = minhash_signatures(docs, num_hashes=32).collect()
     by_id = {r["doc_id"]: r["minhash"] for r in sigs}
     assert by_id[1] == by_id[2] == by_id[3]  # normalization folds ws
     assert by_id[1] != by_id[5]
@@ -80,10 +80,9 @@ def test_minhash_identical_signatures(spark, docs, hasher):
     assert same >= 16  # jaccard ~0.85 → expect most slots equal
 
 
-@HASHERS
-def test_lsh_finds_near_dup_pair(spark, docs, hasher):
-    sigs = minhash_signatures(docs, num_hashes=64, hasher=hasher)
-    pairs = lsh_candidate_pairs(sigs, bands=16, rows_per_band=4, hasher=hasher).toPandas()
+def test_lsh_finds_near_dup_pair(spark, docs):
+    sigs = minhash_signatures(docs, num_hashes=64)
+    pairs = lsh_candidate_pairs(sigs, bands=16, rows_per_band=4).toPandas()
     pairset = {tuple(p) for p in pairs[["id_a", "id_b"]].values}
     assert (1, 4) in pairset
     assert (1, 5) not in pairset and (5, 6) not in pairset
@@ -102,11 +101,10 @@ def test_ngram_jaccard_exact_value(spark, docs):
     assert j[(1, 5)] < 0.05
 
 
-@HASHERS
-def test_minhash_dedup_end_to_end(spark, docs, hasher):
+def test_minhash_dedup_end_to_end(spark, docs):
     # one-word change in 25 words → jaccard 20/26 ≈ 0.77
     kept = (
-        minhash_dedup(docs, threshold=0.7, hasher=hasher)
+        minhash_dedup(docs, threshold=0.7)
         .select("doc_id")
         .toPandas()["doc_id"]
         .sort_values()
@@ -115,7 +113,7 @@ def test_minhash_dedup_end_to_end(spark, docs, hasher):
     assert kept == [1, 5, 6]
     # at a stricter threshold the near-dup survives, exact dups still die
     strict = (
-        minhash_dedup(docs, threshold=0.8, hasher=hasher)
+        minhash_dedup(docs, threshold=0.8)
         .select("doc_id")
         .toPandas()["doc_id"]
         .sort_values()
@@ -179,8 +177,7 @@ def test_components_valley_graph(spark):
     assert set(rep) == {1} and sorted(rep.index) == [1, 3, 5, 8]
 
 
-@HASHERS
-def test_empty_and_null_text_hit_sentinel(spark, hasher):
+def test_empty_and_null_text_hit_sentinel(spark):
     """Empty/whitespace-only AND NULL texts all produce the max-long
     sentinel signature (no shingles at all), collapsing together."""
     df = spark.createDataFrame(
@@ -188,7 +185,7 @@ def test_empty_and_null_text_hit_sentinel(spark, hasher):
         "doc_id long, text string",
     )
     sig = (
-        minhash_signatures(df, num_hashes=8, hasher=hasher)
+        minhash_signatures(df, num_hashes=8)
         .toPandas()
         .set_index("doc_id")["minhash"]
     )
@@ -199,10 +196,9 @@ def test_empty_and_null_text_hit_sentinel(spark, hasher):
     assert list(sig[4]) != sentinel
 
 
-@HASHERS
-def test_simhash_deterministic_and_discriminative(spark, docs, hasher):
+def test_simhash_deterministic_and_discriminative(spark, docs):
     def run():
-        out = simhash(docs, hasher=hasher).select("doc_id", "simhash").toPandas()
+        out = simhash(docs).select("doc_id", "simhash").toPandas()
         return out.set_index("doc_id")["simhash"]
 
     s1, s2 = run(), run()
@@ -213,11 +209,10 @@ def test_simhash_deterministic_and_discriminative(spark, docs, hasher):
     assert ham < ham_far
 
 
-def test_decontaminate_flags_overlap_and_hash_string_agree(spark):
+def test_decontaminate_flags_overlap(spark):
     """Docs sharing an n-gram with the benchmark are flagged with the
-    right hit counts; clean docs aren't; the xxhash64 fast path agrees
-    with the string-shingle twin row-for-row; min_hits raises the bar;
-    short docs (< n tokens) match on the whole-string shingle."""
+    right hit counts; clean docs aren't; min_hits raises the bar; short
+    docs (< n tokens) match on the whole-string shingle."""
     from turboxsl_spark.operators.dedup import decontaminate
 
     bench_rows = [
@@ -241,16 +236,15 @@ def test_decontaminate_flags_overlap_and_hash_string_agree(spark):
     docs = spark.createDataFrame(docs_rows, "doc_id long, text string")
     bench = spark.createDataFrame(bench_rows, "doc_id long, text string")
 
-    for use_hashes in (True, False):
-        out = (
-            decontaminate(docs, bench, n=5, use_hashes=use_hashes)
-            .select("doc_id", "contam_hits", "contaminated")
-            .toPandas()
-            .sort_values("doc_id")
-            .reset_index(drop=True)
-        )
-        assert out["contam_hits"].tolist() == [2, 1, 0, 1, 0, 0], use_hashes
-        assert out["contaminated"].tolist() == [True, True, False, True, False, False]
+    out = (
+        decontaminate(docs, bench, n=5)
+        .select("doc_id", "contam_hits", "contaminated")
+        .toPandas()
+        .sort_values("doc_id")
+        .reset_index(drop=True)
+    )
+    assert out["contam_hits"].tolist() == [2, 1, 0, 1, 0, 0]
+    assert out["contaminated"].tolist() == [True, True, False, True, False, False]
 
     strict = (
         decontaminate(docs, bench, n=5, min_hits=2)
@@ -276,7 +270,7 @@ def test_decontaminate_broadcast_plan(spark):
     assert "BroadcastHashJoin" in plan, plan[:3000]
 
 
-# ---- md5 hash family: python replays of what the DuckDB oracle runs --
+# ---- python replays of what the DuckDB oracle runs --
 
 
 def test_minhash_md5_signature_matches_python(spark, docs):
@@ -287,7 +281,7 @@ def test_minhash_md5_signature_matches_python(spark, docs):
 
     from turboxsl_spark.operators.dedup import P48
 
-    sigs = minhash_signatures(docs, num_hashes=8, hasher="md5").collect()
+    sigs = minhash_signatures(docs, num_hashes=8).collect()
     by_id = {r["doc_id"]: r["minhash"] for r in sigs}
 
     def py_sig(text, k=8, n=3):
@@ -313,12 +307,11 @@ def test_minhash_md5_signature_matches_python(spark, docs):
         assert by_id[doc_id] == py_sig(text), doc_id
 
 
-@HASHERS
-def test_minhash_agreement_tracks_jaccard(spark, docs, hasher):
-    """Minwise quality of each slot family: identical docs agree on
+def test_minhash_agreement_tracks_jaccard(spark, docs):
+    """Minwise quality of the slot family: identical docs agree on
     every slot; the ~0.77-Jaccard near-dup agrees on roughly that
     fraction of slots; unrelated docs agree on ~none."""
-    sigs = minhash_signatures(docs, num_hashes=64, hasher=hasher).collect()
+    sigs = minhash_signatures(docs, num_hashes=64).collect()
     by_id = {r["doc_id"]: r["minhash"] for r in sigs}
     assert by_id[1] == by_id[2] == by_id[3]
     frac_near = sum(a == b for a, b in zip(by_id[1], by_id[4])) / 64
@@ -332,7 +325,7 @@ def test_simhash_md5_matches_python_bitvote(spark, docs):
 
     got = {
         r["doc_id"]: r["simhash"]
-        for r in simhash(docs, hasher="md5").select("doc_id", "simhash").collect()
+        for r in simhash(docs).select("doc_id", "simhash").collect()
     }
 
     def py_simhash(text):
@@ -364,49 +357,14 @@ def test_ngram_jaccard_null_text_is_empty_set(spark):
         "doc_id long, text string",
     )
     pairs = spark.createDataFrame([(1, 2), (1, 3)], "id_a long, id_b long")
-    for hasher in ("xxh64", "md5"):
-        j = (
-            ngram_jaccard(pairs, docs, hasher=hasher)
-            .toPandas()
-            .set_index(["id_a", "id_b"])["jaccard"]
-        )
-        assert j[(1, 2)] == 1.0, hasher
-        assert j[(1, 3)] == 0.0, hasher
+    j = ngram_jaccard(pairs, docs).toPandas().set_index(["id_a", "id_b"])["jaccard"]
+    assert j[(1, 2)] == 1.0
+    assert j[(1, 3)] == 0.0
 
 
-@pytest.mark.parametrize(
-    "entry",
-    [
-        "minhash_signatures",
-        "lsh_candidate_pairs",
-        "ngram_jaccard",
-        "minhash_dedup",
-        "simhash",
-        "fingerprint",
-    ],
-)
-def test_unknown_hasher_is_rejected(spark, docs, entry):
-    """Every ``hasher=`` entry point raises at plan time on any name
-    other than "xxh64"/"md5" instead of silently running xxh64."""
-    pairs = spark.createDataFrame([(1, 4)], "id_a long, id_b long")
-    sigs = spark.createDataFrame([(1, [1, 2, 3, 4])], "doc_id long, minhash array<bigint>")
-    calls = {
-        "minhash_signatures": lambda h: minhash_signatures(docs, hasher=h),
-        "lsh_candidate_pairs": lambda h: lsh_candidate_pairs(sigs, bands=1, hasher=h),
-        "ngram_jaccard": lambda h: ngram_jaccard(pairs, docs, hasher=h),
-        "minhash_dedup": lambda h: minhash_dedup(docs, hasher=h),
-        "simhash": lambda h: simhash(docs, hasher=h),
-        "fingerprint": lambda h: fingerprint("text", hasher=h),
-    }
-    for bad in ("md5x", "MD5", "xxhash64", ""):
-        with pytest.raises(ValueError, match="hasher must be one of"):
-            calls[entry](bad)
-
-
-@HASHERS
-def test_minhash_family_is_minwise_unbiased(spark, hasher):
-    """Statistical check that each slot family (xxh64 re-hash, md5
-    48-bit double hash) estimates Jaccard without the slot-correlation
+def test_minhash_family_is_minwise_unbiased(spark):
+    """Statistical check that the md5 48-bit double-hash slot family
+    estimates Jaccard without the slot-correlation
     bias that killed the affine family: over 24 synthetic doc pairs
     spanning J ∈ ~[0.2, 0.9], the pooled slot-agreement rate must
     track the pooled exact Jaccard within a few standard errors (24
@@ -441,7 +399,7 @@ def test_minhash_family_is_minwise_unbiased(spark, hasher):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     sigs = {
         r["doc_id"]: r["minhash"]
-        for r in minhash_signatures(df, num_hashes=32, hasher=hasher).collect()
+        for r in minhash_signatures(df, num_hashes=32).collect()
     }
     diffs = []
     agree_total = j_total = 0.0
@@ -511,10 +469,7 @@ def test_reliable_checkpoint_conf_resolution():
         with pytest.raises(ValueError, match="cluster-visible"):
             _reliable_checkpoint(df)
         assert df.calls == []
-    # ... where the best-effort form returns df untouched instead
-    df = _DF(_Spark({"spark.master": "yarn"}))
-    assert _reliable_checkpoint(df, optional=True) is df and df.calls == []
-    assert df.sparkSession.sparkContext.dir is None
+        assert df.sparkSession.sparkContext.dir is None
 
     # cluster master + conf → reliable checkpoint, dir wired once
     sp = _Spark({"spark.master": "yarn",

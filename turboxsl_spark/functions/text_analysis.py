@@ -13,6 +13,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from turboxsl_spark.functions.strings import normalize_space
+from turboxsl_spark.operators.skew import _q
 
 # minimal stopword tables per language — n-gram/stopword-hit heuristic
 _LANG_STOPWORDS = {
@@ -208,52 +209,37 @@ def repetition_metrics(words: Column) -> Column:
     )
 
 
-_HASHERS = ("xxh64", "md5")
+def _grams(tokens: str, n: int, digest: str) -> Column:
+    """Per-position word n-grams of the materialized token-array column
+    named ``tokens``, JVM-side: each gram is the n tokens joined by
+    single spaces, passed through the SQL function ``digest`` (e.g.
+    ``"md5"``; ``""`` keeps the gram string) inside the one transform
+    lambda. Fewer than n tokens → one gram of the whole joined string;
+    zero tokens → empty array (no grams, so min-hashing hits its
+    explicit sentinel path instead of sharing a hash of the empty
+    string).
 
-
-def _check_hasher(hasher: str) -> str:
-    """The one validation point for every ``hasher=`` parameter (the
-    near-dup operators in ``operators/dedup.py`` and ``fingerprint``).
-    The two families are described in that module's docstring."""
-    if hasher not in _HASHERS:
-        raise ValueError(f"hasher must be one of {_HASHERS}, got {hasher!r}")
-    return hasher
-
-
-def _gram_hashes(tokens: Column, n: int, hasher: str) -> Column:
-    """Per-position word n-gram identities of a token array, JVM-side:
-    multi-arg xxhash64 over the n tokens for ``xxh64`` (BIGINT), md5
-    hex of the space-joined n tokens for ``md5`` (STRING, the gram
-    strings any engine with md5 can rebuild).
-
-    xxh64 builds no gram strings: higher-order functions run
-    interpreted (no codegen/CSE), so per-gram string assembly dominates
-    the naive version, and hashing token tuples is ~10x cheaper
-    (collisions are negligible at 64 bits). Fewer than n tokens → one
-    hash of the whole joined string; zero tokens → empty array (no
-    grams, so min-hashing hits its explicit sentinel path).
+    One JVM-parsed SQL expression: built with the Column API, each gram
+    token costs a handful of Py4J calls of driver time per query build.
+    The gram reads its tokens with ``element_at``: higher-order
+    functions run interpreted (no codegen, no CSE), so the lambda stays
+    one flat expression with no per-gram slice array.
     """
-    md5 = _check_hasher(hasher) == "md5"
-
-    def gram(i: Column) -> Column:
-        toks = [F.element_at(tokens, i + j) for j in range(n)]
-        return F.md5(F.concat_ws(" ", *toks)) if md5 else F.xxhash64(*toks)
-
-    whole = F.concat_ws(" ", tokens)
-    return (
-        F.when(F.size(tokens) == 0, F.array().cast("array<string>" if md5 else "array<bigint>"))
-        .when(F.size(tokens) < n, F.array(F.md5(whole) if md5 else F.xxhash64(whole)))
-        .otherwise(F.transform(F.sequence(F.lit(1), F.size(tokens) - (n - 1)), gram))
+    t = _q(tokens)
+    toks = ", ".join(f"element_at({t}, i + {j})" for j in range(n))
+    return F.expr(
+        f"CASE WHEN size({t}) = 0 THEN CAST(array() AS ARRAY<STRING>) "
+        f"WHEN size({t}) < {n} THEN array({digest}(concat_ws(' ', {t}))) "
+        f"ELSE transform(sequence(1, size({t}) - {n - 1}), "
+        f"i -> {digest}(concat_ws(' ', {toks}))) END"
     )
 
 
-def fingerprint(c: Column | str, tokenized: bool = False, hasher: str = "xxh64") -> Column:
-    """Order-sensitive document fingerprint: a hash chain folded over
-    the word 4-gram hashes of ``_gram_hashes`` (rolling-hash-style
-    content signature). Map-only, zero shuffle.
-
-    ``xxh64`` returns a BIGINT: fold ``acc → xxhash64(acc, g)`` from 0.
-    ``md5`` returns the 32-hex-char digest STRING:
+def fingerprint(words: str) -> Column:
+    """Order-sensitive document fingerprint of the materialized
+    ``words_of`` column named ``words``: an md5 hash chain folded over
+    its word 4-gram digests (rolling-hash style content signature),
+    returned as the 32-hex-char digest STRING. Map-only, zero shuffle.
 
         fp = fold over grams g of  acc → md5(acc || ':' || g),
         acc0 = '',  g_i = md5(w_i ' ' w_i+1 ' ' w_i+2 ' ' w_i+3)
@@ -262,14 +248,11 @@ def fingerprint(c: Column | str, tokenized: bool = False, hasher: str = "xxh64")
     which any engine replays — DuckDB:
     ``list_reduce(list_prepend('', grams), (a, g) -> md5(a||':'||g))``.
 
-    IMPORTANT for large inputs: pass a pre-materialized ``words_of``
-    column with ``tokenized=True`` — an inlined split expression is
-    re-evaluated per element access inside the interpreted transform
-    lambda (O(words²) regex work otherwise).
+    The words are a bound column (e.g.
+    ``.withColumn("w", words_of("text"))``) because an inlined split
+    expression is re-evaluated per element access inside the
+    interpreted transform lambda (O(words²) regex work otherwise).
     """
-    c = F.col(c) if isinstance(c, str) else c
-    words = c if tokenized else _word_set(c)
-    grams = _gram_hashes(words, 4, hasher)
-    if hasher == "md5":
-        return F.aggregate(grams, F.lit(""), lambda acc, g: F.md5(F.concat(acc, F.lit(":"), g)))
-    return F.aggregate(grams, F.lit(0).cast("long"), lambda acc, h: F.xxhash64(acc, h))
+    return F.aggregate(
+        _grams(words, 4, "md5"), F.lit(""), lambda acc, g: F.md5(F.concat(acc, F.lit(":"), g))
+    )

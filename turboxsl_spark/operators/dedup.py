@@ -7,34 +7,27 @@ functions + higher-order array functions); SimHash uses a vectorized
 numpy pandas-UDF because 64-bit bit-voting has no array-function
 equivalent that stays readable.
 
-Hash families. ``minhash_signatures``, ``lsh_candidate_pairs``,
-``ngram_jaccard``, ``minhash_dedup``, ``simhash`` and
-``text_analysis.fingerprint`` take ``hasher=``, validated in one place
-(``text_analysis._check_hasher``); the gram identities of both
-families come from one primitive (``text_analysis._gram_hashes``).
-Both keep the same plan shape (explode → fused min aggs → banded
-equi-self-join → candidate-only verify → CC):
+Hash family. Every near-dup hash derives from md5 hex digests — the
+reference's own digest (``ltr:md5_hex``) — so ANY engine that can md5
+(the DuckDB correctness oracle, pandas, a future port) reproduces
+signatures, LSH buckets, Jaccard sets, SimHash and fingerprints
+BIT-EXACTLY. Word n-grams come from one body
+(``text_analysis._grams``): literal strings for ``shingles``, md5
+digests for the signature, verify and fingerprint stages.
 
-- ``"xxh64"`` (default) is the fast path: multi-arg xxhash64 over
-  token tuples, no digest strings. MinHash slot i re-hashes a gram
-  hash with seed 42+i, a fully-mixing minwise family.
-- ``"md5"`` is for oracle replay: every hash derives from md5 hex
-  digests, so ANY engine that can md5 (the DuckDB correctness oracle,
-  pandas, a future port) reproduces signatures, LSH buckets, Jaccard
-  sets, SimHash and fingerprints BIT-EXACTLY, at 1.4-2.2x the xxh64
-  query time (sf0.1, 4 cores). MinHash slots use 48-bit enhanced double hashing (Kirsch &
-  Mitzenmacher): slot_j(s) = (h1(s) + j*h2(s) + j**2) mod P48, with
-  h1/h2 the first/second 12 hex chars of md5(gram) — one digest per
-  gram, NOT k. An affine family over one hash, (a*h+b) mod M, is
-  piecewise-monotone: its slots correlate, and real shingle sets
-  showed agreement far below the Jaccard expectation. h1 and h2 are
-  INDEPENDENT 48-bit digests, so these slots decorrelate and track
-  Jaccard as closely as the xxh family (property-tested for both in
-  tests/test_dedup.py). The max slot h1 + 63*h2 + 63**2 < 2**54 stays
-  inside BIGINT in both engines: no overflow, no engine-specific wrap.
+MinHash slots use 48-bit enhanced double hashing (Kirsch &
+Mitzenmacher): slot_j(s) = (h1(s) + j*h2(s) + j**2) mod P48, with
+h1/h2 the first/second 12 hex chars of md5(gram) — one digest per
+gram, NOT k. An affine family over one hash, (a*h+b) mod M, is
+piecewise-monotone: its slots correlate, and real shingle sets showed
+agreement far below the Jaccard expectation. h1 and h2 are INDEPENDENT
+48-bit digests, so these slots decorrelate and track Jaccard
+(property-tested in tests/test_dedup.py). The max slot
+h1 + 63*h2 + 63**2 < 2**54 stays inside BIGINT in both engines: no
+overflow, no engine-specific wrap.
 
 Docs with no grams (empty, whitespace-only or NULL text) share the
-max-long sentinel signature in both families.
+max-long sentinel signature.
 
 Scale notes:
 - shingling/minhash are per-row map work — no shuffle, fully parallel;
@@ -52,7 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from turboxsl_spark.functions.strings import normalize_space
-from turboxsl_spark.functions.text_analysis import _check_hasher, _gram_hashes
+from turboxsl_spark.functions.text_analysis import _grams
 
 from .rank import _reliable_checkpoint
 from .skew import _q
@@ -64,31 +57,16 @@ def tokenize(c: Column | str) -> Column:
     return F.array_remove(F.split(F.lower(normalize_space(c)), " "), "")
 
 
-def shingles(tokens: Column, n: int = 3) -> Column:
-    """Word n-gram shingles via sequence+transform — JVM-side sliding window.
-
-    Zero tokens → empty array (an empty document has NO shingles, so
-    downstream min-hashing hits its explicit sentinel path instead of
-    sharing an accidental hash-of-empty-string shingle)."""
-    return (
-        F.when(F.size(tokens) == 0, F.array().cast("array<string>"))
-        .when(
-            F.size(tokens) < n,
-            # short docs: the whole token string is the single shingle
-            F.array(F.concat_ws(" ", tokens)),
-        )
-        .otherwise(
-            F.transform(
-                F.sequence(F.lit(1), F.size(tokens) - (n - 1)),
-                lambda i: F.concat_ws(" ", F.slice(tokens, i, n)),
-            )
-        )
-    )
+def shingles(tokens: str, n: int = 3) -> Column:
+    """Word n-gram shingle strings of the materialized token-array
+    column named ``tokens``, JVM-side (``_grams`` with no digest): zero
+    tokens → no shingles, fewer than n → the whole token string as the
+    one shingle."""
+    return _grams(tokens, n, "")
 
 
 P48 = (1 << 48) - 59  # largest prime below 2**48 (md5 slot modulus)
 _SIG_SENTINEL = (1 << 63) - 1  # signature of a doc with no grams
-_MINHASH_SEED = 42  # xxh64 slot i re-hashes with seed 42+i
 
 
 def _hex_long(digest: Column, start: int, n: int) -> Column:
@@ -133,7 +111,6 @@ def minhash_signatures(
     shingle_n: int = 3,
     out: str = "minhash",
     id_col: str = "doc_id",
-    hasher: str = "xxh64",
 ) -> DataFrame:
     """k-slot MinHash over word shingles, all JVM-side; returns
     ``(id_col, out)`` rows (the LSH banding needs nothing else, so the
@@ -144,7 +121,7 @@ def minhash_signatures(
     rows, one hash-aggregate with k fused min() expressions — all
     inside whole-stage codegen. (Array-lambda variants run
     interpreted, with no common-subexpression elimination, and
-    profiled ~10x slower.) The exploded exchange carries one or two
+    profiled ~10x slower.) The exploded exchange carries two
     values per shingle and partial min() combines map-side, so the
     shuffle stays tiny even when documents are megabytes. Docs with no
     shingles share the sentinel signature, so ALL empty docs collapse
@@ -153,36 +130,24 @@ def minhash_signatures(
     # tokenize ONCE into a bound column: expressions inlined into an
     # interpreted lambda re-evaluate per element access (the regex split
     # would otherwise run 3x per shingle — profiled 6x slower)
-    exploded = df.select(F.col(id_col), tokenize(text_col).alias("_toks")).select(
+    toks = df.select(F.col(id_col), tokenize(text_col).alias("_toks"))
+    # one digest per shingle, split into two 48-bit halves; the
+    # no-shingle row from explode_outer gives NULL halves → NULL slots
+    # → min skips them → coalesce to the sentinel below
+    exploded = toks.select(
+        F.col(id_col), F.explode_outer(_grams("_toks", shingle_n, "md5")).alias("_h")
+    ).select(
         F.col(id_col),
-        F.explode_outer(_gram_hashes(F.col("_toks"), shingle_n, hasher)).alias("_h"),
+        _hex_long(F.col("_h"), 1, 12).alias("_h1"),
+        _hex_long(F.col("_h"), 13, 12).alias("_h2"),
     )
-    if hasher == "md5":
-        # one digest per shingle, split into two 48-bit halves; the
-        # no-shingle row from explode_outer gives NULL halves → NULL
-        # slots → min skips them → coalesce to the sentinel below
-        exploded = exploded.select(
-            F.col(id_col),
-            _hex_long(F.col("_h"), 1, 12).alias("_h1"),
-            _hex_long(F.col("_h"), 13, 12).alias("_h2"),
-        )
-
-    def slot(i: int) -> str:
-        if hasher == "md5":
-            return f"(_h1 + {i}L * _h2 + {i * i}L) % {P48}L"
-        # xxhash64 silently skips NULL args (never returns NULL), so the
-        # no-shingle row must be masked explicitly or empty/NULL docs
-        # would get a real-looking signature of hash(seed). CAST pins
-        # the seed literal to INT (xxhash64 is type-sensitive).
-        return (
-            "CASE WHEN _h IS NOT NULL "
-            f"THEN xxhash64(_h, CAST({_MINHASH_SEED + i} AS INT)) END"
-        )
-
     # The k agg/array expressions are JVM-parsed SQL strings: building
     # 64 Column-API trees cost ~1.2s of driver time per call (guide §1
     # — construction is charged to the query by the bench timer).
-    aggs = [F.expr(f"min({slot(i)})").alias(f"_m{i}") for i in range(num_hashes)]
+    aggs = [
+        F.expr(f"min((_h1 + {i}L * _h2 + {i * i}L) % {P48}L)").alias(f"_m{i}")
+        for i in range(num_hashes)
+    ]
     sig = F.expr(
         "array("
         + ", ".join(f"coalesce(_m{i}, {_SIG_SENTINEL}L)" for i in range(num_hashes))
@@ -197,34 +162,24 @@ def lsh_candidate_pairs(
     sig_col: str = "minhash",
     bands: int = 16,
     rows_per_band: int = 4,
-    hasher: str = "xxh64",
 ) -> DataFrame:
     """Band the signatures, bucket-join within (band, bucket_hash).
 
     Returns distinct candidate pairs (id_a < id_b). The self-join is an
-    equi-join on the bucket key — a single shuffle, no n² blowup.
-
-    ``hasher="md5"`` buckets on md5 of the comma-joined band slice
-    (engine-portable: DuckDB ``md5(array_to_string(list_slice(...)))``)
-    instead of the faster JVM array xxhash64.
+    equi-join on the bucket key — a single shuffle, no n² blowup. The
+    bucket is the md5 of the comma-joined band slice (engine-portable:
+    DuckDB ``md5(array_to_string(list_slice(...)))``).
 
     The banded explode is ONE JVM-parsed SQL expression (identical
     tree to the per-band Column-API build; construction cost — see
     ``minhash_signatures``).
     """
-    _check_hasher(hasher)
     sc = _q(sig_col)
-
-    def bucket_sql(b: int) -> str:
-        sl = f"slice({sc}, {b * rows_per_band + 1}, {rows_per_band})"
-        if hasher == "md5":
-            return f"md5(concat_ws(',', CAST({sl} AS ARRAY<STRING>)))"
-        return f"xxhash64({sl})"
-
     bb = F.expr(
         "explode(array("
         + ", ".join(
-            f"struct({b} AS band, {bucket_sql(b)} AS bucket)"
+            f"struct({b} AS band, md5(concat_ws(',', CAST(slice({sc}, "
+            f"{b * rows_per_band + 1}, {rows_per_band}) AS ARRAY<STRING>))) AS bucket)"
             for b in range(bands)
         )
         + "))"
@@ -252,15 +207,12 @@ def ngram_jaccard(
     id_col: str = "doc_id",
     text_col: str = "text",
     shingle_n: int = 3,
-    hasher: str = "xxh64",
 ) -> DataFrame:
     """Exact n-gram Jaccard for candidate pairs (the verify stage).
 
-    Computed over the shingle identities of ``_gram_hashes``: 64-bit
-    hashes for xxh64 (no shingle strings built, long arrays intersect
-    ~10x faster; 64-bit collisions are negligible), md5 hex digests
-    for md5 (what the DuckDB oracle reproduces). Both give the same
-    Jaccard up to vanishing digest collisions.
+    Computed over the md5 digests of the shingles (``_grams``), what
+    the DuckDB oracle reproduces: the same Jaccard as over the shingle
+    strings up to vanishing digest collisions.
 
     Every row of ``docs`` is tokenized and shingled, so a caller
     whose ``pairs`` are materialized passes only the docs they name
@@ -275,7 +227,7 @@ def ngram_jaccard(
         F.coalesce(tokenize(text_col), F.array().cast("array<string>")).alias("_toks"),
     ).select(
         "_jid",
-        F.array_distinct(_gram_hashes(F.col("_toks"), shingle_n, hasher)).alias("_sh"),
+        F.array_distinct(_grams("_toks", shingle_n, "md5")).alias("_sh"),
     )
     out = (
         pairs.join(sh.withColumnRenamed("_jid", "id_a").withColumnRenamed("_sh", "sh_a"), "id_a")
@@ -365,13 +317,12 @@ def minhash_dedup(
     bands: int = 16,
     shingle_n: int = 3,
     cc_max_rounds: int = 16,
-    hasher: str = "xxh64",
 ) -> DataFrame:
     """Full near-dup pipeline: sign → LSH buckets → Jaccard verify →
     connected components (label-prop + pointer-jump to fixpoint) →
-    keep the min-id representative of each component. ``hasher``
-    picks the family for all three hashing stages; with ``"md5"`` the
-    driver's DuckDB oracle replays the whole pipeline end-to-end.
+    keep the min-id representative of each component. All three
+    hashing stages are md5-derived, so the DuckDB oracle
+    replays the whole pipeline end-to-end.
 
     The candidate pairs are checkpointed, and the verify stage
     shingles ONLY the docs they name: ``df`` is semi-joined to the
@@ -382,13 +333,9 @@ def minhash_dedup(
     The id scan is two more consumers of ``pairs``, which is why it
     runs only over the checkpoint (over a lazy plan each consumer
     would re-run the full LSH pipeline)."""
-    sigs = minhash_signatures(
-        df, text_col, num_hashes, shingle_n, id_col=id_col, hasher=hasher
-    )
+    sigs = minhash_signatures(df, text_col, num_hashes, shingle_n, id_col=id_col)
     pairs = _reliable_checkpoint(
-        lsh_candidate_pairs(
-            sigs, id_col, "minhash", bands, num_hashes // bands, hasher=hasher
-        )
+        lsh_candidate_pairs(sigs, id_col, "minhash", bands, num_hashes // bands)
     )
     ids = (
         pairs.select(F.col("id_a").alias("_jid"))
@@ -398,9 +345,9 @@ def minhash_dedup(
     # no broadcast hint: AQE broadcasts the id set when it is small
     # and falls back to a shuffled semi-join when it is not
     cand = df.join(ids, df[id_col] == ids["_jid"], "left_semi")
-    dupes = ngram_jaccard(
-        pairs, cand, id_col, text_col, shingle_n, hasher=hasher
-    ).where(F.col("jaccard") >= threshold)
+    dupes = ngram_jaccard(pairs, cand, id_col, text_col, shingle_n).where(
+        F.col("jaccard") >= threshold
+    )
     comp = duplicate_components(dupes, max_rounds=cc_max_rounds)
     losers = comp.where(F.col("rep") < F.col("node")).select(
         F.col("node").alias(id_col)
@@ -429,22 +376,18 @@ def _bitvote_udf(token_hashes: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-def simhash(
-    df: DataFrame, text_col: str = "text", out: str = "simhash", hasher: str = "xxh64"
-) -> DataFrame:
+def simhash(df: DataFrame, text_col: str = "text", out: str = "simhash") -> DataFrame:
     """Deterministic SimHash: one JVM hash per token, numpy bit-voting.
 
-    xxh64 hashes each token with xxhash64 (64-bit signature); md5 with
-    ``md5_hash60``, so the signature is 60-bit (bits 60-63 always zero)
-    and the DuckDB oracle restates the vote as 60 conditional SUMs per
-    doc — bit-exact.
+    Each token hashes with ``md5_hash60``, so the signature is 60-bit
+    (bits 60-63 always zero) and the DuckDB oracle restates the vote as
+    60 conditional SUMs per doc — bit-exact.
 
     Tokens are materialized into a bound column first — an inlined
     tokenizer expression would re-run the regex split per element
     access inside the interpreted transform lambda."""
-    token_hash = md5_hash60 if _check_hasher(hasher) == "md5" else F.xxhash64
     df = df.withColumn("_sh_toks", tokenize(text_col))
-    hashes = F.transform(F.col("_sh_toks"), lambda t: token_hash(t))
+    hashes = F.transform(F.col("_sh_toks"), md5_hash60)
     return df.withColumn(out, _bitvote_udf(hashes)).drop("_sh_toks")
 
 
@@ -566,15 +509,15 @@ def decontaminate(
     bench_text_col: str = "text",
     n: int = 8,
     min_hits: int = 1,
-    use_hashes: bool = True,
 ) -> DataFrame:
     """Flag training documents contaminated by an eval/benchmark set.
 
     Standard word-n-gram decontamination (the published recipe for LLM
     corpus builds): a document is contaminated when at least
     ``min_hits`` of its n-gram shingle OCCURRENCES appear anywhere in
-    the benchmark's shingle set. Returns ``docs`` plus ``contam_hits``
-    (long) and ``contaminated`` (boolean).
+    the benchmark's shingle set. Shingles match as literal strings
+    (``shingles``), the form the DuckDB oracle restates. Returns
+    ``docs`` plus ``contam_hits`` (long) and ``contaminated`` (boolean).
 
     Scale shape: the benchmark side reduces to DISTINCT shingle
     identities and is BROADCAST (eval sets are orders of magnitude
@@ -584,15 +527,7 @@ def decontaminate(
     a left join of the hit counts back onto the full doc rows — hits
     exist only for contaminated docs, so AQE typically broadcasts that
     side too. No all-pairs operation anywhere.
-
-    ``use_hashes=True`` matches shingles by 64-bit xxhash64 of the
-    token tuple (``_gram_hashes`` with xxh64 — no string assembly,
-    negligible collision rate); ``False`` uses the literal shingle
-    strings (the SQL-expressible form the driver oracle checks).
     """
-
-    def shingler(toks: Column) -> Column:
-        return _gram_hashes(toks, n, "xxh64") if use_hashes else shingles(toks, n)
 
     # materialize tokens into a bound column BEFORE the shingle
     # higher-order lambda: an inlined tokenize() re-evaluates its
@@ -600,12 +535,12 @@ def decontaminate(
     # (measured 8.4s → ~1s for the sf0.1 doc side)
     bench_sh = (
         benchmark.select(tokenize(F.col(bench_text_col)).alias("_toks"))
-        .select(F.explode(shingler(F.col("_toks"))).alias("_sh"))
+        .select(F.explode(shingles("_toks", n)).alias("_sh"))
         .distinct()
     )
     doc_sh = docs.select(
         F.col(id_col), tokenize(F.col(text_col)).alias("_toks")
-    ).select(F.col(id_col), F.explode(shingler(F.col("_toks"))).alias("_sh"))
+    ).select(F.col(id_col), F.explode(shingles("_toks", n)).alias("_sh"))
     hits = (
         doc_sh.join(F.broadcast(bench_sh), "_sh")
         .groupBy(id_col)

@@ -79,7 +79,7 @@ def _in_process_master(master: str) -> bool:
     return re.match(r"local(\[|$)", master) is not None
 
 
-def _reliable_checkpoint(df: DataFrame, optional: bool = False) -> DataFrame:
+def _reliable_checkpoint(df: DataFrame) -> DataFrame:
     """Materialize ``df`` eagerly and truncate its lineage in a way that
     survives executor loss.
 
@@ -92,9 +92,7 @@ def _reliable_checkpoint(df: DataFrame, optional: bool = False) -> DataFrame:
     (``spark.turboxsl.scratchDir``), wiring
     ``sparkContext.setCheckpointDir`` on first use. No conf and no
     checkpoint dir on a cluster → raise at build time rather than
-    truncate lineage against volatile storage; ``optional=True`` returns
-    ``df`` unmaterialized instead (recompute per consumer), for callers
-    where materializing is only an optimization.
+    truncate lineage against volatile storage.
     """
     spark = df.sparkSession
     master = spark.conf.get("spark.master", "")
@@ -104,8 +102,6 @@ def _reliable_checkpoint(df: DataFrame, optional: bool = False) -> DataFrame:
     if sc.getCheckpointDir() is None:
         base = spark.conf.get(SCRATCH_CONF, None)
         if not base:
-            if optional:
-                return df
             raise ValueError(
                 f"checkpoint on master {master!r}: localCheckpoint is not "
                 f"fault-tolerant off local[*] — set {SCRATCH_CONF} to a "
